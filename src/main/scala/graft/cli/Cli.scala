@@ -1,7 +1,12 @@
 package graft.cli
 
+import java.nio.file.{Files, Paths}
+
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkEntry
 import graft.decks._
@@ -47,6 +52,12 @@ object CliArgs {
     val s = session(name)
     try f(s) finally s.stop()
   }
+
+  /** A small text file's lines, with the handle closed on return (the CLIs
+    * run inside a long-lived cron service, where a leaked handle per run
+    * adds up). */
+  def readLines(path: String): Seq[String] =
+    Using.resource(scala.io.Source.fromFile(path))(_.getLines().toList)
 
   def stepMinutes(model: String): Int =
     if (model == "flo2d_250" || model.startsWith("flo2d_10")) 5 else 15
@@ -201,8 +212,8 @@ object GenChan {
       .filter(col("time").between(s, s + expr("INTERVAL 2 HOURS")))
       .groupBy(col("id").as("wl_id"))
       .agg(expr("min_by(value, time)").cast("string").as("wl"))
-    val head = scala.io.Source.fromFile(a("head")).getLines().toSeq
-    val tail = scala.io.Source.fromFile(a("tail")).getLines().toSeq
+    val head = CliArgs.readLines(a("head"))
+    val tail = CliArgs.readLines(a("tail"))
     val deck = ChanDeck.lines(spark, a.getOrElse("m", "flo2d_150_v2"),
       pairs, conditions, firstWl, head, tail)
     CliArgs.writeDeck(deck, s"${a("d")}/CHAN.DAT", "CHAN", a("s"))
@@ -211,7 +222,14 @@ object GenChan {
 
 /** HYCHAN/TIMDEP → forecast-store extraction (reference:
   * output/extract_water_level.py, output/extract_discharge.py via
-  * `--value-index 4`). */
+  * `--value-index 4`).
+  *
+  * Evaluate-once contract: the enriched batch (parsed, densified,
+  * cell-mapped, series ids attached) is persisted before its first use and
+  * feeds the forecast upsert, the station-dimension check and the run-table
+  * aggregate from that one evaluation. It is released in a `finally` when
+  * the bookkeeping returns or throws, so a cron service running one
+  * extraction after another keeps no batch cached between runs. */
 object ExtractForecast {
   def main(args: Array[String]): Unit =
     CliArgs.withSession("extract_forecast")(run(_, CliArgs.parse(args)))
@@ -237,43 +255,48 @@ object ExtractForecast {
     }
     val enriched = ExtractPipeline.withSeriesIds(
       all, a.getOrElse("m", "flo2d_150_v2"), a.getOrElse("sim-tag", "daily_run"), fgt)
-    ExtractPipeline.upsertForecast(enriched, a("url"), a.getOrElse("table", "data"),
-      if (a.get("dialect").contains("mysql")) JdbcUpsertSink.MySqlDialect
-      else JdbcUpsertSink.UpdateInsertDialect)
-    // run bookkeeping: with --station-type the first extraction registers the
-    // reference's full run row (station/source/unit/variable ids resolved
-    // from the dim store); without it, the simplified 3-column run table
-    a.get("run-table").foreach { runTable =>
-      a.get("station-type") match {
-        case Some(stType) =>
-          val stations = graft.io.FcstDims.outputStations(
-            a("url"), stType, a.getOrElse("station-table", "station"))
-          val withSt = ExtractPipeline.withStationDims(enriched, stations)
-          val dims = graft.io.FcstDims.RunDimIds(
-            a.getOrElse("sim-tag", "daily_run"),
-            a.getOrElse("source-id", "0").toLong,
-            a.getOrElse("unit-id", "0").toLong,
-            a.getOrElse("variable-id", "0").toLong)
-          ExtractPipeline.updateRunTableFull(withSt, a("url"), runTable, dims)
-        case None =>
-          ExtractPipeline.updateRunTable(enriched, a("url"), runTable)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      ExtractPipeline.upsertForecast(enriched, a("url"), a.getOrElse("table", "data"),
+        if (a.get("dialect").contains("mysql")) JdbcUpsertSink.MySqlDialect
+        else JdbcUpsertSink.UpdateInsertDialect)
+      // run bookkeeping: with --station-type the first extraction registers the
+      // reference's full run row (station/source/unit/variable ids resolved
+      // from the dim store); without it, the simplified 3-column run table
+      a.get("run-table").foreach { runTable =>
+        a.get("station-type") match {
+          case Some(stType) =>
+            val stations = graft.io.FcstDims.outputStations(
+              a("url"), stType, a.getOrElse("station-table", "station"))
+            val withSt = ExtractPipeline.withStationDims(enriched, stations)
+            val dims = graft.io.FcstDims.RunDimIds(
+              a.getOrElse("sim-tag", "daily_run"),
+              a.getOrElse("source-id", "0").toLong,
+              a.getOrElse("unit-id", "0").toLong,
+              a.getOrElse("variable-id", "0").toLong)
+            ExtractPipeline.updateRunTableFull(withSt, a("url"), runTable, dims)
+          case None =>
+            ExtractPipeline.updateRunTable(enriched, a("url"), runTable)
+        }
       }
-    }
+    } finally enriched.unpersist()
     // K5: event-sim template archive from the deck dir's file list, then
     // K3: one run_metadata row carrying run_meta.json + the blob
     // (reference: output/extract_water_level.py:339-341,589-591)
     val blob = a.get("archive-dir").map { deckDir =>
       val names = a.get("archive-list")
-        .map(p => scala.io.Source.fromFile(p).getLines().map(_.trim).filter(_.nonEmpty).toSeq)
+        .map(p => CliArgs.readLines(p).map(_.trim).filter(_.nonEmpty))
         .getOrElse(new java.io.File(deckDir).list().filter(_.endsWith(".DAT")).toSeq.sorted)
-      val tmp = java.nio.file.Files.createTempFile("template", ".tar.gz").toString
-      graft.io.TarGzArchive.createFromDir(tmp, deckDir, names)
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(tmp))
+      val tmp = Files.createTempFile("template", ".tar.gz")
+      try {
+        graft.io.TarGzArchive.createFromDir(tmp.toString, deckDir, names)
+        Files.readAllBytes(tmp)
+      } finally Files.deleteIfExists(tmp)
     }
     a.get("meta-table").foreach { metaTable =>
       val metaJson = a.get("run-meta")
-        .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-        .map(p => java.nio.file.Files.readString(java.nio.file.Paths.get(p)))
+        .filter(p => Files.exists(Paths.get(p)))
+        .map(p => Files.readString(Paths.get(p)))
         .getOrElse("{}")
       JdbcUpsertSink.insertRunMetadata(a("url"), metaTable,
         a.getOrElse("source-id", "0").toLong, a.getOrElse("variable-id", "0").toLong,

@@ -14,6 +14,14 @@ import graft.ops.TimeSeriesOps
   * (K2). Mirrors output/extract_water_level.py:374-523 and
   * output/extract_discharge.py end to end, minus the per-element Python loop:
   * one distributed plan handles every element.
+  *
+  * Evaluate-once contract: [[upsertForecast]], [[withStationDims]] and
+  * [[updateRunTable]] / [[updateRunTableFull]] each run one action over the
+  * frame they are given and cache nothing themselves. A caller that feeds
+  * one batch to several of them persists it first and releases it when the
+  * last one returns or throws — [[graft.cli.ExtractForecast]] does, so the
+  * parse, densify and cell-map joins run once per extraction, not once per
+  * consumer.
   */
 object ExtractPipeline {
 

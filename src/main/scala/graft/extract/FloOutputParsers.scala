@@ -111,14 +111,22 @@ object FloOutputParsers {
   /** Densify a parsed TIMDEP frame: every (block, wanted element) pair gets a
     * row, absent readings filled with `missing` = −999 (reference:
     * output/extract_water_level.py:560-566). `elements` is a one-column
-    * DataFrame of wanted element ids (broadcast — it is a station map). */
+    * DataFrame of wanted element ids (broadcast — it is a station map).
+    *
+    * The densify join's left side only ever holds wanted elements, so
+    * `parsed` is semi-joined to the broadcast station set first: only
+    * station rows reach the join's shuffle, not every cell of the report
+    * (TIMDEP lists the whole grid). Blocks still come from all of
+    * `parsed`, so a block without any station reading still densifies. */
   def fillMissing(parsed: DataFrame, elements: DataFrame,
       missing: Double = graft.model.Sentinels.MissingOutput): DataFrame = {
     val elemCol = elements.columns.head
+    val wanted = broadcast(elements.select(col(elemCol).as("element")).distinct())
     val blocks = parsed.select("file", "step_hours").distinct()
     blocks
-      .crossJoin(broadcast(elements.select(col(elemCol).as("element")).distinct()))
-      .join(parsed, Seq("file", "element", "step_hours"), "left")
+      .crossJoin(wanted)
+      .join(parsed.join(wanted, Seq("element"), "left_semi"),
+        Seq("file", "element", "step_hours"), "left")
       .na.fill(missing, Seq("value"))
   }
 

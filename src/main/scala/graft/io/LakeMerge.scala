@@ -72,9 +72,9 @@ import org.apache.spark.sql.functions._
   * converge to the same table a JDBC upsert would produce
   * (LakeMergeSpec proves equality against [[JdbcUpsertSink]] on the same
   * batches). `updates` must be unique by key with no NULL key values and
-  * a partition column agreeing with its derivation — all checked with
-  * batch-sized aggregates over an entry `localCheckpoint` (ONE
-  * evaluation of the batch lineage for the whole merge) unless
+  * a partition column agreeing with its derivation — all checked by ONE
+  * batch-sized aggregate over an entry `localCheckpoint` (one evaluation
+  * of the batch lineage for the whole merge, one validation pass) unless
   * `requireUniqueKeys = false`: duplicate keys in ONE batch have no
   * defined winner in any upsert dialect — MySQL takes statement order,
   * which a distributed write cannot reproduce — and NULL keys never
@@ -1324,61 +1324,76 @@ object LakeMerge {
         s"lake columns ${lakeCols.mkString(",")} (pass schemaEvolution = " +
         "true to add new columns)")
 
-    // evaluate the batch ONCE: the validations, counts, anti-join and
-    // staging write below are ~6 actions, and an un-cached `updates`
-    // (typically the tail of an extraction pipeline) would re-run its
-    // full lineage for each — the merge's cost must scale with the date
-    // span, not 6× the batch's production cost (second-review finding).
+    // evaluate the batch ONCE: the validation pass, the anti-join, the
+    // staging write and (with capture on) the change feed all read this
+    // checkpoint — an un-cached `updates` (typically the tail of an
+    // extraction pipeline) would re-run its full lineage for each, and the
+    // merge's cost must scale with the date span, not with the batch's
+    // production cost times its readers (second-review finding).
     // Batch-sized by contract, released before return.
     val upd = updates.localCheckpoint(true)
     try {
 
-    if (requireUniqueKeys) {
-      // NULL key columns break exactly-once-by-key at its root: the
-      // anti-join's EqualTo never matches NULL, so a re-applied batch
-      // would INSERT its null-key rows again every run (the JDBC sink's
-      // PRIMARY KEY rejects them loudly; so do we) — and a NULL timeCol
-      // would also fail the derivation check OPEN (=!= on NULL is NULL,
-      // filter drops it). Second-review finding.
-      val nullKeys = upd.filter(
-        keyCols.map(col(_).isNull).reduce(_ || _)).limit(1).count()
-      require(nullKeys == 0L,
-        s"updates contain NULL (${keyCols.mkString(", ")}) key values — " +
-          "no upsert key may be NULL (re-applying the batch would " +
-          "duplicate such rows: NULL never equi-joins)")
-      val dup = upd.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__c")).filter(col("__c") > 1).limit(1).count()
-      require(dup == 0L,
-        s"updates contain duplicate (${keyCols.mkString(", ")}) keys — " +
-          "no upsert dialect defines a winner inside one batch")
-      // the partition value must agree with the layout's derivation: a
-      // mis-derived part_date (different session timezone, hand-set)
-      // would prune to the WRONG partition, miss the existing key in the
-      // anti-join and silently INSERT a duplicate — breaking
-      // exactly-once-by-key (review-pass finding). One batch-sized
-      // scan; custom layouts whose partition column is not
-      // date_format(timeCol) pass requireUniqueKeys = false and own
-      // these checks themselves.
-      val drifted = upd.filter(
-        col(partitionCol).cast("string") =!=
-          date_format(col(timeCol), "yyyy-MM-dd")).limit(1).count()
-      require(drifted == 0L,
-        s"updates carry a $partitionCol that disagrees with " +
-          s"date_format($timeCol) — a mis-derived partition would upsert " +
-          "into the wrong directory and duplicate its key")
-    }
-
-    // 1. PRUNE — the affected partitions are the updates' date span.
-    // A NULL partition value must fail HERE, before anything is written:
-    // the staging write would name it __HIVE_DEFAULT_PARTITION__ while
-    // the swap loop looks for 'part_date=null', throwing only after
-    // other partitions already swapped (review-pass finding)
-    val affectedRaw = upd.select(col(partitionCol).cast("string"))
-      .distinct().collect().map(r => Option(r.getString(0))).toSeq
-    require(affectedRaw.forall(_.isDefined),
+    // ONE validation pass: a per-key aggregate folded into a single row
+    // answers every batch check, the affected-partition list and the row
+    // count — one action over the checkpoint instead of one per check
+    // (FuseME's fusion of operators that read the same input). The
+    // refusals below keep their messages and order:
+    //  - NULL key columns break exactly-once-by-key at its root: the
+    //    anti-join's EqualTo never matches NULL, so a re-applied batch
+    //    would INSERT its null-key rows again every run (the JDBC sink's
+    //    PRIMARY KEY rejects them loudly; so do we) — and a NULL timeCol
+    //    would also pass the derivation check (=!= on NULL is NULL, which
+    //    bool_or skips). Second-review finding.
+    //  - duplicate keys have no defined winner (see the object scaladoc).
+    //  - the partition value must agree with the layout's derivation: a
+    //    mis-derived part_date (different session timezone, hand-set)
+    //    would prune to the WRONG partition, miss the existing key in the
+    //    anti-join and silently INSERT a duplicate (review-pass finding).
+    //    Custom layouts whose partition column is not date_format(timeCol)
+    //    pass requireUniqueKeys = false and own these checks themselves;
+    //    their pass skips the per-key grouping.
+    //  - a NULL partition value fails whatever requireUniqueKeys says, and
+    //    before anything is written: the staging write would name it
+    //    __HIVE_DEFAULT_PARTITION__ while the swap loop looks for
+    //    'part_date=null', throwing only after other partitions already
+    //    swapped (review-pass finding).
+    val partStr = col(partitionCol).cast("string")
+    val perKey =
+      if (requireUniqueKeys)
+        upd.groupBy(keyCols.map(col): _*).agg(
+            count(lit(1)).as("__n"),
+            bool_or(partStr =!= date_format(col(timeCol), "yyyy-MM-dd")).as("__drift"),
+            collect_set(partStr).as("__parts"),
+            bool_or(partStr.isNull).as("__pnull"))
+          .withColumn("__knull", keyCols.map(col(_).isNull).reduce(_ || _))
+      else
+        upd.select(lit(1L).as("__n"), lit(false).as("__drift"),
+          array(partStr).as("__parts"), partStr.isNull.as("__pnull"),
+          lit(false).as("__knull"))
+    val checks = perKey.agg(sum("__n"), bool_or(col("__knull")), max("__n"),
+      bool_or(col("__drift")), bool_or(col("__pnull")),
+      array_compact(array_distinct(flatten(collect_set("__parts"))))).head()
+    // aggregates over ZERO rows are NULL: an empty batch passes every check
+    def flagged(i: Int): Boolean = !checks.isNullAt(i) && checks.getBoolean(i)
+    val rowsUpserted = if (checks.isNullAt(0)) 0L else checks.getLong(0)
+    require(!flagged(1),
+      s"updates contain NULL (${keyCols.mkString(", ")}) key values — " +
+        "no upsert key may be NULL (re-applying the batch would " +
+        "duplicate such rows: NULL never equi-joins)")
+    require(checks.isNullAt(2) || checks.getLong(2) <= 1L,
+      s"updates contain duplicate (${keyCols.mkString(", ")}) keys — " +
+        "no upsert dialect defines a winner inside one batch")
+    require(!flagged(3),
+      s"updates carry a $partitionCol that disagrees with " +
+        s"date_format($timeCol) — a mis-derived partition would upsert " +
+        "into the wrong directory and duplicate its key")
+    require(!flagged(4),
       s"updates contain NULL $partitionCol values — derive the partition " +
         "from a non-null event time before merging")
-    val affected = affectedRaw.flatten.sorted
+
+    // 1. PRUNE — the affected partitions are the updates' date span
+    val affected = checks.getSeq[String](5).toSeq.sorted
     val fs = hadoopFs(spark, lakeDir)
     // an OCC writer reads live directories directly (no lease to recover
     // under); a manifest mid-swap on OUR partitions would make those
@@ -1399,6 +1414,11 @@ object LakeMerge {
     // affected-partition reads, resolve through the widened schema
     widenedSchema.foreach(writeSchemaVersion(fsEntry, lakeDir, _))
 
+    // an empty batch affects no partition: nothing to stage or commit (its
+    // staging write would hold no file to read the row count back from)
+    if (rowsUpserted == 0L)
+      return MergeStats(allParts.length, 0, 0L, 0L, 0L, 0L, 0L, mergeId)
+
     // 2. REWRITE into staging (dot-prefixed: invisible to Spark readers)
     if (!occ) heartbeatLease(fs, lakeDir, mergeId) // validations done
     val staging = new Path(lakeDir, StagingPrefix + mergeId)
@@ -1408,7 +1428,6 @@ object LakeMerge {
     try {
     val current = readPartitions(spark, lakeDir, partitionCol, affected)
     val rowsBefore = current.map(_.count()).getOrElse(0L) // footer-count only
-    val rowsUpserted = upd.count()
     val merged = current match {
       case Some(cur) =>
         // broadcast anti-join: the extraction batch is dimension-sized

@@ -2,6 +2,12 @@ package graft.extract
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.{LeftOuter, LeftSemi}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.functions.{broadcast, col}
+
 import graft.SparkSpec
 
 /** S7/S8 parser specs over synthetic FLO-2D report fragments that mirror the
@@ -84,6 +90,51 @@ class FloOutputParsersSpec extends SparkSpec {
     assert(filled === Array(
       ("101", 0.5, 21.50), ("102", 0.5, 22.75),
       ("101", 1.0, 21.80), ("102", 1.0, -999.0)))
+  }
+
+  test("fillMissing: only station rows reach the densify shuffle, same result") {
+    // a planner that neither broadcasts the parsed side nor re-plans at
+    // runtime, so the densify join keeps its Exchange as on a real report
+    val iso = spark.newSession()
+    iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    iso.conf.set("spark.sql.adaptive.enabled", "false")
+    // 3 blocks × 500 cells, 3 stations: element 7 absent from block 1.0,
+    // element 9999 absent everywhere, block 1.5 holds no station at all
+    val cells = for {
+      blk <- Seq(0.5, 1.0, 1.5)
+      e <- 1 to 500
+      if !(blk == 1.0 && e == 7) && !(blk == 1.5 && (e == 7 || e == 42))
+    } yield ("f", e.toString, blk, e * 10 + blk)
+    val parsed = iso.createDataFrame(cells).toDF("file", "element", "step_hours", "value")
+    val elements = iso.createDataFrame(Seq(Tuple1("7"), Tuple1("42"), Tuple1("9999")))
+      .toDF("cell_no")
+    val filled = FloOutputParsers.fillMissing(parsed, elements)
+    // the formulation before the semi-join: every parsed row is shuffled
+    // into the densify join
+    val unfiltered = parsed.select("file", "step_hours").distinct()
+      .crossJoin(broadcast(elements.select(col("cell_no").as("element")).distinct()))
+      .join(parsed, Seq("file", "element", "step_hours"), "left")
+      .na.fill(graft.model.Sentinels.MissingOutput, Seq("value"))
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getDouble(3)))
+      .toSeq.sorted
+    assert(filled.columns.toSeq === unfiltered.columns.toSeq)
+    assert(rows(filled) === rows(unfiltered))
+    assert(rows(filled).size === 9)
+    assert(rows(filled).count(_._4 == -999.0) === 6)
+
+    val plan = filled.queryExecution.executedPlan
+    val densify = plan.collect {
+      case j: SortMergeJoinExec if j.joinType == LeftOuter => j
+    }
+    assert(densify.size === 1, plan.toString)
+    val exchange = densify.head.right.collectFirst {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(exchange.nonEmpty, plan.toString)
+    assert(exchange.get.child.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+    }.size === 1, "the station semi-join must sit below the densify Exchange:\n" + plan)
   }
 
   test("stepToTimestamp: base + fractional model-hours at µs precision") {

@@ -430,4 +430,60 @@ class LakeMergeSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("duplicate"))
   }
+
+  // == One validation pass: every batch check reads one aggregate ==
+
+  test("a NULL key and a duplicate key in one batch: the NULL-key refusal wins") {
+    val dir = java.nio.file.Files.createTempDirectory("lakemerge5").toString + "/lake"
+    LakeMerge.writeLake(
+      batch(Seq("wl_a"), "2024-01-02 06:00:00", day1, (_, _) => 1.0), dir)
+    val before = readLakeSorted(dir)
+    val both = Seq(
+        ("wl_a", "2024-01-02 06:00:00", null.asInstanceOf[String], 2.0),
+        ("wl_b", "2024-01-02 06:00:00", day1.head, 3.0),
+        ("wl_b", "2024-01-02 06:00:00", day1.head, 4.0))
+      .toDF("tms_id", "fgt", "time", "value")
+    val e = intercept[IllegalArgumentException] {
+      LakeMerge.merge(spark, dir, LakeMerge.withPartDate(both))
+    }
+    assert(e.getMessage.contains("NULL (tms_id, fgt, time) key"), e.getMessage)
+    assert(readLakeSorted(dir) === before)
+  }
+
+  test("requireUniqueKeys = false skips the key checks, still refuses a NULL part_date") {
+    val dir = java.nio.file.Files.createTempDirectory("lakemerge6").toString + "/lake"
+    LakeMerge.writeLake(
+      batch(Seq("wl_a"), "2024-01-02 06:00:00", day1, (_, _) => 1.0), dir)
+    // a custom layout: the partition is not date_format(time), so the
+    // strict pass would refuse it as drifted
+    val custom = batch(Seq("wl_b"), "2024-01-02 06:00:00", day2, (_, _) => 2.0)
+      .withColumn("part_date", lit("2024-01-01"))
+    val stats = LakeMerge.merge(spark, dir, custom, requireUniqueKeys = false)
+    assert(stats.rowsUpserted === 2L && stats.partitionsRewritten === 1)
+    assert(stats.rowsInserted === 2L && stats.rowsAfterAffected === 4L)
+
+    val before = readLakeSorted(dir)
+    val nullPart = batch(Seq("wl_c"), "2024-01-02 06:00:00", day1, (_, _) => 3.0)
+      .withColumn("part_date", when(col("time") === day1.head, lit(null))
+        .otherwise(col("part_date")))
+    val e = intercept[IllegalArgumentException] {
+      LakeMerge.merge(spark, dir, nullPart, requireUniqueKeys = false)
+    }
+    assert(e.getMessage.contains("NULL part_date"), e.getMessage)
+    assert(readLakeSorted(dir) === before)
+  }
+
+  test("an empty batch merges nothing: zero-row aggregates pass every check") {
+    val dir = java.nio.file.Files.createTempDirectory("lakemerge7").toString + "/lake"
+    LakeMerge.writeLake(
+      batch(Seq("wl_a"), "2024-01-02 06:00:00", day1 ++ day2, (_, _) => 1.0), dir)
+    val before = readLakeSorted(dir)
+    val empty = batch(Seq.empty, "2024-01-02 06:00:00", day1, (_, _) => 2.0)
+    val stats = LakeMerge.merge(spark, dir, empty)
+    assert(stats.copy(mergeId = "") === LakeMerge.MergeStats(
+      partitionsTotal = 2, partitionsRewritten = 0, rowsBeforeAffected = 0L,
+      rowsUpserted = 0L, rowsUpdated = 0L, rowsInserted = 0L,
+      rowsAfterAffected = 0L))
+    assert(readLakeSorted(dir) === before)
+  }
 }

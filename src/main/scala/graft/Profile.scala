@@ -1,138 +1,67 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
+import scala.util.control.NonFatal
+
+import graft.obs.{SparkWork, Work}
 import org.apache.spark.sql.SparkSession
 
-/** Round-17 measurement loop (optimization guide §1): for each named query,
-  * dump the formatted physical plan to `<planDir>/<name>_<tag>.txt`, then
-  * time `count()` (the bench's action, for comparability) over warmup +
-  * `passes` measured runs, reporting per-pass wall seconds plus aggregate
-  * job/stage/task/shuffle counters from a listener — the Exchange count and
-  * shuffle bytes are what the guide says to drive down.
+/** For each named query: dump the formatted physical plan to
+  * `<planDir>/<name>_<tag>.txt`, then time `count()` (the bench's action)
+  * over a warmup and `passes` measured runs. Prints per-pass seconds and the
+  * last pass's counters; that pass's full [[graft.obs.Work]] report (jobs,
+  * stages, stream micro-batch phases and plans) goes to
+  * `<planDir>/<name>_<tag>_work.txt`.
   *
   * `runMain graft.Profile <q1,q2,...> [sfDir] [planDir] [tag] [passes]`
   */
-/** Per-micro-batch phase printer (round 18): instantiated by every session
-  * (cloned ones included) via spark.sql.streaming.streamingQueryListeners,
-  * so the stream lifecycle's durationMs breakdown is observable per batch. */
-class StreamPhaseListener extends org.apache.spark.sql.streaming.StreamingQueryListener {
-  import org.apache.spark.sql.streaming.StreamingQueryListener._
-  override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-  override def onQueryProgress(e: QueryProgressEvent): Unit = {
-    val p = e.progress
-    val dur = p.durationMs
-    val keys = Seq("triggerExecution", "latestOffset", "queryPlanning",
-      "getBatch", "walCommit", "commitOffsets", "addBatch")
-    val parts = keys.map(k =>
-      s"$k=${Option(dur.get(k)).getOrElse("-")}").mkString(" ")
-    println(s"    [stream-batch] ${p.name} batch=${p.batchId} " +
-      s"rows=${p.numInputRows} $parts")
-  }
-  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-}
-
 object Profile {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val planDir = args.lift(2).getOrElse("plans/r17")
     val tag = args.lift(3).getOrElse("before")
     val passes = args.lift(4).map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Streaming lifecycle attribution (round 18): under
-    // SPARK_GRAFT_STREAM_PHASES, register the per-batch durationMs printer
-    // through the CONF (not spark.streams.addListener) — parity queries
-    // start on CLONED sessions (StreamParity.confSession) whose own
-    // StreamingQueryManager instantiates the listener class from this
-    // inherited conf; a listener added to the parent manager never sees
-    // their events.
-    val b0 = SparkEntry.configure(SparkSession.builder()
+    val spark = SparkEntry.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-    val spark = (if (sys.env.contains("SPARK_GRAFT_STREAM_PHASES"))
-      b0.config("spark.sql.streaming.streamingQueryListeners",
-        "graft.StreamPhaseListener")
-    else b0).getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, names, sfDir, planDir, tag, passes)
+    finally spark.stop()
+  }
+
+  /** Profiles each query in turn and returns its last pass's work, or None
+    * when the query failed; a failed query is reported FAILED and the rest
+    * still run. */
+  def run(spark: SparkSession, names: Seq[String], sfDir: String,
+      planDir: String, tag: String, passes: Int): Seq[(String, Option[Work])] = {
+    require(passes > 0, s"passes must be positive, got $passes")
     new java.io.File(planDir).mkdirs()
-
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var jobs = 0
-    @volatile var shufWrite = 0L
-    @volatile var shufRead = 0L
-    @volatile var spill = 0L
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val jobLines = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val listener = new SparkListener {
-      private val jobSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs += 1
-        jobStart.put(js.jobId, System.nanoTime())
-        jobSite.put(js.jobId,
-          js.stageInfos.lastOption.map(_.name).getOrElse("?").take(90) +
-            " tasks=" + js.stageInfos.map(_.numTasks).sum)
-      }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val t0 = jobStart.remove(je.jobId)
-        if (t0 != 0L && sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
-          jobLines.add(f"    job ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%6.3f s  ${jobSite.remove(je.jobId)}")
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        stages += 1
-        tasks += sc.stageInfo.numTasks
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          shufWrite += m.shuffleWriteMetrics.bytesWritten
-          shufRead += m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead
-          spill += m.diskBytesSpilled
-        }
-        if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS")) {
-          val wall = (for (s <- sc.stageInfo.submissionTime;
-                           e <- sc.stageInfo.completionTime) yield e - s)
-            .getOrElse(-1L)
-          val cpu = if (m != null) m.executorCpuTime / 1000000 else -1L
-          jobLines.add(f"      stage ${sc.stageInfo.stageId}%4d " +
-            f"wall=${wall}%5d ms cpu=${cpu}%5d ms tasks=${sc.stageInfo.numTasks}%3d  " +
-            sc.stageInfo.name.take(90))
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      // plan dump (pre-execution, AQE isFinalPlan=false — the shape audit)
-      val planTxt = {
-        val df = fn(spark, sfDir)
-        df.queryExecution.explainString(
+    def write(file: String, text: String): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(planDir, file), text)
+    names.map { name =>
+      name -> (try {
+        val fn = SparkEntry.queries(name)
+        // plan dump (pre-execution, AQE isFinalPlan=false — the shape audit)
+        val planTxt = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$planDir/${name}_$tag.txt"),
-        planTxt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val ex = planTxt.linesIterator.count(_.contains("Exchange"))
-      spark.sparkContext.setJobDescription(s"profile:$name warmup")
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-        println(f"$name%-26s FAILED ${e.getMessage.take(120)}"); return }
-      val times = (1 to passes).map { i =>
-        stages = 0; tasks = 0; jobs = 0; shufWrite = 0L; shufRead = 0L; spill = 0L
-        jobLines.clear()
-        spark.sparkContext.setJobDescription(s"profile:$name pass$i")
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
-        jobLines.forEach(println(_))
-      println(f"$name%-26s ${times.map(t => f"$t%6.3f").mkString(" ")}  " +
-        f"jobs=$jobs%3d stages=$stages%3d tasks=$tasks%4d " +
-        f"shufW=${shufWrite / 1024}%6d KB shufR=${shufRead / 1024}%6d KB " +
-        f"spill=${spill / 1024}%d KB exch=$ex")
+        write(s"${name}_$tag.txt", planTxt)
+        val ex = planTxt.linesIterator.count(_.contains("Exchange"))
+        fn(spark, sfDir).count() // warmup
+        val works = (1 to passes).map(_ =>
+          SparkWork.measure(spark)(fn(spark, sfDir).count())._2)
+        val w = works.last
+        write(s"${name}_${tag}_work.txt", w.report)
+        println(f"$name%-26s ${works.map(p => f"${p.seconds}%6.3f").mkString(" ")}  " +
+          f"jobs=${w.jobs.size}%3d stages=${w.stages.size}%3d tasks=${w.tasks}%4d " +
+          f"shufW=${w.shuffleWriteBytes / 1024}%6d KB shufR=${w.shuffleReadBytes / 1024}%6d KB " +
+          f"spill=${w.spillBytes / 1024}%d KB exch=$ex")
+        Some(w)
+      } catch { case NonFatal(e) =>
+        println(f"$name%-26s FAILED ${String.valueOf(e.getMessage).take(120)}")
+        None
+      })
     }
-    spark.stop()
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * 1 M docs, and the expected survivor count is exact (subs drop, all
   * else survives).
   *
-  * What is measured per section, via a stage-completion listener:
+  * What is measured per section, via `graft.obs.SparkWork.measure`:
   * shuffle RECORDS and bytes written (the rows-shuffled evidence the
   * README table quotes), peak single-stage bytes, wall seconds. The
   * claims under test:
@@ -43,27 +43,9 @@ object ScaleDeep {
       .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    val shuffleRecs = new java.util.concurrent.atomic.AtomicLong()
-    val peakStage = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics.shuffleWriteMetrics
-        shuffleBytes.addAndGet(m.bytesWritten)
-        shuffleRecs.addAndGet(m.recordsWritten)
-        peakStage.updateAndGet(p => math.max(p, m.bytesWritten))
-      }
-    })
     def section[T](f: => T): (T, Long, Long, Long, Double) = {
-      Thread.sleep(400)
-      val b0 = shuffleBytes.get(); val r0 = shuffleRecs.get()
-      peakStage.set(0L)
-      val t0 = System.nanoTime()
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400)
-      (r, shuffleRecs.get() - r0, shuffleBytes.get() - b0, peakStage.get(), secs)
+      val (r, w) = graft.obs.SparkWork.measure(spark)(f)
+      (r, w.shuffleWriteRecords, w.shuffleWriteBytes, w.peakStageShuffleWrite, w.seconds)
     }
 
     val nDocs = 1000000L * mult

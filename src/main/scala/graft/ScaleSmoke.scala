@@ -117,30 +117,11 @@ object ScaleSmoke {
     // dupFactor-clique). Demonstrates the candidate-bounded shuffle claim:
     // the n² verify work stays inside LSH buckets, so shuffle volume tracks
     // candidate pairs, not corpus².
-    val shuffleTotal = new java.util.concurrent.atomic.AtomicLong()
-    val shufflePeak = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        shuffleTotal.addAndGet(w)
-        shufflePeak.updateAndGet(p => math.max(p, w))
-      }
-    })
-    // per-section shuffle accounting: snapshot the counters around a timed
-    // block so each metric line carries ITS shuffle bytes, not the run's.
-    // Listener events are delivered asynchronously and the public API has
-    // no drain hook — a short settle sleep bounds the bleed between
-    // sections (fine for a smoke harness; the sleep is outside the timer).
+    // per-section shuffle accounting: each metric line carries ITS shuffle
+    // bytes and peak single-stage bytes, not the run's
     def sectionShuffle[T](f: => T): (T, Long, Long, Double) = {
-      Thread.sleep(300)
-      val t0 = System.nanoTime()
-      val before = shuffleTotal.get()
-      shufflePeak.set(0L)
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      (r, shuffleTotal.get() - before, shufflePeak.get(), secs)
+      val (r, w) = graft.obs.SparkWork.measure(spark)(f)
+      (r, w.shuffleWriteBytes, w.peakStageShuffleWrite, w.seconds)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dupFactor = 20 * mult

@@ -110,16 +110,13 @@ object StreamParity {
     * session's parallelism, and at production volumes a stream arrives in
     * many source splits already — callers there drop the respread. */
   private def spread(df: DataFrame, key: String): DataFrame =
-    df.repartition(
-      math.min(sys.env.get("SPARK_GRAFT_STREAM_SPREAD").map(_.toInt)
-          .getOrElse(Int.MaxValue),
-        df.sparkSession.sparkContext.defaultParallelism), col(key))
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
 
   /** Run `stream` to completion through a memory sink and return the sink
     * table (callers consume the RETURN value — the generated sink name is
     * internal). */
   def runToTable(spark: SparkSession, stream: DataFrame, baseName: String,
-      mode: OutputMode, statefulPartitions: Option[Int] = None): DataFrame = {
+      mode: OutputMode): DataFrame = {
     val name = s"${baseName}_${sinkSeq.incrementAndGet()}"
     spark.catalog.dropTempView(name) // no-op when absent
     // Offset/commit logs and state-store delta files are written to the
@@ -162,16 +159,9 @@ object StreamParity {
     // is keyed, every key's rows arrive in one partition's order either
     // way (the parity fixtures are one input split), so per-key merge
     // order — hence every FP sum — is unchanged.
-    // `statefulPartitions` overrides the family default for queries whose
-    // STATE stage is itself CPU-dense (round 18: q_stream_sessionize's
-    // session merge measured 1.7 s of CPU over the default 4 state tasks —
-    // the keyed-state partitioning-independence argument above covers any
-    // partition count, and the single input split keeps one partial per
-    // key, so FP sums are unchanged).
     val ss = confSession(spark,
       Map("spark.sql.shuffle.partitions" ->
-        statefulPartitions.getOrElse(
-          math.min(4, spark.sparkContext.defaultParallelism)).toString) ++
+        math.min(4, spark.sparkContext.defaultParallelism).toString) ++
         (if (hasWatermark) Map.empty[String, String]
          else Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")))
     // re-root the stream's UNanalyzed plan on the private session so the
@@ -185,10 +175,6 @@ object StreamParity {
     // the checkpoint cleanup scope covers start() too: a query that fails
     // analysis AFTER the engine created the checkpoint dir must not leave
     // litter behind
-    val t0 = System.nanoTime()
-    def mark(label: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PHASES"))
-        System.err.println(f"[stream-phase] $name $label ${(System.nanoTime() - t0) / 1e9}%.3f")
     try {
       val q = streamOnSs.writeStream
         .format("memory").queryName(name)
@@ -196,25 +182,24 @@ object StreamParity {
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .start()
-      mark("started")
       q.awaitTermination()
-      mark("terminated")
-      // measurement-only diagnostic: the LAST micro-batch's executed
-      // physical plan (the batch plans are otherwise invisible to explain())
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PLANS")) q.explain(true)
       q.stop()
-      mark("stopped")
     } finally rm(ckpt)
-    // materialize the sink and DROP the view: with per-call unique names
-    // the memory sinks would otherwise accumulate driver heap for the
-    // whole suite run; the returned frame is a self-contained local
-    // relation (parity fixtures are small by construction)
+    drainSink(spark, ss, name)
+  }
+
+  /** Materialize memory sink `name` of session `ss` as a local frame on
+    * `spark` and DROP its view: with per-call unique names the memory
+    * sinks would otherwise accumulate driver heap for the whole suite run;
+    * the returned frame is a self-contained local relation (parity
+    * fixtures are small by construction). */
+  private def drainSink(spark: SparkSession, ss: SparkSession,
+      name: String): DataFrame = {
     val out = ss.table(name)
     val rows = out.collect()
     val schema = out.schema
     ss.catalog.dropTempView(name)
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** APPEND-mode windowed count/sum under a REAL event-time watermark
@@ -271,13 +256,7 @@ object StreamParity {
       mem.addData(late.toSeq: _*); q.processAllAvailable()
       mem.addData((-1L, flushTs, -1L, 0.0)); q.processAllAvailable()
     } finally q.stop()
-    // materialize + drop (see runToTable's sink-accumulation note)
-    val outT = ss.table(name)
-    val outRows = outT.collect()
-    val outSchema = outT.schema
-    ss.catalog.dropTempView(name)
-    spark.createDataFrame(java.util.Arrays.asList(outRows: _*), outSchema)
-      .filter(col("user_id") >= 0)
+    drainSink(spark, ss, name).filter(col("user_id") >= 0)
   }
 
   /** Streaming form of q_a2_resample: right-closed 15-min tumbling sum over
@@ -682,13 +661,8 @@ object StreamParity {
   def sessionizePerUser(spark: SparkSession, dir: String,
       gapSeconds: Long): DataFrame = {
     val ev = eventsStream(spark, dir).filter(!isnan(col("value")))
-    // the session-window merge is the one CPU-dense STATE stage in the
-    // family (1.7 s CPU over 4 tasks at sf0.1) — give it the parallelism
-    // the other stateful parity runs don't need
     runToTable(spark, sessionizeAgg(ev, gapSeconds), "stream_sessionize",
-      OutputMode.Complete(),
-      statefulPartitions =
-        Some(math.min(16, spark.sparkContext.defaultParallelism)))
+      OutputMode.Complete())
   }
 
   /** The sessionize aggregate alone (events with ts-ns + user_id + value →

@@ -9,6 +9,11 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Blocks until every event posted so far has reached every listener
+    * (`listenerBus` is private[spark]). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** EAGER ColumnNode → Catalyst conversion. `expression` wraps the node
     * lazily (ColumnNodeExpression), which the DataFrame API unwraps during
     * plan conversion — but a FunctionRegistry builder's output is spliced

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Tag
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (startup costs ~5 s). */
@@ -48,15 +49,29 @@ object TimingGate {
   /** SparkSpec tests currently executing (parallel suite detection for
     * shared-context assertions — see [[SparkSpec.assertIsolated]]). */
   val activeTests = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Every SparkSpec test holds the read side; an [[Alone]] test holds the
+    * write side, so it starts once the running tests have finished and no
+    * other test starts until it ends. */
+  val alone = new java.util.concurrent.locks.ReentrantReadWriteLock()
 }
+
+/** Marks a test whose assertions read SHARED-SparkContext state (the
+  * session cache, the persisted-RDD inventory): it runs with no other
+  * SparkSpec test beside it, so its [[SparkSpec.assertIsolated]] checks are
+  * always strict instead of cancelling under parallel suites. */
+object Alone extends Tag("graft.Alone")
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
 
   override protected def withFixture(test: NoArgTest): org.scalatest.Outcome = {
+    val lock =
+      if (test.tags.contains(Alone.name)) TimingGate.alone.writeLock
+      else TimingGate.alone.readLock
+    lock.lock()
     TimingGate.activeTests.incrementAndGet()
     try super.withFixture(test)
-    finally TimingGate.activeTests.decrementAndGet()
+    finally { TimingGate.activeTests.decrementAndGet(); lock.unlock() }
   }
 
   /** An assertion over SHARED-SparkContext state (persistent-RDD

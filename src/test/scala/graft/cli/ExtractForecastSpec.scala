@@ -6,7 +6,7 @@ import java.sql.{DriverManager, Timestamp}
 import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 
-import graft.SparkSpec
+import graft.{Alone, SparkSpec}
 import graft.io.FcstDims
 
 /** The CLIs' cron posture: an extraction evaluates its enriched batch once
@@ -113,7 +113,7 @@ class ExtractForecastSpec extends SparkSpec {
       s"persisted RDDs left behind: ${leaked.map(id => sc.getPersistentRDDs(id))}")
   }
 
-  test("an extraction upserts and registers every station and leaves no cache behind") {
+  test("an extraction upserts and registers every station and leaves no cache behind", Alone) {
     val dir = tmp("extractforecast")
     writeReports(dir)
     resetStore(allStations)
@@ -124,7 +124,7 @@ class ExtractForecastSpec extends SparkSpec {
     assert(count("SELECT COUNT(*) FROM data WHERE value = -999") === 0L)
   }
 
-  test("an unregistered station fails the extraction and still releases the batch") {
+  test("an unregistered station fails the extraction and still releases the batch", Alone) {
     val dir = tmp("extractforecast")
     writeReports(dir)
     resetStore(allStations.filterNot(_ == "17_fp_b"))

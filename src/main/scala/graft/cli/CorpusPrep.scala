@@ -286,7 +286,7 @@ object CorpusPrep {
           expectedItems = refN, fpp = 0.01)
         .drop("__digest")
       args.get("incremental-fuzzy").foreach { t =>
-        // banding defaults to the 4-row key (16 hashes) ScaleDeep measured
+        // banding defaults to the 4-row key (16 hashes) the 1 M-doc scale run measured
         // as linear — NOT crossCorpusNearDupPairs' 2-row default, whose
         // random band collisions grow candidate pairs ~n^2 on short docs
         // (the same lesson as --dedup-rows-per-band); override with
@@ -373,7 +373,7 @@ object CorpusPrep {
         obsAttached = oversizeObs.isDefined
         // `--dedup-hashes` / `--dedup-rows-per-band` size the banding key
         // (defaults 8/2 — lshPlan(8, 0.5)). The band key's width is a
-        // SCALE control, not just a recall dial: ScaleDeep measured 2-row
+        // SCALE control, not just a recall dial: the 1 M-doc scale run measured 2-row
         // bands over 30-40-token docs producing ~n^2-growing random
         // candidate pairs (18 -> 41 -> 67 shuffle records/doc at
         // 0.2/1/2 M docs); widening to 4-row bands (16 hashes) made the
@@ -408,7 +408,7 @@ object CorpusPrep {
     // stage. containmentDrop is internally multi-action (its verified-pair
     // frame persists and is consumed by a second plan), so WITHOUT the
     // cache everything upstream (gates, rewrites, near-dedup) re-executes
-    // once more — ScaleDeep's e2e section measured the composed CLI at
+    // once more — `corpus_prep_e2e_1m` ([[graft.Scale]]) measured the composed CLI at
     // 1.6× the stage-sum shuffle records from exactly this. The cache
     // trades executor storage (the corpus at this point, text included)
     // for that repeat; at 100 TB that is the standard
@@ -485,8 +485,8 @@ object CorpusPrep {
     // (id, weight) projection: the text-heavy upstream chain executes
     // once to materialize two small columns, and both counts (plus the
     // emitted-copy replay, which depends only on id and weight) run
-    // against that, never re-executing the chain (the ScaleDeep
-    // composition tax). observe/CollectMetrics is NOT usable here:
+    // against that, never re-executing the chain (the composition tax
+    // `corpus_prep_e2e_1m` measures). observe/CollectMetrics is NOT usable here:
     // predicates push straight through it (an observe above the w>0
     // filter measured 20 of 30 rows), and the two-pass pack plan
     // references the frame twice in one action, double-counting the

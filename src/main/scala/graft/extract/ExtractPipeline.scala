@@ -34,10 +34,8 @@ object ExtractPipeline {
   def channelSeries(spark: SparkSession, hychanPath: String, baseTime: String,
       cellMap: DataFrame, valueIndex: Int = 1,
       cutoff: Option[String] = None, utcOffset: String = ""): DataFrame = {
-    // single regular file → carry-based parallel parse (no per-file sort);
-    // glob/dir inputs → the window path, which parallelizes across files
     val parsed =
-      if (new java.io.File(hychanPath).isFile)
+      if (isSingleFile(spark, hychanPath))
         FloOutputParsers.parseHychanFile(spark, hychanPath, valueIndex)
       else FloOutputParsers.parseHychan(
         FloOutputParsers.readLines(spark, hychanPath), valueIndex)
@@ -50,7 +48,7 @@ object ExtractPipeline {
       cellMap: DataFrame, cutoff: Option[String] = None,
       utcOffset: String = ""): DataFrame = {
     val parsed =
-      if (new java.io.File(timdepPath).isFile)
+      if (isSingleFile(spark, timdepPath))
         FloOutputParsers.parseTimdepFile(spark, timdepPath)
       else FloOutputParsers.parseTimdep(
         FloOutputParsers.readLines(spark, timdepPath))
@@ -58,6 +56,15 @@ object ExtractPipeline {
       parsed, cellMap.select(col("cell_no").as("element")))
     enrich(filled, baseTime, cellMap, cutoff, utcOffset)
   }
+
+  /** Whether `path` is exactly one regular file on its Hadoop file system
+    * (a plain path or a `file:`, `hdfs:` or `s3a:` URI). One file takes the
+    * carry-based parallel parse; a directory, a glob or a missing path takes
+    * the window path, which parallelizes across files. */
+  private[extract] def isSingleFile(spark: SparkSession, path: String): Boolean =
+    try graft.io.LakeMerge.hadoopFs(spark, path)
+      .getFileStatus(new org.apache.hadoop.fs.Path(path)).isFile
+    catch { case _: java.io.FileNotFoundException => false }
 
   /** `utcOffset` is the reference's `[+-]HH:MM` config string (empty = no
     * shift, like getUTCOffset's default=True path): every series point moves

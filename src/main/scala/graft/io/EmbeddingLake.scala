@@ -309,7 +309,8 @@ object EmbeddingLake {
     * Returns the NEW codebook (old centroids at their old indices except
     * flagged ones replaced by their first sub-centroid; fresh sub-cells
     * appended) plus stats whose `partitionsRewritten ≪ partitionsTotal`
-    * is the scale contract ScaleSmoke measures. */
+    * is the scale contract [[graft.Scale]]'s `embedding_lake_compact_scale`
+    * requires. */
   def compactCells(spark: SparkSession, path: String, idCol: String,
       vecCol: String, cellCodebook: Array[Seq[Float]], flagged: Seq[Int],
       splitInto: Int = 2, kmeansIters: Int = 2,

@@ -129,8 +129,8 @@ object IntegrityManifest {
     * is the POST-change corpus. Only the ~touched/groups slice of the
     * corpus is leaf-hashed and shuffled — the rest of the manifest rides
     * through untouched, so the publish-time fingerprint scales with the
-    * batch, not the lake ([[graft.ScaleSmoke]] bounds groups-recomputed ≈
-    * batch-distinct-groups ≪ groups). Hash-exact to a full recompute by
+    * batch, not the lake ([[graft.Scale]]'s `integrity_manifest_scale`
+    * bounds groups-recomputed ≈ batch-distinct-groups ≪ groups). Hash-exact to a full recompute by
     * construction (IntegrityManifestSpec proves it on add/edit/drop
     * batches): group hashes are pure functions of the group's leaf set,
     * and untouched groups' leaf sets are untouched. A group emptied by

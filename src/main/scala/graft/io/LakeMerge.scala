@@ -45,8 +45,8 @@ import org.apache.spark.sql.functions._
   *     manifest ALONE would carry the commit and readers would resolve
   *     through it permanently, which is exactly the Delta/Iceberg
   *     design). Untouched partitions are never read, rewritten, or
-  *     moved — the property [[graft.ScaleSmoke]] measures as
-  *     partitions-rewritten ≪ total;
+  *     moved — the property [[graft.Scale]]'s `lake_merge_scale` section
+  *     requires as partitions-rewritten < total;
   *  5. CLEAN: staging (with the trashed old data) is deleted, then the
   *     manifest — completing the commit.
   *

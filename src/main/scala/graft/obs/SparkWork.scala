@@ -52,7 +52,7 @@ final case class Work(seconds: Double, jobs: Seq[JobWork], stages: Seq[StageInfo
 }
 
 /** The one meter of Spark work for the measurement tools (`Profile`,
-  * `ScaleSmoke`, `ScaleDeep`).
+  * `Scale`).
   *
   * A block's work is told apart from the rest of the SparkContext's by a
   * job tag set on the calling thread for the block. Spark copies a thread's

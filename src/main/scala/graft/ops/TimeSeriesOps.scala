@@ -178,7 +178,7 @@ object TimeSeriesOps {
     // stable across executions (the sampling seed derives from the RDD
     // id), so the totals could describe a different layout than the rows
     // they join onto, silently corrupting the scan with duplicate/gapped
-    // offsets. Not hypothetical: ScaleDeep's 250 k-conv SftExport section
+    // offsets. Not hypothetical: the 250 k-conv `sft_export_e2e` scale section
     // measured 4 199 mean tokens inside 4 096-token windows (duplicate
     // global positions), drifting run to run; small fixtures never see it
     // because boundary sampling is exact at tiny row counts. (A persist

@@ -98,42 +98,18 @@ object NgramLm {
     * (idCol, n_trans, backoff_rate, avg_nll). */
   def stupidBackoffNll(docs: DataFrame, idCol: String, textCol: String,
       uni: DataFrame, bi: DataFrame, totalTokens: Long,
-      alpha: Double = 0.4, roundTo: Int = 6): DataFrame =
-    stupidBackoffNllImpl(docs, idCol, textCol, uni, bi, totalTokens, alpha,
-      roundTo, legacyThreeJoins = false)
-
-  /** [[stupidBackoffNll]] with the pre-round-15 three-join scoring plan
-    * kept reachable ONLY as [[graft.ScaleSmoke]]'s measured baseline: the
-    * smoke runs both forms under shuffle-join config (the 100 TB regime)
-    * and `require`s the two-join form shuffles strictly less — the
-    * regression guard for the join-reduction claim. Results are identical
-    * by construction (same arithmetic, c1 resolved via the bigram match
-    * instead of a third transition-stream join). */
-  private[graft] def stupidBackoffNllImpl(docs: DataFrame, idCol: String,
-      textCol: String, uni: DataFrame, bi: DataFrame, totalTokens: Long,
-      alpha: Double = 0.4, roundTo: Int = 6,
-      legacyThreeJoins: Boolean = false): DataFrame = {
+      alpha: Double = 0.4, roundTo: Int = 6): DataFrame = {
     require(totalTokens > 0, s"totalTokens must be positive, got $totalTokens")
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    val tr = explodedTransitions(docs, Seq(idCol), textCol)
-    // TWO token-stream-sized joins, not three (round 15): c1 rides the
-    // bigram table ([[bigramModel]] — attached here when the caller hands
-    // a plain count table, a vocabulary-sized join either way), and c1 is
-    // only CONSUMED in the seen-bigram branch, where the bigram join
-    // matched and therefore carried it — so the arithmetic is identical
-    // to the three-join form by construction, with one fewer shuffle of
-    // the transition stream.
-    val withC1 =
-      if (legacyThreeJoins)
-        tr.join(bi.select(col("w1"), col("w2"), col("c12")),
-            Seq("w1", "w2"), "left")
-          .join(uni.select(col("w").as("w1"), col("c").as("c1")),
-            Seq("w1"), "left")
-      else {
-        val biM = if (bi.columns.contains("c1")) bi else bigramModel(bi, uni)
-        tr.join(biM.select(col("w1"), col("w2"), col("c12"), col("c1")),
-          Seq("w1", "w2"), "left")
-      }
+    // TWO token-stream-sized joins, not three: c1 rides the bigram table
+    // ([[bigramModel]] — attached here when the caller hands a plain count
+    // table, a vocabulary-sized join either way), and c1 is only CONSUMED
+    // in the seen-bigram branch, where the bigram join matched and
+    // therefore carried it. PlanAuditSpec pins the Exchange count under
+    // shuffle joins, where a third join would re-shuffle the stream.
+    val biM = if (bi.columns.contains("c1")) bi else bigramModel(bi, uni)
+    val withC1 = explodedTransitions(docs, Seq(idCol), textCol)
+      .join(biM.select(col("w1"), col("w2"), col("c12"), col("c1")), Seq("w1", "w2"), "left")
     val scored = withC1
       .join(uni.select(col("w").as("w2"), col("c").as("c2")), Seq("w2"), "left")
       .withColumn("__s",

@@ -1169,7 +1169,7 @@ object TrainPrep {
     * next-fit — order-preserving, the default); `"lengthDesc"` is
     * classic FIRST-FIT-DECREASING — docs fold longest-first and each
     * takes the first open bin with room, so short docs backfill the
-    * gaps and padding drops materially (ScaleSmoke's pack_ffd_scale
+    * gaps and padding drops materially ([[graft.Scale]]'s `pack_ffd_scale`
     * section and the README table quote the delta). A document longer
     * than the context gets a bin of its own in either mode (flagged
     * `oversize` in the report — the caller decides truncate/drop via

@@ -230,4 +230,35 @@ class FloOutputParsersSpec extends SparkSpec {
       .collect().map(r => (r.getString(1), r.getDouble(2)))
     assert(out === Array(("250", 0.25), ("250", 0.50), ("369", 0.25), ("369", 0.50)))
   }
+
+  test("a file: URI takes the carry parse and equals the plain-path parse") {
+    val dir = Files.createTempDirectory("uriparse").toFile
+    val hy = new java.io.File(dir, "HYCHAN.OUT")
+    Files.writeString(hy.toPath, hychan)
+    val td = new java.io.File(dir, "TIMDEP.OUT")
+    Files.writeString(td.toPath, timdep)
+    val base = "2024-01-01 00:00:00"
+    val channels = Seq(("250", "hanwella", "CHANNEL"), ("369", "glencourse", "CHANNEL"))
+      .toDF("cell_no", "label", "kind")
+    val plains = Seq(("101", "a", "FLOOD_PLAIN"), ("102", "b", "FLOOD_PLAIN"))
+      .toDF("cell_no", "label", "kind")
+    def windows(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    for ((series, file) <- Seq(
+        ((p: String) => ExtractPipeline.channelSeries(spark, p, base, channels), hy),
+        ((p: String) => ExtractPipeline.floodPlainSeries(spark, p, base, plains), td))) {
+      val uri = file.toURI.toString
+      assert(uri.startsWith("file:"))
+      val viaUri = series(uri)
+      assert(windows(viaUri).isEmpty,
+        s"$uri must take the carry parse:\n${viaUri.queryExecution.optimizedPlan}")
+      val viaPath = series(file.getPath)
+      assert(rows(viaPath).nonEmpty && rows(viaUri) === rows(viaPath))
+    }
+    // a directory is not one file: it keeps the window path
+    assert(windows(ExtractPipeline.floodPlainSeries(spark, dir.toURI.toString, base,
+      plains)).nonEmpty)
+  }
 }

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Alone, SparkSpec}
 
 /** Multimodal plumbing: schema/kind mapping, stub decode agreement between
   * the expression path and the mapPartitions batch path, frame sampling
@@ -281,7 +281,7 @@ class MultimodalSpec extends SparkSpec {
       "the same pair must be the one aHash misses at this threshold")
   }
 
-  test("imageNearDupPairs releases its internal hash cache after the first action") {
+  test("imageNearDupPairs releases its internal hash cache after the first action", Alone) {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val rows = Seq(

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 
-import graft.SparkSpec
+import graft.{Alone, SparkSpec}
 
 /** README "Scale posture" claims as executable assertions: the plans the
   * engine promises are the plans Catalyst actually produces on the driver's
@@ -541,7 +541,7 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("q_bradley_terry broadcasts the item-sized strengths every iteration") {
+  test("q_bradley_terry broadcasts the item-sized strengths every iteration", Alone) {
     // the public entry point now returns an eager item-sized checkpoint
     // (so the pair-count cache can be RELEASED — the q_ppl_buckets
     // lie-low trap), so the iteration joins are pinned on the LAZY plan
@@ -864,5 +864,40 @@ class PlanAuditSpec extends SparkSpec {
       "brier must not window or data-join:\n" + br.take(1200))
     assert(br.contains("partial_"),
       "brier must combine map-side:\n" + br.take(1200))
+  }
+
+  test("stupid-backoff scoring joins the transition stream twice under shuffle joins") {
+    // With broadcast joins off (the 100 TB regime, where count tables are
+    // too big to broadcast) every count-table join is a shuffle join.
+    // Scoring left-joins the transition stream twice, on (w1, w2) and on
+    // w2; c1 reaches the bigram table by an inner join of the two count
+    // tables. 7 Exchanges: 3 over the stream ((w1, w2), w2, the doc_id
+    // roll-up) and 4 over the tables (the bigram count, the bigram table
+    // re-keyed on w1, the unigram count, which both of its joins reuse,
+    // and the model re-keyed on (w1, w2)). The three-join form this
+    // replaced planned 3 left-outer stream joins and 6 Exchanges (4 over
+    // the stream). The stream it scores at ingest plans the same.
+    import org.apache.spark.sql.functions._
+    val noBroadcast = org.apache.spark.sql.GraftBridge.sessionWithConf(spark,
+      Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    def count(plan: String, node: String) = node.r.findAllIn(plan).length
+    val exchange = "(?m)^[ :+|-]*Exchange "
+    // the batch plan prints join keys; the stream's formatted plan does not
+    val streamJoin = "SortMergeJoin( \\[[^\\]]*\\], \\[[^\\]]*\\],)? LeftOuter"
+    val docs = noBroadcast.read.parquet(s"$Sf/documents.parquet")
+    val train = docs.filter(col("doc_id") < 150)
+    val uni = graft.trainprep.NgramLm.unigramCounts(train, "text")
+    val total = uni.agg(sum(col("c"))).head().getLong(0)
+    val scored = graft.trainprep.NgramLm.stupidBackoffNll(docs.filter(col("doc_id") < 300),
+      "doc_id", "text", uni, graft.trainprep.NgramLm.bigramCounts(train, "text"), total)
+    scored.collect()
+    val (_, work) = graft.obs.SparkWork.measure(noBroadcast)(
+      graft.streaming.StreamParity.lmBackoffStream(noBroadcast, Sf))
+    val streamPlans = work.batchPlans.filter(_.contains("StateStoreSave"))
+    assert(streamPlans.nonEmpty, work.report)
+    for (plan <- org.apache.spark.sql.GraftBridge.finalPlanString(scored) +: streamPlans) {
+      assert(count(plan, streamJoin) == 2, s"${count(plan, streamJoin)} stream joins:\n$plan")
+      assert(count(plan, exchange) == 7, s"${count(plan, exchange)} exchanges:\n$plan")
+    }
   }
 }

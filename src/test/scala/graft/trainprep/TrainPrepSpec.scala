@@ -2,7 +2,7 @@ package graft.trainprep
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Alone, SparkSpec}
 
 class TrainPrepSpec extends SparkSpec {
   import spark.implicits._
@@ -338,7 +338,7 @@ class TrainPrepSpec extends SparkSpec {
     assert(out.values.map(_._2).toSet === Set("train", "test"))
   }
 
-  test("perplexityBuckets releases its doc-sized score cache after the first use") {
+  test("perplexityBuckets releases its doc-sized score cache after the first use", Alone) {
     val docs = (1L to 30L).map(i => (i, s"some plain text body $i"))
       .toDF("doc_id", "text")
     val before = spark.sparkContext.getPersistentRDDs.keySet

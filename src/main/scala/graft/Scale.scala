@@ -192,7 +192,7 @@ object Scale {
   val sections: Seq[Section] = Seq(
     // ---- the reference's headline deck: a 4-day flo2d_150_v2 RAINCELL,
     // 384 steps × 39,526 cells (gen_raincell.py:124-142). One plan:
-    // synthesize, bucket, format, range-partitioned ordered write.
+    // synthesize, bucket, format, and GenRaincell's single-file write.
     section("raincell_scale") { c => import c._
       val steps = 384 * mult
       val cells = 39526
@@ -202,11 +202,10 @@ object Scale {
           .as("time"),
         (pmod(col("id"), lit(cells)) + 1).cast("int").as("cell_id"),
         round(rand(42) * 10, 2).as("value"))
-      val out = dir("raincell") + "/RAINCELL"
-      val (_, write) = measure(spark)(graft.io.OrderedTextSink.writePartFiles(
+      val out = dir("raincell") + "/RAINCELL.DAT"
+      val (_, write) = measure(spark)(graft.io.OrderedTextSink.writeSingleFile(
         graft.decks.RaincellDeck.lines(spark, series, start,
-          utc(StartUs + steps.toLong * 900000000L), "flo2d_150_v2"),
-        out, spark.sparkContext.defaultParallelism))
+          utc(StartUs + steps.toLong * 900000000L), "flo2d_150_v2"), out))
       val lines = spark.read.text(out).count()
       // the header, then each step's cell lines and its closing blank line
       val expected = 1L + steps.toLong * (cells + 1)

@@ -35,8 +35,11 @@ object CliArgs {
   def longOr0(r: org.apache.spark.sql.Row, i: Int): Long =
     if (r.isNullAt(i)) 0L else r.getLong(i)
 
+  /** `local[N]` with N shuffle partitions, N = `SPARK_GRAFT_CPUS` or the
+    * host's processor count. */
   def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val s = SparkEntry.configure(SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(name)

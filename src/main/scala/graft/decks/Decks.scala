@@ -14,6 +14,16 @@ import graft.ops.TimeSeriesOps
   * section, `line` is the exact fixed-width text. The ordered write itself is
   * `graft.io.OrderedTextSink` — decks never collect data to the driver, so
   * the same pipeline serves a 39k-cell basin or a 100×-denser grid.
+  *
+  * Each deck evaluates its input once. A keyed deck (RAIN and INFLOW by
+  * `deck_id`, OUTFLOW by boundary cell) is partitioned once by its key and
+  * every window and aggregate reuses that partitioning; RAIN's and INFLOW's
+  * header lines come out of the same rows as their body through one
+  * generator ([[DeckFormat.emit]]) instead of a second pass for the header. Literal head and tail lines are
+  * local rows that read no input. A single-deck form's constant `deck_id`
+  * folds away, so its one exchange is a single partition. RAINCELL needs no
+  * key and no window (its `seq` is arithmetic), and CHAN's broadcast-joined
+  * spine writes both nodes of a pair in one pass.
   */
 object DeckFormat {
   def ljust(c: Column, n: Int): Column = rpad(c, n, " ")
@@ -42,16 +52,32 @@ object DeckFormat {
   /** Stitch sections into one ordered deck frame. */
   def stitch(sections: DataFrame*): DataFrame =
     sections.reduce(_ unionByName _)
+
+  /** One deck line a row may emit: kept when `keep` holds. */
+  final case class Line(keep: Column, section: Int, seq: Column, text: Column)
+
+  /** `(keys…, section, seq, line)`: every row of `rows` emits each of its
+    * `lines` whose `keep` holds, so a deck's header and body lines come out
+    * of one evaluation of its rows. */
+  def emit(rows: DataFrame, keys: Seq[String], lines: Line*): DataFrame = {
+    val structs = lines.map(l => struct(l.keep.as("keep"), lit(l.section).as("section"),
+      l.seq.cast("long").as("seq"), l.text.as("line")))
+    rows.select(keys.map(col) :+ inline(filter(array(structs: _*), _("keep"))): _*)
+      .drop("keep")
+  }
 }
 
 /** RAIN.DAT — cumulative rain fraction curve
   * (reference: input/rain/gen_rain.py:138-193).
   *
-  * Pipeline: dense 5-min grid (J1) → left-join series → drop missing →
-  * right-closed 15-min resample when the model is a 150 variant (A2) →
-  * negatives dropped (F5) → cumulative sum (A4) normalized by the total
-  * (A3/A5) → `R<time.3f ljust14><frac.3f> ` lines with the two-line totals
-  * header. One shuffle (grid join) + one window sort.
+  * Pipeline: dense 5-min grid (J1) → drop missing → right-closed 15-min
+  * resample when the model is a 150 variant (A2) → negatives dropped (F5) →
+  * cumulative sum (A4) normalized by the total (A3/A5) → `R<time.3f
+  * ljust14><frac.3f> ` lines with the two-line totals header. The grid join
+  * is a predicate (a row is kept when its time is a grid point), and rows
+  * that fail it still travel with their deck, so a deck whose every value
+  * drops keeps its header with a 0.000 total. One exchange by `deck_id`,
+  * one window sort.
   */
 object RainDeck {
   def lines(spark: SparkSession, series: DataFrame, startTime: String, endTime: String,
@@ -61,56 +87,61 @@ object RainDeck {
       .drop("deck_id")
 
   /** Multi-deck form: `series` carries a `deck_id` column and the result is
-    * (deck_id, section, seq, line). Every window and aggregate partitions by
-    * deck_id, so generating N basins' decks in one job spreads across N
-    * tasks instead of funneling the union through a single unpartitioned
-    * WindowExec — the per-deck sequential cumsum is inherent (one file, one
-    * running total), the cross-deck serialization is not. */
+    * (deck_id, section, seq, line). The input is partitioned once by
+    * deck_id and the resample, the windows and the header all reuse it, so
+    * N basins' decks generate in N tasks — the per-deck sequential cumsum is
+    * inherent (one file, one running total), the cross-deck serialization
+    * is not. Every deck present in `series` gets a header. */
   def linesMany(spark: SparkSession, series: DataFrame, startTime: String, endTime: String,
       targetModel: String, tiebreak: Seq[String] = Nil): DataFrame = {
     import DeckFormat._
-    val grid = TimeSeriesOps.timeGrid(spark, startTime, endTime, 5)
-    val decks = series.select("deck_id").distinct()
-    val aligned = grid.crossJoin(decks)
-      .join(series, Seq("deck_id", "time"), "left").na.drop(Seq("value"))
+    val start = lit(startTime).cast("timestamp")
+    val us = unix_micros(col("time"))
+    // J1: the left join onto the dense 5-min grid, then dropping the missing
+    // values, keeps exactly the present values at grid points of [start, end]
+    val onGrid = col("time").between(start, lit(endTime).cast("timestamp")) &&
+      (us - unix_micros(start)) % lit(300000000L) === 0 &&
+      col("value").isNotNull && !isnan(col("value"))
+    val keyed = series.withColumn("__on", onGrid).repartition(col("deck_id"))
     val stepped =
-      if (targetModel == "flo2d_150" || targetModel == "flo2d_150_v2")
-        TimeSeriesOps.resampleRightClosedSum(aligned, 900, keys = Seq("deck_id"))
-      else aligned
-    val clean = TimeSeriesOps.dropNegatives(stepped)
+      if (targetModel == "flo2d_150" || targetModel == "flo2d_150_v2") keyed
+        .groupBy(col("deck_id"),
+          TimeSeriesOps.bucketRightClosedTs(col("time"), 900).as("time"))
+        .agg(sum(when(col("__on"), col("value"))).as("value"), max(col("__on")).as("__on"))
+      else keyed
     // `tiebreak` gives the cumsum and line numbering a total order when the
     // input carries duplicate (deck_id, time) rows — without it, seq
     // assignment (and the intermediate cum values) would be shuffle-order
     // dependent, the determinism rule every other window here follows.
-    // The 150 resample path collapses duplicates by aggregation, so the
-    // tiebreak column need not survive it: ordering applies to what remains.
+    // The 150 resample collapses duplicates by aggregation, so the tiebreak
+    // columns need not survive it: ordering applies to what remains.
     val tieCols = tiebreak.filter(stepped.columns.contains)
-    val frac = TimeSeriesOps.normalizedCumulative(
-      clean, "value", "time", Seq("deck_id"), "frac", tieCols)
-    val withElapsed = frac.withColumn("elapsed_h",
-      (unix_micros(col("time")) - lit(graft.model.SlTime.microsOf(startTime))) / lit(3.6e9))
-    val rRows = withElapsed.select(
-      col("deck_id"),
-      lit(1).as("section"),
-      row_number().over(Window.partitionBy("deck_id")
-          .orderBy(("time" +: tieCols).map(col(_).asc): _*))
-        .cast("long").as("seq"),
-      concat(lit("R              "),
-        ljust(fixed(col("elapsed_h"), 3), 14),
-        fixed(col("frac"), 3), lit(" ")).as("line"))
+    // F5: negative (and NaN) values drop out of the curve and the total
+    val kept = col("__on") && !(col("value") < 0) && !isnan(col("value"))
+    val ordered = Window.partitionBy("deck_id")
+      .orderBy(("time" +: tieCols).map(col(_).asc): _*)
+    val upTo = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val keptValue = when(col("__kept"), col("value"))
+    val rows = stepped
+      .withColumn("__kept", kept)
+      .select(col("*"),
+        row_number().over(ordered).as("__n"),
+        count(when(col("__kept"), lit(1))).over(upTo).as("__seq"),
+        sum(keptValue).over(upTo).as("__cum"))
+      // summed in the same (time, tiebreak) order as the running sum
+      .withColumn("__total", sum(keptValue).over(Window.partitionBy("deck_id")))
+    val elapsedH = (us - lit(graft.model.SlTime.microsOf(startTime))) / lit(3.6e9)
+    val frac = when(col("__total") > 0, col("__cum") / col("__total")).otherwise(lit(0.0))
     // header: " 0             0 " then " {total:.3f}         5             0             0 "
-    // (reference: input/rain/gen_rain.py:188-191, note insert-at-0 order);
-    // posexplode supplies the 0/1 seq — no window needed. Decks whose rows
-    // all dropped still get a header (0.0 total) via the left join.
-    val header = decks
-      .join(clean.groupBy("deck_id").agg(sum("value").as("total")), Seq("deck_id"), "left")
-      .select(col("deck_id"), posexplode(array(
-        lit(" 0             0 "),
-        concat(lit(" "), fixed(coalesce(col("total"), lit(0.0)), 3),
-          lit("         5             0             0 ")))).as(Seq("seq0", "line")))
-      .select(col("deck_id"), lit(0).as("section"),
-        col("seq0").cast("long").as("seq"), col("line"))
-    stitch(header, rRows)
+    // (reference: input/rain/gen_rain.py:188-191, note insert-at-0 order),
+    // written by each deck's first row
+    val first = col("__n") === 1
+    emit(rows, Seq("deck_id"),
+      Line(first, 0, lit(0L), lit(" 0             0 ")),
+      Line(first, 0, lit(1L), concat(lit(" "), fixed(coalesce(col("__total"), lit(0.0)), 3),
+        lit("         5             0             0 "))),
+      Line(col("__kept"), 1, col("__seq"),
+        concat(lit("R              "), ljust(fixed(elapsedH, 3), 14), fixed(frac, 3), lit(" "))))
   }
 }
 
@@ -198,34 +229,31 @@ object InflowDeck {
     linesMany(spark, series.withColumn("deck_id", lit("0")), headLines, hRow, tiebreak)
       .drop("deck_id")
 
-  /** Multi-deck form: `series` carries a `deck_id` column; windows partition
-    * by it so N inflow decks generate in parallel in one job (the anchor min
-    * and row numbering are per-deck state, not global). `tiebreak` extends
-    * the line-numbering order past `time` so duplicate timestamps still
-    * produce a deterministic deck (sessionize's contract). */
+  /** Multi-deck form: `series` carries a `deck_id` column; one window
+    * partitioned by it numbers the rows and anchors t0, so N inflow decks
+    * generate in parallel in one job (the anchor and row numbering are
+    * per-deck state, not global), and each deck's first row writes its head
+    * lines. `tiebreak` extends the line-numbering order past `time` so
+    * duplicate timestamps still produce a deterministic deck (sessionize's
+    * contract). */
   def linesMany(spark: SparkSession, series: DataFrame,
       headLines: Seq[String],
       hRow: (Column, Column) => Column = genHRow,
       tiebreak: Seq[String] = Nil): DataFrame = {
     import DeckFormat._
-    val byDeck = Window.partitionBy("deck_id")
-    val anchored = series
-      .withColumn("rn", row_number().over(
-        byDeck.orderBy(("time" +: tiebreak).map(col(_).asc): _*)))
-      .withColumn("elapsed_h",
-        (unix_micros(col("time")) - min(unix_micros(col("time"))).over(byDeck))
-          / lit(3.6e9))
-      .filter(col("rn") > 1)
-    val hRows = anchored.select(
-      col("deck_id"),
-      lit(1).as("section"), col("rn").cast("long").as("seq"),
-      hRow(col("elapsed_h"), col("value")).as("line"))
-    val heads = series.select("deck_id").distinct()
-      .select(col("deck_id"),
-        posexplode(typedlit(headLines.toSeq)).as(Seq("seq0", "line")))
-      .select(col("deck_id"), lit(0).as("section"),
-        col("seq0").cast("long").as("seq"), col("line"))
-    stitch(heads, hRows)
+    val ordered = Window.partitionBy("deck_id")
+      .orderBy(("time" +: tiebreak).map(col(_).asc): _*)
+    // in time order the running minimum is the deck's first time: t0
+    val rows = series.select(col("*"),
+      row_number().over(ordered).as("__n"),
+      min(unix_micros(col("time")))
+        .over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("__t0"))
+    val elapsedH = (unix_micros(col("time")) - col("__t0")) / lit(3.6e9)
+    val heads = headLines.zipWithIndex.map { case (l, i) =>
+      Line(col("__n") === 1, 0, lit(i.toLong), lit(l))
+    }
+    emit(rows, Seq("deck_id"),
+      heads :+ Line(col("__n") > 1, 1, col("__n"), hRow(elapsedH, col("value"))): _*)
   }
 }
 
@@ -235,8 +263,9 @@ object InflowDeck {
   * `boundaries` = (block_order INT, cell STRING); `tides` = (cell, time,
   * value) raw per-boundary series. The elapsed-hours anchor is the FIRST raw
   * row (sentinels included — reference anchors `tide_ts[0][0]` before the
-  * −99999 skip); sentinel rows are then dropped (F3). Four small per-boundary
-  * frames union into one deck (§2.7).
+  * −99999 skip); sentinel rows are then dropped (F3). The S rows of every
+  * boundary come out of one pass over the tides partitioned by cell and
+  * union with the K and N lines into one deck (§2.7).
   */
 object OutflowDeck {
   def lines(spark: SparkSession, boundaries: DataFrame, tides: DataFrame,
@@ -248,18 +277,25 @@ object OutflowDeck {
       lit(1).as("section"),
       (col("block_order").cast("long") * 1000000L).as("seq"),
       concat(lit("N"), rjust(col("cell"), 16), rjust(lit("1"), 16)).as("line"))
-    val anchor = Window.partitionBy("cell")
+    // boundaries are dimension-sized (a handful of cells): a literal
+    // cell → block-orders map stands in for a broadcast join; a cell listed
+    // twice still writes its rows under both blocks, an unlisted one none
+    val blockOrders = typedlit(boundaries.select(col("cell"), col("block_order").cast("long"))
+      .collect().toSeq.groupMap(_.getString(0))(_.getLong(1)))
+    val ordered = Window.partitionBy("cell")
+      .orderBy(("time" +: tiebreak).map(col(_).asc): _*)
+    // one window: in time order the running minimum is the anchor t0
     val sRows = tides
-      .withColumn("t0_us", min(unix_micros(col("time"))).over(anchor))
-      .withColumn("rn", row_number().over(Window.partitionBy("cell")
-        .orderBy(("time" +: tiebreak).map(col(_).asc): _*)))
+      .select(col("*"), row_number().over(ordered).as("rn"),
+        min(unix_micros(col("time")))
+          .over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("t0_us"))
       // exact double equality, like the reference's `== -99999` — an int
       // cast would also drop legitimate values truncating to -99999
       .filter(col("value") =!= lit(Sentinels.InvalidTide))
-      .join(boundaries, Seq("cell"))
+      .withColumn("block_order", explode(blockOrders(col("cell"))))
       .select(
         lit(1).as("section"),
-        (col("block_order").cast("long") * 1000000L + col("rn")).as("seq"),
+        (col("block_order") * 1000000L + col("rn")).as("seq"),
         concat(lit("S"),
           rjust(fixed((unix_micros(col("time")) - col("t0_us")) / lit(3.6e9), 3), 16),
           rjust(fixed(col("value"), 3), 16)).as("line"))
@@ -339,6 +375,8 @@ object OutflowConfig {
   * (S3): blocks are the right-closed timestep buckets, each cell row gets the
   * model's water-supply correction (X12), a blank line closes each block.
   * Ordered by (timestep, cell); the header carries timestep count and range.
+  * No window and no exchange: every line's `seq` is arithmetic, and the
+  * blank lines come from the steps present, deduplicated in one task.
   */
 object RaincellDeck {
   def lines(spark: SparkSession, cells: DataFrame, startTime: String, endTime: String,
@@ -371,11 +409,14 @@ object RaincellDeck {
       (unix_seconds(col("step")) * 4000000L + guardedCell).as("seq"),
       concat(col("cell_id").cast("string"), lit(" "),
         fixed(col("value") + lit(waterSupply), 3)).as("line"))
-    val blanks = stepped.select("step").distinct().select(
+    // one blank per step present: the steps (at most `length` of them)
+    // deduplicate in one task of the same stage as the cell lines, reading
+    // only the time column — no exchange and no job of their own
+    val blanks = stepped.select("step").coalesce(1).distinct().select(
       lit(1).as("section"),
       (unix_seconds(col("step")) * 4000000L + 3999999L).as("seq"),
       lit("").as("line"))
-    stitch(header, cellRows, blanks)
+    stitch(header, blanks, cellRows)
   }
 
 }
@@ -406,27 +447,27 @@ object ChanDeck {
       conditions: DataFrame, obsFirstWl: DataFrame,
       headLines: Seq[String], tailLines: Seq[String],
       bodyRow: (Column, Column) => Column = genBodyRow): DataFrame = {
+    // one broadcast of the observations serves both the upstream and the
+    // downstream lookup
+    val wl = broadcast(obsFirstWl.select(col("wl_id").as("__obs_id"), col("wl")))
+    val (upObs, downObs) = (wl.as("__up"), wl.as("__down"))
     val joined = bodyPairs
       .withColumn("grid_id",
         concat_ws("_", lit(model), col("up"), col("down")))
       .join(broadcast(conditions), Seq("grid_id"), "left")
-      .join(broadcast(obsFirstWl.select(col("wl_id"), col("wl").as("up_wl"))),
-        Seq("wl_id"), "left")
-      .join(broadcast(obsFirstWl.select(col("wl_id").as("wl_id_dwn"),
-        col("wl").as("down_wl"))), Seq("wl_id_dwn"), "left")
+      .join(upObs, col("wl_id") === col("__up.__obs_id"), "left")
+      .join(downObs, col("wl_id_dwn") === col("__down.__obs_id"), "left")
+    val (upWl, downWl) = (col("__up.wl"), col("__down.wl"))
     // reference :163-178 — when no downstream id exists, the upstream
     // observation (if any) is written for BOTH nodes of the pair
-    val upVal = coalesce(col("up_wl"), col("up_default").cast("string"))
-    val downVal = when(col("wl_id_dwn").isNull, coalesce(col("up_wl"), col("down_default").cast("string")))
-      .otherwise(coalesce(col("down_wl"), col("down_default").cast("string")))
-    val body = joined.select(
-      lit(1).as("section"),
-      (col("pair_idx").cast("long") * 2).as("seq"),
-      bodyRow(col("up"), upVal).as("line"))
-      .unionByName(joined.select(
-        lit(1).as("section"),
-        (col("pair_idx").cast("long") * 2 + 1).as("seq"),
-        bodyRow(col("down"), downVal).as("line")))
+    val upVal = coalesce(upWl, col("up_default").cast("string"))
+    val downVal = when(col("wl_id_dwn").isNull, coalesce(upWl, col("down_default").cast("string")))
+      .otherwise(coalesce(downWl, col("down_default").cast("string")))
+    // both nodes of a pair from one evaluation of the joined spine
+    val pair = col("pair_idx").cast("long") * 2
+    val body = emit(joined, Nil,
+      Line(lit(true), 1, pair, bodyRow(col("up"), upVal)),
+      Line(lit(true), 1, pair + 1, bodyRow(col("down"), downVal)))
     stitch(literalLines(spark, 0, headLines), body, literalLines(spark, 2, tailLines))
   }
 }

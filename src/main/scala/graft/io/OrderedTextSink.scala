@@ -9,16 +9,25 @@ import org.apache.spark.sql.functions._
   *
   * The reference builds each DAT deck by appending formatted lines to one
   * local file (reference: input/raincell/gen_raincell.py:35-42,
-  * input/outflow/gen_outflow.py:39-52). Distributed equivalent: global sort
-  * on the deck's (section, seq) keys, then a single ordered text write.
+  * input/outflow/gen_outflow.py:39-52). Distributed equivalent: every
+  * upstream task formats its own lines and shuffles them to one partition,
+  * which sorts them on the deck's (section, seq) keys and streams the file.
   *
-  * Scale posture: the sort is a range-partitioned shuffle (scales to any
-  * input); only the final merge is single-stream, which is inherent to
-  * "one text file" output. For decks too large for one stream, use
-  * `writePartFiles` and concatenate parts — part file names preserve range
-  * order.
+  * Scale posture: formatting stays parallel; the sort spills past memory,
+  * and the one sorted stream is inherent to "one text file" output. There is
+  * no global `orderBy`: its range partitioner samples the keys by
+  * recomputing the whole upstream, only for one writer to read every range
+  * in turn anyway.
   */
 object OrderedTextSink {
+
+  /** The one sorted partition of `lineCol` that [[writeSingleFile]] writes:
+    * a single-partition exchange, then a sort within it. */
+  def singleStream(df: DataFrame, orderCols: Seq[String] = Seq("section", "seq"),
+      lineCol: String = "line"): DataFrame =
+    df.repartition(1)
+      .sortWithinPartitions(orderCols.map(col): _*)
+      .select(col(lineCol))
 
   /** Sort by `orderCols` and write `lineCol` as ONE text file at `path`.
     * Writes through a temp directory then moves the single part file. */
@@ -26,10 +35,7 @@ object OrderedTextSink {
       orderCols: Seq[String] = Seq("section", "seq"),
       lineCol: String = "line"): Unit = {
     val tmp = path + ".__tmp__"
-    df.orderBy(orderCols.map(col): _*)
-      .select(col(lineCol))
-      .coalesce(1)
-      .write.mode("overwrite").text(tmp)
+    singleStream(df, orderCols, lineCol).write.mode("overwrite").text(tmp)
     val listing = Files.list(Paths.get(tmp))
     val part =
       try listing.toArray.map(_.toString)
@@ -38,16 +44,6 @@ object OrderedTextSink {
     Files.move(Paths.get(part), Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
     deleteRecursively(Paths.get(tmp))
   }
-
-  /** Range-ordered multi-part write: `part-00000` holds the lowest key range.
-    * Concatenating parts in name order reproduces the exact deck. */
-  def writePartFiles(df: DataFrame, dir: String, numParts: Int,
-      orderCols: Seq[String] = Seq("section", "seq"),
-      lineCol: String = "line"): Unit =
-    df.repartitionByRange(numParts, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .select(col(lineCol))
-      .write.mode("overwrite").text(dir)
 
   /** Idempotency guard (K6): reference skips generation when the target file
     * already exists (reference: input/raincell/gen_raincell.py:246-260). */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,25 +15,9 @@ import org.apache.spark.sql.functions._
   *  - series-local windows (`cumulativeSum`, `anchorElapsedHours`) partition
   *    by series id so each series sorts within one task; a window without a
   *    partition key would funnel all data through a single task.
-  *  - `timeGrid` is generated, not materialized on the driver.
   *  - joins against dimensions are expected to be broadcast by the caller.
   */
 object TimeSeriesOps {
-
-  /** Dense time grid (J1) — replaces the reference's pandas
-    * `date_range(start, end, freq)` (reference: input/rain/gen_rain.py:141-153).
-    * Inclusive of both endpoints, like pandas.
-    */
-  def timeGrid(spark: SparkSession, startTs: String, endTs: String, stepMinutes: Int): DataFrame =
-    spark.sql(
-      s"SELECT explode(sequence(TIMESTAMP '$startTs', TIMESTAMP '$endTs'," +
-        s" INTERVAL $stepMinutes MINUTE)) AS time")
-
-  /** Left-join a series onto a dense grid (J1): grid times with no data get
-    * null values (dropped or filled downstream, reference:
-    * input/rain/gen_rain.py:141-153). */
-  def alignToGrid(grid: DataFrame, series: DataFrame, timeCol: String = "time"): DataFrame =
-    grid.join(series, Seq(timeCol), "left")
 
   /** Right-closed bucket label (A2 helper): maps `time` to the RIGHT edge of
     * its `(t-step, t]` tumbling bucket. Pure long arithmetic via `pmod` — no

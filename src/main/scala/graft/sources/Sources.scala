@@ -116,9 +116,16 @@ object Sources {
       .select(col("time"), col("value"))
 
   /** Max-time lookup (S2/A1; reference: input/raincell/gen_raincell.py:100-102):
-    * the scan-clamping scalar, computed as one pushdown-friendly aggregate. */
-  def maxTime(series: DataFrame, timeCol: String = "time"): Option[java.sql.Timestamp] =
-    Option(series.agg(max(col(timeCol))).head.getTimestamp(0))
+    * the scan-clamping scalar. Each task reduces its own rows and the driver
+    * the per-task maxima: one job, where a global aggregate adds an exchange
+    * stage. */
+  def maxTime(series: DataFrame, timeCol: String = "time"): Option[java.sql.Timestamp] = {
+    def later(a: Option[java.sql.Timestamp], b: Option[java.sql.Timestamp]) =
+      if (a.isEmpty || b.exists(_.after(a.get))) b else a
+    series.select(col(timeCol).cast("timestamp")).rdd
+      .aggregate(Option.empty[java.sql.Timestamp])(
+        (m, r) => later(m, Option(r.getTimestamp(0))), later)
+  }
 
   /** First value in `[start, start+window]` (S4; reference:
     * input/chan/gen_chan.py:68-75): min_by keeps it a single aggregate, no

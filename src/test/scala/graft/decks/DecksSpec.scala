@@ -60,6 +60,23 @@ class DecksSpec extends SparkSpec {
       "R" + sp(14) + "0.500" + sp(9) + "1.000 "))
   }
 
+  test("RAIN.DAT: every value dropped still writes both header lines with a 0.000 total") {
+    val header = Seq(" 0             0 ", " 0.000         5             0             0 ")
+    val negative = Seq(
+      (ts("2024-01-01 00:05:00"), -1.0),
+      (ts("2024-01-01 00:10:00"), -2.5)).toDF("time", "value")
+    Seq("flo2d_250", "flo2d_150").foreach { m =>
+      assert(render(RainDeck.lines(spark, negative,
+        "2024-01-01 00:00:00", "2024-01-01 01:00:00", m)) === header, m)
+    }
+    // no row in the window: one after the end, one between grid points
+    val outside = Seq(
+      (ts("2024-01-02 00:05:00"), 1.0),
+      (ts("2024-01-01 00:07:00"), 2.0)).toDF("time", "value")
+    assert(render(RainDeck.lines(spark, outside,
+      "2024-01-01 00:00:00", "2024-01-01 01:00:00", "flo2d_250")) === header)
+  }
+
   test("INFLOW.DAT: head lines + anchored %.1f H rows, first row skipped (W3)") {
     val series = Seq(
       (ts("2024-01-01 10:00:00"), 5.0),
@@ -74,6 +91,30 @@ class DecksSpec extends SparkSpec {
       "H               0               0",
       "H" + sp(13) + "1.0" + sp(13) + "6.3",
       "H" + sp(13) + "2.5" + sp(13) + "7.0"))
+  }
+
+  test("INFLOW.DAT: an anchor-only series yields the head lines only; an empty one nothing") {
+    val anchorOnly = Seq((ts("2024-01-01 10:00:00"), 5.0)).toDF("time", "value")
+    assert(render(InflowDeck.lines(spark, anchorOnly)) === Seq(
+      "0           41550",
+      "C               0           41550",
+      "H               0               0"))
+    // the head lines are written by the deck's first row: a series with no
+    // row at all writes no line
+    val empty = Seq.empty[(Timestamp, Double)].toDF("time", "value")
+    assert(render(InflowDeck.lines(spark, empty)).isEmpty)
+  }
+
+  test("INFLOW.DAT res dialect: `H` + 13sp + elapsed.ljust(14) + str(value)") {
+    val series = Seq(
+      (ts("2024-01-01 10:00:00"), 5.0),
+      (ts("2024-01-01 11:00:00"), 6.25),
+      (ts("2024-01-01 12:30:00"), 7.0)
+    ).toDF("time", "value")
+    assert(render(InflowDeck.lines(spark, series, Seq("HEAD"), InflowDeck.resHRow)) === Seq(
+      "HEAD",
+      "H" + sp(13) + "1.0" + sp(11) + "6.25",
+      "H" + sp(13) + "2.5" + sp(11) + "7.0"))
   }
 
   test("INFLOW.DAT 250: header cells + observed-WL tail rows (default 0.5)") {
@@ -113,6 +154,25 @@ class DecksSpec extends SparkSpec {
       "S" + sp(11) + "0.500" + sp(11) + "0.570"))
   }
 
+  test("OUTFLOW.DAT res dialect: left-aligned K/N, contiguous S numbering, trimmed values, tail") {
+    val boundaries = Seq((0, "330"), (1, "1282")).toDF("block_order", "cell")
+    val tides = Seq(
+      ("330", ts("2024-01-01 00:00:00"), -99999.0), // sentinel: dropped before numbering
+      ("330", ts("2024-01-01 01:00:00"), 0.452),
+      ("1282", ts("2024-01-01 00:00:00"), 0.52),
+      ("1282", ts("2024-01-01 00:30:00"), 2.0)
+    ).toDF("cell", "time", "value")
+    val lines = render(OutflowDeck.linesRes(spark, boundaries, tides, Seq("268"), Seq("TAIL A")))
+    assert(lines === Seq(
+      "K" + sp(14) + "268",
+      "N" + sp(14) + "330" + sp(11) + "1 ",
+      "S" + sp(14) + "1" + sp(13) + "0.452 ",
+      "N" + sp(14) + "1282" + sp(10) + "1 ",
+      "S" + sp(14) + "1" + sp(13) + "0.52 ",
+      "S" + sp(14) + "2" + sp(13) + "2.0 ",
+      "TAIL A"))
+  }
+
   test("RAINCELL.DAT: header + right-closed blocks + water-supply + blank separators") {
     val cells = Seq(
       (ts("2024-01-01 00:05:00"), 7, 0.0),
@@ -150,6 +210,23 @@ class DecksSpec extends SparkSpec {
       "10" + sp(7) + "9.1", "11" + sp(7) + "9.9",
       "20" + sp(7) + "8.8", "21" + sp(7) + "8.8",
       "30" + sp(7) + "3.5", "31" + sp(7) + "3.2",
+      "TAIL"))
+  }
+
+  test("CHAN.DAT res dialect: ' ' + cell + 4sp + value, leading zero of 0.x stripped") {
+    val pairs = Seq(
+      (0, "10", 1.5, "11", 0.5),
+      (1, "20", 2.5, "21", 0.25)
+    ).toDF("pair_idx", "up", "up_default", "down", "down_default")
+    val conditions = Seq(("m_10_11", "wlA", null.asInstanceOf[String]))
+      .toDF("grid_id", "wl_id", "wl_id_dwn")
+    val obs = Seq(("wlA", "0.798")).toDF("wl_id", "wl")
+    val lines = render(ChanDeck.lines(spark, "m", pairs, conditions, obs,
+      Seq("HEAD"), Seq("TAIL"), ChanDeck.resBodyRow))
+    assert(lines === Seq(
+      "HEAD",
+      " 10    .798", " 11    .798", // no downstream id: the upstream obs for both
+      " 20    2.5", " 21    .25",   // no condition row: template defaults
       "TAIL"))
   }
 
@@ -198,13 +275,14 @@ class DecksSpec extends SparkSpec {
     assert(!OrderedTextSink.ifAbsent(path) { fail("must not regenerate") })
   }
 
-  test("OrderedTextSink: range-ordered part files concatenate to the deck") {
-    val dir = Files.createTempDirectory("deckparts").toString + "/out"
-    val df = (0 until 100).map(i => (1, i.toLong, s"line-$i")).toDF("section", "seq", "line")
-    OrderedTextSink.writePartFiles(df, dir, numParts = 4)
-    val parts = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val all = parts.flatMap(f => Files.readAllLines(f.toPath).toArray.map(_.toString))
-    assert(all.toSeq === (0 until 100).map(i => s"line-$i"))
+  test("OrderedTextSink: keys interleaved across partitions write one globally ordered file") {
+    val rows = (0 until 300).map(i => (i % 3, i.toLong, s"${i % 3}-$i"))
+    val df = scala.util.Random.javaRandomToRandom(new java.util.Random(7)).shuffle(rows)
+      .toDF("section", "seq", "line").repartition(5)
+    assert(df.rdd.getNumPartitions >= 4)
+    val path = Files.createTempDirectory("deckorder").toString + "/DECK.DAT"
+    OrderedTextSink.writeSingleFile(df, path)
+    assert(Files.readAllLines(java.nio.file.Paths.get(path)).toArray.toSeq ===
+      rows.sortBy { case (s, q, _) => (s, q) }.map(_._3))
   }
 }

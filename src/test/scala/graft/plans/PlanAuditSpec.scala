@@ -610,6 +610,38 @@ class PlanAuditSpec extends SparkSpec {
       "no deck input is large enough to justify a sort-merge join:\n" + plan.take(1200))
   }
 
+  // The Exchanges (shuffle and broadcast; reuses not counted) each deck
+  // query evaluates. Later changes may lower a count, never raise it.
+  private val DeckExchanges = Seq("q_deck_raincell" -> 2, "q_deck_rain" -> 2,
+    "q_deck_inflow" -> 1, "q_deck_outflow" -> 1, "q_deck_chan" -> 3)
+  private val ExchangeLine = """^[\s:+-]*(Broadcast)?Exchange """.r
+  private def exchanges(plan: String): Int =
+    plan.linesIterator.count(ExchangeLine.findFirstIn(_).nonEmpty)
+  private def singlePartitionExchanges(plan: String): Int =
+    "Exchange SinglePartition".r.findAllIn(plan).length
+
+  test("each q_deck_* query evaluates no more Exchanges than pinned") {
+    DeckExchanges.foreach { case (name, pinned) =>
+      val plan = executedPlan(name)
+      assert(exchanges(plan) <= pinned,
+        s"$name plans ${exchanges(plan)} Exchanges, pinned at $pinned:\n" + plan.take(3000))
+    }
+  }
+
+  test("the single-file deck write adds one SinglePartition exchange and no range sample") {
+    DeckExchanges.foreach { case (name, _) =>
+      val deck = graft.SparkEntry.queries(name)(spark, Sf)
+      val stream = graft.io.OrderedTextSink.singleStream(deck)
+      stream.collect()
+      val plan = org.apache.spark.sql.GraftBridge.finalPlanString(stream)
+      assert(singlePartitionExchanges(plan) == singlePartitionExchanges(executedPlan(name)) + 1,
+        s"$name: the write must add exactly one SinglePartition exchange:\n" + plan.take(3000))
+      assert(!plan.contains("rangepartitioning"),
+        s"$name: the write must not range-partition (its sample recomputes the deck):\n" +
+          plan.take(3000))
+    }
+  }
+
   test("q_mm_frames decodes in one map chain — no shuffle before the frame rows") {
     val plan = executedPlan("q_mm_frames")
     assert(!plan.contains("Exchange"),

@@ -215,7 +215,8 @@ object Scale {
     },
 
     // ---- a 4-day TIMDEP report (96 blocks × 39,526 cells, 3.79 M lines),
-    // parsed by the window path and by the carry path: same rows.
+    // parsed by the window path and by the carry path: same rows; and by
+    // the carry path keeping 20 stations, densified like the full parse.
     section("timdep_parse_scale") { c => import c._
       val cells = 39526
       val blocks = 96 * mult
@@ -244,10 +245,24 @@ object Scale {
       require(window == carry, s"window and carry parses differ: $window vs $carry")
       require(carry.getLong(0) == blocks.toLong * cells,
         s"expected ${blocks.toLong * cells} rows, got ${carry.getLong(0)}")
+      // the extraction's parse: 20 flood-plain stations spread over the
+      // grid, kept in pass 1, then densified — the same rows as densifying
+      // the full parse
+      val stations = (1 to 20).map(i => (i * 1973 % cells + 1).toString)
+      val wanted = spark.createDataFrame(stations.map(Tuple1(_))).toDF("element")
+      val (filtered, fw) = measure(spark)(digest(parsers.fillMissing(
+        parsers.parseTimdepFile(spark, single, stations = Some(stations.toSet)), wanted)))
+      val unfiltered = digest(parsers.fillMissing(parsers.parseTimdepFile(spark, single), wanted))
+      require(filtered == unfiltered,
+        s"station-filtered and full parses densify differently: $filtered vs $unfiltered")
+      require(filtered.getLong(0) == blocks.toLong * stations.size,
+        s"expected ${blocks.toLong * stations.size} densified rows, got ${filtered.getLong(0)}")
       Seq("blocks" -> blocks, "rows" -> carry.getLong(0),
         "window_seconds" -> ww.seconds, "carry_seconds" -> cw.seconds,
         "window_rows_per_sec" -> (carry.getLong(0) / ww.seconds).toLong,
-        "carry_rows_per_sec" -> (carry.getLong(0) / cw.seconds).toLong)
+        "carry_rows_per_sec" -> (carry.getLong(0) / cw.seconds).toLong,
+        "stations" -> stations.size, "station_rows" -> filtered.getLong(0),
+        "station_parse_seconds" -> fw.seconds)
     },
 
     // ---- transitive near-dup keepers over the 20×-replicated corpus:

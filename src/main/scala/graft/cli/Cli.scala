@@ -229,10 +229,12 @@ object GenChan {
   *
   * Evaluate-once contract: the enriched batch (parsed, densified,
   * cell-mapped, series ids attached) is persisted before its first use and
-  * feeds the forecast upsert, the station-dimension check and the run-table
-  * aggregate from that one evaluation. It is released in a `finally` when
-  * the bookkeeping returns or throws, so a cron service running one
-  * extraction after another keeps no batch cached between runs. */
+  * feeds the forecast upsert and then one aggregate, which runs the
+  * station-dimension check and the run-table rows together, from that one
+  * evaluation. It is released in a `finally` when the bookkeeping returns
+  * or throws, so a cron service running one extraction after another keeps
+  * no batch cached between runs. Without `--fgt`, the forecast time is
+  * HYCHAN's modification time on its Hadoop file system. */
 object ExtractForecast {
   def main(args: Array[String]): Unit =
     CliArgs.withSession("extract_forecast")(run(_, CliArgs.parse(args)))
@@ -244,7 +246,7 @@ object ExtractForecast {
     val utcOffset = a.getOrElse("utc-offset", "")
     val fgt = a.getOrElse("fgt",
       SlTime.utcToSl(new java.sql.Timestamp(
-        new java.io.File(a("hychan")).lastModified)).toString.stripSuffix(".0"))
+        ExtractPipeline.modifiedAt(spark, a("hychan")))).toString.stripSuffix(".0"))
     val channelMap = Sources.cellMapJson(spark, a("cellmap"), "CHANNEL")
     val ch = ExtractPipeline.channelSeries(
       spark, a("hychan"), a("base"), channelMap, valueIndex, cutoff, utcOffset)
@@ -271,13 +273,14 @@ object ExtractForecast {
           case Some(stType) =>
             val stations = graft.io.FcstDims.outputStations(
               a("url"), stType, a.getOrElse("station-table", "station"))
-            val withSt = ExtractPipeline.withStationDims(enriched, stations)
             val dims = graft.io.FcstDims.RunDimIds(
               a.getOrElse("sim-tag", "daily_run"),
               a.getOrElse("source-id", "0").toLong,
               a.getOrElse("unit-id", "0").toLong,
               a.getOrElse("variable-id", "0").toLong)
-            ExtractPipeline.updateRunTableFull(withSt, a("url"), runTable, dims)
+            // one aggregate: the station check and the run rows together
+            ExtractPipeline.updateRunTableFull(
+              ExtractPipeline.stationColumns(enriched, stations), a("url"), runTable, dims)
           case None =>
             ExtractPipeline.updateRunTable(enriched, a("url"), runTable)
         }

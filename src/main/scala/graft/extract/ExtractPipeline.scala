@@ -19,9 +19,13 @@ import graft.ops.TimeSeriesOps
   * [[updateRunTable]] / [[updateRunTableFull]] each run one action over the
   * frame they are given and cache nothing themselves. A caller that feeds
   * one batch to several of them persists it first and releases it when the
-  * last one returns or throws — [[graft.cli.ExtractForecast]] does, so the
-  * parse, densify and cell-map joins run once per extraction, not once per
-  * consumer.
+  * last one returns or throws — [[graft.cli.ExtractForecast]] does, so each
+  * output file is read once per extraction and the densify runs once, not
+  * once per consumer. Its bookkeeping is one action too:
+  * [[updateRunTableFull]] over [[stationColumns]] runs the station check
+  * and the run-row aggregate together. Each series builder collects its
+  * cell map once; the parse, labels and densify take the station set from
+  * that one collect.
   */
 object ExtractPipeline {
 
@@ -34,12 +38,13 @@ object ExtractPipeline {
   def channelSeries(spark: SparkSession, hychanPath: String, baseTime: String,
       cellMap: DataFrame, valueIndex: Int = 1,
       cutoff: Option[String] = None, utcOffset: String = ""): DataFrame = {
+    val cells = cellsOf(cellMap)
     val parsed =
       if (isSingleFile(spark, hychanPath))
-        FloOutputParsers.parseHychanFile(spark, hychanPath, valueIndex)
+        FloOutputParsers.parseHychanFile(spark, hychanPath, valueIndex, Some(cells.keySet))
       else FloOutputParsers.parseHychan(
         FloOutputParsers.readLines(spark, hychanPath), valueIndex)
-    enrich(parsed, baseTime, cellMap, cutoff, utcOffset)
+    enrich(parsed, baseTime, cells, cutoff, utcOffset)
   }
 
   /** Flood-plain series from TIMDEP.OUT, densified with −999 for stations
@@ -47,34 +52,56 @@ object ExtractPipeline {
   def floodPlainSeries(spark: SparkSession, timdepPath: String, baseTime: String,
       cellMap: DataFrame, cutoff: Option[String] = None,
       utcOffset: String = ""): DataFrame = {
+    val cells = cellsOf(cellMap)
     val parsed =
       if (isSingleFile(spark, timdepPath))
-        FloOutputParsers.parseTimdepFile(spark, timdepPath)
+        FloOutputParsers.parseTimdepFile(spark, timdepPath, stations = Some(cells.keySet))
       else FloOutputParsers.parseTimdep(
         FloOutputParsers.readLines(spark, timdepPath))
-    val filled = FloOutputParsers.fillMissing(
-      parsed, cellMap.select(col("cell_no").as("element")))
-    enrich(filled, baseTime, cellMap, cutoff, utcOffset)
+    enrich(FloOutputParsers.densify(parsed, cells.keys.toSeq), baseTime, cells,
+      cutoff, utcOffset)
   }
 
-  /** Whether `path` is exactly one regular file on its Hadoop file system
-    * (a plain path or a `file:`, `hdfs:` or `s3a:` URI). One file takes the
-    * carry-based parallel parse; a directory, a glob or a missing path takes
-    * the window path, which parallelizes across files. */
+  /** A cell map `(cell_no, label, kind)` on the driver, keyed by cell_no (a
+    * JSON map's keys, so unique). It is a station map: collected once per
+    * series, it filters the parse and labels the rows as literals. */
+  private def cellsOf(cellMap: DataFrame): Map[String, (String, String)] =
+    cellMap.select(col("cell_no").cast("string"), col("label").cast("string"),
+        col("kind").cast("string"))
+      .collect().map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
+
+  /** The Hadoop status of `path` — a plain path or a `file:`, `hdfs:` or
+    * `s3a:` URI — or None when nothing is there. */
+  private def status(spark: SparkSession, path: String): Option[org.apache.hadoop.fs.FileStatus] =
+    try Some(graft.io.LakeMerge.hadoopFs(spark, path)
+      .getFileStatus(new org.apache.hadoop.fs.Path(path)))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Whether `path` is exactly one regular file on its Hadoop file system.
+    * One file takes the carry-based parallel parse; a directory, a glob or
+    * a missing path takes the window path, which parallelizes across
+    * files. */
   private[extract] def isSingleFile(spark: SparkSession, path: String): Boolean =
-    try graft.io.LakeMerge.hadoopFs(spark, path)
-      .getFileStatus(new org.apache.hadoop.fs.Path(path)).isFile
-    catch { case _: java.io.FileNotFoundException => false }
+    status(spark, path).exists(_.isFile)
+
+  /** When `path` was last modified (epoch ms) on its Hadoop file system:
+    * an extraction's default forecast time. Fails naming the path when
+    * nothing is there. */
+  def modifiedAt(spark: SparkSession, path: String): Long =
+    status(spark, path).map(_.getModificationTime).getOrElse(
+      throw new IllegalArgumentException(s"[extract] no such file: $path"))
 
   /** `utcOffset` is the reference's `[+-]HH:MM` config string (empty = no
     * shift, like getUTCOffset's default=True path): every series point moves
     * by the offset BEFORE the horizon filter, so `cutoff` is compared in
     * post-shift wall-clock — the reference shifts its extract boundary the
     * same way (output/extract_water_level.py:176-191). */
-  private def enrich(parsed: DataFrame, baseTime: String, cellMap: DataFrame,
-      cutoff: Option[String], utcOffset: String = ""): DataFrame = {
-    val withStation = parsed
-      .join(broadcast(cellMap), parsed("element") === cellMap("cell_no"))
+  private def enrich(parsed: DataFrame, baseTime: String,
+      cells: Map[String, (String, String)], cutoff: Option[String],
+      utcOffset: String): DataFrame = {
+    val cell = typedLit(cells).apply(col("element"))
+    val withStation = parsed.filter(col("element").isin(cells.keys.toSeq: _*))
+      .withColumn("label", cell("_1")).withColumn("kind", cell("_2"))
     val timed = FloOutputParsers.stepToTimestamp(withStation, baseTime,
       offsetMicros = FloOutputParsers.utcOffsetMicros(utcOffset))
     cutoff.fold(timed)(c => TimeSeriesOps.horizonFilter(timed, lit(c).cast("timestamp")))
@@ -96,23 +123,37 @@ object ExtractPipeline {
     * output station's id and "%.6f" coordinates from the station dim, keyed
     * by the element number leading the station name — the shape
     * [[graft.io.FcstDims.outputStations]] returns. Elements missing from the
-    * dim FAIL LOUDLY: the reference would NPE on `flo2d_stations.get(...)`;
-    * silently dropping a station's series is worse than either. */
+    * dim FAIL LOUDLY, here at once: the reference would NPE on
+    * `flo2d_stations.get(...)`; silently dropping a station's series is
+    * worse than either. */
   def withStationDims(series: DataFrame,
       stations: Map[String, (Long, String, String)]): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    val dim = stations.toSeq.map { case (el, (id, lat, lon)) => (el, id, lat, lon) }
-      .toDF("element", "station_id", "latitude", "longitude")
-    val joined = series.join(broadcast(dim), Seq("element"), "left")
-    val missing = joined.filter(col("station_id").isNull)
-      .select("element").distinct().limit(6).collect().map(_.getString(0))
-    if (missing.nonEmpty)
+    val patched = stationColumns(series, stations)
+    requireStations(patched.filter(col("station_id").isNull)
+      .select("element").distinct().limit(6).collect().map(_.getString(0)))
+    patched
+  }
+
+  /** [[withStationDims]]'s columns, unchecked and lazy: the station dim is
+    * dimension-sized, so it rides in the plan as a literal map, not a join.
+    * [[updateRunTableFull]] runs the same check in its own aggregate. */
+  def stationColumns(series: DataFrame,
+      stations: Map[String, (Long, String, String)]): DataFrame = {
+    val station = typedLit(stations).apply(col("element"))
+    series.withColumn("station_id", station("_1"))
+      .withColumn("latitude", station("_2"))
+      .withColumn("longitude", station("_3"))
+  }
+
+  /** The station check: fails naming up to five of `missing`, the elements
+    * that have no registered output station. */
+  private def requireStations(missing: Seq[String]): Unit = {
+    val names = missing.distinct.sorted
+    if (names.nonEmpty)
       throw new IllegalArgumentException(
         "[extract] elements with no registered output station: " +
-          missing.take(5).mkString(", ") + (if (missing.length > 5) ", …" else "") +
+          names.take(5).mkString(", ") + (if (names.length > 5) ", …" else "") +
           " — run InitDims registration first")
-    joined
   }
 
   /** Sink the enriched frame into the forecast store keyed
@@ -159,17 +200,20 @@ object ExtractPipeline {
     * registrations carry the reference's complete run row — sim_tag and the
     * station/source/unit/variable dimension ids
     * (output/extract_water_level.py:206-217 insert_run with tms_meta).
-    * `series` must already carry `station_id` (see [[withStationDims]]);
-    * station_id is functionally dependent on tms_id (one element per
-    * series), so the per-series aggregate takes its max only to satisfy the
-    * grouping. */
+    * `series` must carry `station_id` (see [[stationColumns]]); station_id
+    * is functionally dependent on tms_id (one element per series), so the
+    * per-series aggregate takes its max only to satisfy the grouping. That
+    * one aggregate also runs the station check, before any run row is
+    * written. */
   def updateRunTableFull(series: DataFrame, url: String, runTable: String,
       dims: graft.io.FcstDims.RunDimIds,
       props: java.util.Properties = new java.util.Properties()): Unit = {
-    val perSeries = series.groupBy("tms_id")
+    val rows = series.groupBy("tms_id")
       .agg(max("fgt").as("fgt"), min("time").as("start"),
-        max("station_id").as("station_id"))
+        max("station_id").as("station_id"), max("element").as("element"))
       .collect()
+    requireStations(rows.filter(_.isNullAt(3)).map(_.getString(4)).toSeq)
+    val perSeries = rows
       .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3)))
       .toSeq
     val bookkeeping = perSeries.map(r => (r._1, r._2, r._3))

@@ -16,8 +16,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * built-ins (whole-stage codegen, no UDFs).
   *
   * Scale posture: the window partitions by file, so a directory of N
-  * output files parses with N-way parallelism; one file is one sort —
-  * the same work the single-node reference does, minus the Python loop.
+  * output files parses with N-way parallelism. One file takes the carry
+  * parse below instead: it reads the file once, split across every core,
+  * and with a station set it keeps only station rows past that read (a
+  * TIMDEP report lists the whole grid; an extraction stores a few dozen
+  * of its cells).
   */
 object FloOutputParsers {
 
@@ -111,22 +114,29 @@ object FloOutputParsers {
   /** Densify a parsed TIMDEP frame: every (block, wanted element) pair gets a
     * row, absent readings filled with `missing` = −999 (reference:
     * output/extract_water_level.py:560-566). `elements` is a one-column
-    * DataFrame of wanted element ids (broadcast — it is a station map).
-    *
-    * The densify join's left side only ever holds wanted elements, so
-    * `parsed` is semi-joined to the broadcast station set first: only
-    * station rows reach the join's shuffle, not every cell of the report
-    * (TIMDEP lists the whole grid). Blocks still come from all of
-    * `parsed`, so a block without any station reading still densifies. */
+    * DataFrame of wanted element ids — a station map, dimension-sized, so
+    * it is collected once and rides in the plan as a literal set. */
   def fillMissing(parsed: DataFrame, elements: DataFrame,
+      missing: Double = graft.model.Sentinels.MissingOutput): DataFrame =
+    densify(parsed, elements.select(col(elements.columns.head).cast("string"))
+      .collect().map(_.getString(0)).distinct.toSeq, missing)
+
+  /** [[fillMissing]] against a station set already on the driver. One
+    * shuffle: each block's station readings are grouped once (map-side, so
+    * only station readings and one row per block cross it), then every
+    * block expands against the station set. Blocks come from all of
+    * `parsed`, so a block without any station reading still densifies. */
+  private[extract] def densify(parsed: DataFrame, stations: Seq[String],
       missing: Double = graft.model.Sentinels.MissingOutput): DataFrame = {
-    val elemCol = elements.columns.head
-    val wanted = broadcast(elements.select(col(elemCol).as("element")).distinct())
-    val blocks = parsed.select("file", "step_hours").distinct()
-    blocks
-      .crossJoin(wanted)
-      .join(parsed.join(wanted, Seq("element"), "left_semi"),
-        Seq("file", "element", "step_hours"), "left")
+    val reading = when(col("element").isin(stations: _*),
+      struct(col("element"), col("value")))
+    parsed.groupBy("file", "step_hours").agg(collect_list(reading).as("__readings"))
+      .select(col("file"), col("step_hours"), col("__readings"),
+        explode(typedLit(stations)).as("element"))
+      .select(col("file"), col("element"), col("step_hours"),
+        explode_outer(transform(
+          filter(col("__readings"), r => r("element") === col("element")),
+          r => r("value"))).as("value"))
       .na.fill(missing, Seq("value"))
   }
 
@@ -134,101 +144,139 @@ object FloOutputParsers {
   // Fast single-file path: carry-based marker propagation.
   //
   // The window form above shuffles every line into one sort per file. For
-  // ONE large report that serializes the whole parse. This path instead:
-  //   pass 1 (parallel): each partition resolves rows against markers seen
-  //     locally, emits rows before its first marker as "unresolved", and
-  //     reports its last marker;
+  // ONE large report that serializes the whole parse. This path reads the
+  // file once instead:
+  //   pass 1 (parallel, one job): each partition resolves rows against
+  //     markers seen locally, keeps the data rows before its first marker
+  //     unresolved, and ends with its last marker; the items are
+  //     checkpointed as they are computed;
   //   driver: prefix-scan of the per-partition last markers (bytes, not
   //     data) → carry for each partition;
-  //   pass 2 (cheap): only unresolved head rows get their carry applied.
+  //   pass 2 (over the checkpoint, lazy): only unresolved head rows get
+  //     their carry applied.
+  // Given a station set, pass 1 keeps station rows only and drops any
+  // other line after reading its first token; TIMDEP also keeps one row of
+  // each block that has a data row, so `fillMissing` sees the same blocks.
   // Lines never span HDFS-style splits (the line reader re-anchors), so a
   // marker is always wholly inside one partition.
   // --------------------------------------------------------------------
 
   /** Parse one HYCHAN.OUT with partition-parallel carry propagation;
-    * semantics identical to `parseHychan(readLines(...))`. */
-  def parseHychanFile(spark: SparkSession, path: String, valueIndex: Int = 1): DataFrame =
-    parseWithCarry[String](spark, path,
+    * semantics identical to `parseHychan(readLines(...))`. With `stations`,
+    * only the blocks of those elements are kept. */
+  def parseHychanFile(spark: SparkSession, path: String, valueIndex: Int = 1,
+      stations: Option[Set[String]] = None): DataFrame =
+    parseWithCarry[String](spark, path, stations, blockRows = false,
       marker = l =>
         if (l.length > 5 && l.startsWith(HychanHeader, 5)) {
-          val t = l.trim.split("\\s+")
+          val t = tokenize(l)
           // truncated header: block INVALIDATED (matches the window path's
           // sentinel), never attributed to the previous element
           if (t.length > 5) Some(t(5)) else Some("__INVALID__")
         } else None,
-      row = (l, elem) => {
-        val t = l.trim.split("\\s+")
-        if (elem != "__INVALID__" && t.length > valueIndex) {
+      data = l => {
+        val t = tokenize(l)
+        if (t.length > valueIndex) {
           val step = toDoubleOrNull(t(0))
           val v = toDoubleOrNull(t(valueIndex))
           if (step != null && v != null && !v.asInstanceOf[Double].isNaN)
-            Some((elem, step.asInstanceOf[Double], v.asInstanceOf[Double]))
+            Some((null, step.asInstanceOf[Double], v.asInstanceOf[Double]))
           else None
-        } else None
-      })
-
-  /** Parse one TIMDEP.OUT with partition-parallel carry propagation;
-    * semantics identical to `parseTimdep(readLines(...))`. */
-  def parseTimdepFile(spark: SparkSession, path: String, valueIndex: Int = 5): DataFrame =
-    parseWithCarry[java.lang.Double](spark, path,
-      marker = l => {
-        val t = l.trim.split("\\s+")
-        // unparseable single-token line CLOSES the running block (NaN
-        // sentinel, matching the window path) instead of letting following
-        // rows attach to the previous time
-        if (t.length == 1 && t(0).nonEmpty) {
-          val d = toDoubleOrNull(t(0))
-          Some(java.lang.Double.valueOf(
-            if (d == null) Double.NaN else d.asInstanceOf[Double]))
         } else None
       },
-      row = (l, blk) => {
-        val t = l.trim.split("\\s+")
-        if (!blk.isNaN && t.length > valueIndex) {
+      resolve = (r, elem) => if (elem == "__INVALID__") None else Some((elem, r._2, r._3)),
+      element = (_, block) => block)
+
+  /** Parse one TIMDEP.OUT with partition-parallel carry propagation;
+    * semantics identical to `parseTimdep(readLines(...))`. With `stations`,
+    * only those elements' rows are kept, plus one row of every block that
+    * has any data row. */
+  def parseTimdepFile(spark: SparkSession, path: String, valueIndex: Int = 5,
+      stations: Option[Set[String]] = None): DataFrame =
+    parseWithCarry[Double](spark, path, stations, blockRows = true,
+      // unparseable single-token line CLOSES the running block (NaN
+      // sentinel, matching the window path) instead of letting following
+      // rows attach to the previous time
+      marker = l => singleToken(l).map { t =>
+        val d = toDoubleOrNull(t)
+        if (d == null) Double.NaN else d.asInstanceOf[Double]
+      },
+      data = l => {
+        val t = tokenize(l)
+        if (t.length > valueIndex) {
           val v = toDoubleOrNull(t(valueIndex))
           if (v != null && !v.asInstanceOf[Double].isNaN)
-            Some((t(0), blk.doubleValue(), v.asInstanceOf[Double]))
+            Some((t(0), Double.NaN, v.asInstanceOf[Double]))
           else None
         } else None
-      })
+      },
+      resolve = (r, blk) => if (blk.isNaN) None else Some((r._1, blk, r._3)),
+      element = (l, _) => Some(firstToken(l)))
 
-  /** Shared carry machinery: `marker` extracts a block marker from a line,
-    * `row` parses a data line under the current marker into
-    * (element, step_hours, value). */
+  /** One pass-1 item: a row resolved in its partition, a data row read
+    * before the partition's first marker (`blockRow`: kept only to stand
+    * for its block), or the partition's last marker. */
+  private sealed trait Carried
+  private final case class Resolved(row: (String, Double, Double)) extends Carried
+  private final case class Head(row: (String, Double, Double), blockRow: Boolean)
+    extends Carried
+  private final case class LastMarker(marker: Option[Any]) extends Carried
+
+  /** Shared carry machinery. `marker` reads a block marker from a line;
+    * `data` reads a data line on its own into a partial
+    * (element, step_hours, value); `resolve` completes it under its block's
+    * marker (None: the block is invalid); `element` names the element a
+    * line in a block would be stored under, from as little of the line as
+    * possible (None: known only once its block is). With `stations`, a line
+    * whose element is not a station is dropped unread, except that
+    * `blockRows` keeps each block's first data row in each partition. */
   private def parseWithCarry[M](spark: SparkSession, path: String,
+      stations: Option[Set[String]], blockRows: Boolean,
       marker: String => Option[M],
-      row: (String, M) => Option[(String, Double, Double)]): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val lines = spark.sparkContext.textFile(path)
-    // pass 1: (resolvedRow | unresolvedLine), plus per-partition last marker
-    val tagged = lines.mapPartitionsWithIndex { (pid, it) =>
+      data: String => Option[(String, Double, Double)],
+      resolve: ((String, Double, Double), M) => Option[(String, Double, Double)],
+      element: (String, Option[M]) => Option[String]): DataFrame = {
+    val sc = spark.sparkContext
+    val filtered = stations.isDefined
+    val tagged = sc.textFile(path, sc.defaultParallelism).mapPartitions { it =>
       var current: Option[M] = None
-      it.flatMap { l =>
+      // whether this partition still owes the current block a row
+      var owed = filtered && blockRows
+      val items = it.flatMap { l =>
         marker(l) match {
-          case m @ Some(_) => current = m; Iterator.empty
-          case None => current match {
-            case Some(m) => row(l, m).map(r => (pid, true, l, r)).iterator
-            case None => Iterator.single((pid, false, l, null.asInstanceOf[(String, Double, Double)]))
-          }
+          case m @ Some(_) => current = m; owed = filtered && blockRows; None
+          case None =>
+            val wanted = stations.forall(s => element(l, current).forall(s.contains))
+            if (!wanted && !owed) None
+            else {
+              val item: Option[Carried] = current match {
+                case Some(m) => data(l).flatMap(resolve(_, m)).map(Resolved)
+                case None => data(l).map(Head(_, blockRow = !wanted))
+              }
+              if (item.nonEmpty) owed = false
+              item
+            }
         }
       }
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+      items ++ Iterator.single(LastMarker(current))
+    }.localCheckpoint()
 
-    val lastMarkers: Array[Option[M]] = lines.mapPartitionsWithIndex { (pid, it) =>
-      var last: Option[M] = None
-      it.foreach(l => marker(l).foreach(m => last = Some(m)))
-      Iterator.single(pid -> last)
+    val lastMarkers: Array[Option[M]] = tagged.mapPartitionsWithIndex { (pid, it) =>
+      it.collect { case LastMarker(m) => pid -> m.asInstanceOf[Option[M]] }
     }.collect().sortBy(_._1).map(_._2)
     // carry(p) = last marker emitted by any earlier partition
     val carries: Array[Option[M]] = lastMarkers.scanLeft(Option.empty[M]) {
       case (acc, cur) => cur.orElse(acc)
     }.dropRight(1)
-    val bc = spark.sparkContext.broadcast(carries)
 
-    val rows = tagged.mapPartitionsWithIndex { (_, it) =>
-      it.flatMap { case (pid, resolved, l, r) =>
-        if (resolved) Iterator.single(r)
-        else bc.value(pid).flatMap(m => row(l, m)).iterator
+    val rows = tagged.mapPartitionsWithIndex { (pid, it) =>
+      val carry = carries(pid)
+      it.flatMap {
+        case Resolved(r) => Some(r)
+        case Head(r, blockRow) =>
+          carry.flatMap(resolve(r, _))
+            .filter(full => blockRow || stations.forall(_.contains(full._1)))
+        case _ => None
       }
     }.map { case (e, s, v) => Row(path, e, s, v) }
 
@@ -237,18 +285,65 @@ object FloOutputParsers {
       StructField("element", StringType, nullable = true),
       StructField("step_hours", org.apache.spark.sql.types.DoubleType, nullable = true),
       StructField("value", org.apache.spark.sql.types.DoubleType, nullable = true)))
-    // localCheckpoint materializes the parse eagerly so the cached pass-1
-    // RDD and the carry broadcast can be released NOW — the engine's posture
-    // is a long-lived cron service, and leaving one persisted RDD + one
-    // broadcast per extraction behind leaks executor memory across runs
-    val out = spark.createDataFrame(rows, schema).localCheckpoint()
-    tagged.unpersist(blocking = false)
-    bc.destroy()
-    out
+    // the local checkpoint is the pass-1 cache: it holds the kept rows
+    // only, and the ContextCleaner releases it with the returned frame —
+    // no persisted RDD or broadcast outlives the extraction that used it
+    spark.createDataFrame(rows, schema)
   }
 
   private def toDoubleOrNull(s: String): Any =
     try java.lang.Double.valueOf(s) catch { case _: NumberFormatException => null }
+
+  // `l.trim.split("\\s+")` without the regex: `String.split` compiles its
+  // pattern on every call. `trim` drops every char <= ' ' at both ends;
+  // `\s` is exactly these six.
+  private def isSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+  private def trimStart(l: String): Int = {
+    var i = 0
+    while (i < l.length && l.charAt(i) <= ' ') i += 1
+    i
+  }
+  private def trimEnd(l: String): Int = {
+    var i = l.length
+    while (i > 0 && l.charAt(i - 1) <= ' ') i -= 1
+    i
+  }
+  private def tokenEnd(l: String, from: Int, end: Int): Int = {
+    var i = from
+    while (i < end && !isSpace(l.charAt(i))) i += 1
+    i
+  }
+
+  /** The tokens of `l.trim.split("\\s+")`. */
+  private def tokenize(l: String): Array[String] = {
+    val end = trimEnd(l)
+    var i = trimStart(l)
+    if (i >= end) return Array("")
+    val out = Array.newBuilder[String]
+    while (i < end) {
+      val j = tokenEnd(l, i, end)
+      out += l.substring(i, j)
+      i = j
+      while (i < end && isSpace(l.charAt(i))) i += 1
+    }
+    out.result()
+  }
+
+  /** `tokenize(l)(0)`, reading no further than its end. */
+  private def firstToken(l: String): String = {
+    val end = trimEnd(l)
+    val start = math.min(trimStart(l), end)
+    l.substring(start, tokenEnd(l, start, end))
+  }
+
+  /** The line's only token, if it has exactly one non-empty token. */
+  private def singleToken(l: String): Option[String] = {
+    val end = trimEnd(l)
+    val start = trimStart(l)
+    if (start < end && tokenEnd(l, start, end) == end) Some(l.substring(start, end))
+    else None
+  }
 
   /** Model-hours → wall-clock timestamp: `base + hours` with µs precision,
     * plus an optional UTC-offset shift applied to every point

@@ -137,6 +137,30 @@ class ExtractForecastSpec extends SparkSpec {
     assert(count("SELECT COUNT(*) FROM run") === 0L)
   }
 
+  test("without --fgt a file: URI's modification time is the fgt; a missing --hychan fails") {
+    val dir = tmp("extractfgt")
+    writeReports(dir)
+    resetStore(allStations)
+    val hychan = new java.io.File(s"$dir/HYCHAN.OUT")
+    // a modification time with milliseconds, well away from the epoch
+    assert(hychan.setLastModified(Timestamp.valueOf("2024-03-05 06:07:08.123").getTime))
+    ExtractForecast.run(spark, extractArgs(dir) - "fgt" + ("hychan" -> hychan.toURI.toString))
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.createStatement().executeQuery("SELECT DISTINCT fgt FROM data")
+      assert(rs.next())
+      assert(rs.getTimestamp(1) === graft.model.SlTime.utcToSl(new Timestamp(hychan.lastModified)))
+      assert(!rs.next(), "one fgt for the whole run")
+    } finally conn.close()
+    assert(count("SELECT COUNT(*) FROM data") === 12L)
+
+    val missing = s"$dir/NO_SUCH_HYCHAN.OUT"
+    val e = intercept[IllegalArgumentException] {
+      ExtractForecast.run(spark, extractArgs(dir) - "fgt" + ("hychan" -> missing))
+    }
+    assert(e.getMessage.contains(missing), e.getMessage)
+  }
+
   private def templateFiles: Set[String] =
     Using.resource(Files.list(Paths.get(System.getProperty("java.io.tmpdir")))) {
       _.iterator().asScala.map(_.getFileName.toString)

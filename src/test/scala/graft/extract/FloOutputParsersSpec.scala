@@ -3,9 +3,7 @@ package graft.extract
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.{LeftOuter, LeftSemi}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions.{broadcast, col}
 
 import graft.SparkSpec
@@ -93,8 +91,8 @@ class FloOutputParsersSpec extends SparkSpec {
   }
 
   test("fillMissing: only station rows reach the densify shuffle, same result") {
-    // a planner that neither broadcasts the parsed side nor re-plans at
-    // runtime, so the densify join keeps its Exchange as on a real report
+    // a planner that neither broadcasts nor re-plans at runtime, so the
+    // densify keeps its Exchange as on a real report
     val iso = spark.newSession()
     iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     iso.conf.set("spark.sql.adaptive.enabled", "false")
@@ -109,8 +107,8 @@ class FloOutputParsersSpec extends SparkSpec {
     val elements = iso.createDataFrame(Seq(Tuple1("7"), Tuple1("42"), Tuple1("9999")))
       .toDF("cell_no")
     val filled = FloOutputParsers.fillMissing(parsed, elements)
-    // the formulation before the semi-join: every parsed row is shuffled
-    // into the densify join
+    // the join formulation of the same densify: every parsed row is
+    // shuffled into it
     val unfiltered = parsed.select("file", "step_hours").distinct()
       .crossJoin(broadcast(elements.select(col("cell_no").as("element")).distinct()))
       .join(parsed, Seq("file", "element", "step_hours"), "left")
@@ -118,23 +116,19 @@ class FloOutputParsersSpec extends SparkSpec {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getDouble(3)))
       .toSeq.sorted
+    val got = rows(filled)
     assert(filled.columns.toSeq === unfiltered.columns.toSeq)
-    assert(rows(filled) === rows(unfiltered))
-    assert(rows(filled).size === 9)
-    assert(rows(filled).count(_._4 == -999.0) === 6)
+    assert(got === rows(unfiltered))
+    assert(got.size === 9)
+    assert(got.count(_._4 == -999.0) === 6)
 
+    // one shuffle, and it carries one map-side partial per (partition,
+    // block) holding only station readings — never the 1,500 cells
     val plan = filled.queryExecution.executedPlan
-    val densify = plan.collect {
-      case j: SortMergeJoinExec if j.joinType == LeftOuter => j
-    }
-    assert(densify.size === 1, plan.toString)
-    val exchange = densify.head.right.collectFirst {
-      case e: ShuffleExchangeExec => e
-    }
-    assert(exchange.nonEmpty, plan.toString)
-    assert(exchange.get.child.collect {
-      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
-    }.size === 1, "the station semi-join must sit below the densify Exchange:\n" + plan)
+    val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1, plan.toString)
+    val shuffled = exchanges.head.metrics("shuffleRecordsWritten").value
+    assert(shuffled > 0 && shuffled <= 3L * parsed.rdd.getNumPartitions, plan.toString)
   }
 
   test("stepToTimestamp: base + fractional model-hours at µs precision") {
@@ -260,5 +254,161 @@ class FloOutputParsersSpec extends SparkSpec {
     // a directory is not one file: it keeps the window path
     assert(windows(ExtractPipeline.floodPlainSeries(spark, dir.toURI.toString, base,
       plains)).nonEmpty)
+  }
+  // ---- parse contracts of the single-file extraction path. Each holds for
+  // the carry parse with and without a station set, and for the window
+  // path, which a directory takes.
+
+  private val plainMap = Seq(("101", "a", "FLOOD_PLAIN"), ("102", "b", "FLOOD_PLAIN"))
+    .toDF("cell_no", "label", "kind")
+  private val base = "2024-01-01 00:00:00"
+
+  /** `text` as the only file of a fresh directory: (file, directory). */
+  private def report(name: String, text: String): (String, String) = {
+    val dir = Files.createTempDirectory("report").toFile
+    val f = new java.io.File(dir, name)
+    Files.writeString(f.toPath, text)
+    (f.getPath, dir.getPath)
+  }
+
+  private def seriesRows(df: DataFrame): Seq[(String, String, Double)] =
+    df.select("element", "time", "value").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1).toString, r.getDouble(2))).toSeq.sorted
+
+  test("TIMDEP: a block with every station cell absent densifies to -999 for every station") {
+    val text =
+      """   0.50
+        |    101   1.0   2.0   3.0   4.0   21.50
+        |    102   1.0   2.0   3.0   4.0   22.75
+        |    103   1.0   2.0   3.0   4.0   23.00
+        |   1.00
+        |    103   1.0   2.0   3.0   4.0   23.10
+        |    104   1.0   2.0   3.0   4.0   24.10""".stripMargin
+    val (file, dir) = report("TIMDEP.OUT", text)
+    val expected = Seq(
+      ("101", "2024-01-01 00:30:00.0", 21.50), ("101", "2024-01-01 01:00:00.0", -999.0),
+      ("102", "2024-01-01 00:30:00.0", 22.75), ("102", "2024-01-01 01:00:00.0", -999.0))
+    assert(seriesRows(ExtractPipeline.floodPlainSeries(spark, file, base, plainMap)) === expected)
+    assert(seriesRows(ExtractPipeline.floodPlainSeries(spark, dir, base, plainMap)) === expected)
+    val elements = Seq("101", "102").toDF("element")
+    for (parsed <- Seq(FloOutputParsers.parseTimdepFile(spark, file),
+        FloOutputParsers.parseTimdep(linesDf(text)))) {
+      val filled = FloOutputParsers.fillMissing(parsed, elements)
+        .filter("step_hours = 1.0").collect().map(r => (r.getString(1), r.getDouble(3)))
+      assert(filled.toSeq.sorted === Seq(("101", -999.0), ("102", -999.0)))
+    }
+  }
+
+  test("TIMDEP: a block holding only its time line yields no rows") {
+    // block 1.00 is its time line alone; block 1.50 holds only rows with no
+    // numeric value, so it has no data row either
+    val text =
+      """   0.50
+        |    101   1.0   2.0   3.0   4.0   21.50
+        |   1.00
+        |   1.50
+        |    101   1.0   2.0   3.0   4.0   n/a
+        |    103   1.0
+        |   2.00
+        |    103   1.0   2.0   3.0   4.0   23.10""".stripMargin
+    val (file, dir) = report("TIMDEP.OUT", text)
+    val expected = Seq(
+      ("101", "2024-01-01 00:30:00.0", 21.50), ("101", "2024-01-01 02:00:00.0", -999.0),
+      ("102", "2024-01-01 00:30:00.0", -999.0), ("102", "2024-01-01 02:00:00.0", -999.0))
+    assert(seriesRows(ExtractPipeline.floodPlainSeries(spark, file, base, plainMap)) === expected)
+    assert(seriesRows(ExtractPipeline.floodPlainSeries(spark, dir, base, plainMap)) === expected)
+  }
+
+  test("station-filtered carry parse + densify equals the unfiltered window parse, blocks across partitions") {
+    // 24 blocks of 60 cells: station 7 is absent from every third block,
+    // block 5 holds no station, block 9 only non-numeric values, block 13
+    // is its time line alone and block 17's time is unparseable
+    val stations = Seq(7, 12, 33, 59)
+    val text = new StringBuilder(" TIMDEP REPORT\n")
+    (0 until 24).foreach { b =>
+      text ++= (if (b == 17) "   t+\n" else s"   ${b}.25\n")
+      if (b != 13) (1 to 60).foreach { c =>
+        val skip = (c == 7 && b % 3 == 0) || (b == 5 && stations.contains(c))
+        val v = if (b == 9) "x" else f"${c * 0.5 + b}%.2f"
+        if (!skip) text ++= f"    $c   0.10   0.20   0.30   0.40   $v\n"
+      }
+    }
+    val (file, dir) = report("TIMDEP.OUT", text.toString)
+    // the file is large enough to split four ways, so blocks cross
+    // partition boundaries in the carry parse
+    assert(spark.sparkContext.textFile(file, 4).getNumPartitions >= 4)
+    val cellMap = stations.map(c => (c.toString, s"st$c", "FLOOD_PLAIN"))
+      .toDF("cell_no", "label", "kind")
+    val carry = seriesRows(ExtractPipeline.floodPlainSeries(spark, file, base, cellMap))
+    val window = seriesRows(ExtractPipeline.floodPlainSeries(spark, dir, base, cellMap))
+    assert(carry.nonEmpty && carry === window)
+    // 21 valid blocks (not 9, 13 and 17) × 4 stations
+    assert(carry.size === 21 * 4)
+    // station 7 missing from 7 valid blocks, all four from block 5
+    assert(carry.count(_._3 == -999.0) === 7 + 4)
+
+    val hychan = new StringBuilder(" FLO-2D CHANNEL HYDROGRAPHS\n")
+    (1 to 120).foreach { el =>
+      hychan ++= s"     CHANNEL HYDROGRAPH FOR ELEMENT NO:    $el\n"
+      hychan ++= "   TIME      ELEV     DEPTH   VELOC   DISCHARGE\n"
+      (1 to 6).foreach(h => hychan ++= f"   $h.00    ${el + h * 0.25}%.2f    0.00   0.00   1.00\n")
+    }
+    val (hyFile, hyDir) = report("HYCHAN.OUT", hychan.toString)
+    assert(spark.sparkContext.textFile(hyFile, 4).getNumPartitions >= 4)
+    val chanMap = Seq(3, 40, 41, 118).map(c => (c.toString, s"ch$c", "CHANNEL"))
+      .toDF("cell_no", "label", "kind")
+    val hyCarry = seriesRows(ExtractPipeline.channelSeries(spark, hyFile, base, chanMap))
+    assert(hyCarry.size === 4 * 6)
+    assert(hyCarry === seriesRows(ExtractPipeline.channelSeries(spark, hyDir, base, chanMap)))
+  }
+
+  test("carry parse tokenizes like trim.split on tabs, VT, FF, blanks and control chars") {
+    // every line below is read by the single-file parse; the expected rows
+    // come from the same block rules over l.trim.split("\\s+")
+    val timdepLines = Seq("\t0.50\t",
+      "\t101\t1.0\t2.0\t3.0\t4.0\t21.50",
+      " 102 \u000B 1.0 2.0 3.0 4.0 22.75 ",
+      "\f103 1 2 3 4 5.5\f",
+      "", "   ", "\u000B",
+      "  104 1 2 3 4\u0001 6.5",
+      "105\u0001 1 2 3 4 7.5",
+      "  106 1 2 3 4 \u001C 8.5",
+      "\u0002 1.00 \u0003",
+      "    107   1.0   2.0   3.0   4.0   9.25\r",
+      "\u00A0108 1 2 3 4 10.5",
+      " 1.50\u000B",
+      "109\t\t1\f2\u000B3\u000B4 \t 11.75")
+    def tok(l: String) = l.trim.split("\\s+")
+    def num(s: String) = scala.util.Try(java.lang.Double.valueOf(s).doubleValue).toOption
+    val expectedTd = {
+      var blk: Option[Double] = None
+      timdepLines.flatMap { l =>
+        val t = tok(l)
+        if (t.length == 1 && t(0).nonEmpty) { blk = Some(num(t(0)).getOrElse(Double.NaN)); None }
+        else blk.filter(b => !b.isNaN && t.length > 5)
+          .flatMap(b => num(t(5)).filter(!_.isNaN).map(v => (t(0), b, v)))
+      }.sorted
+    }
+    assert(expectedTd.map(_._1).toSet.size >= 6, expectedTd)
+    val (tdFile, _) = report("TIMDEP.OUT", timdepLines.mkString("\n"))
+    val td = FloOutputParsers.parseTimdepFile(spark, tdFile).collect()
+      .map(r => (r.getString(1), r.getDouble(2), r.getDouble(3))).toSeq.sorted
+    assert(td === expectedTd)
+
+    val hychanLines = Seq(
+      "     CHANNEL HYDROGRAPH FOR ELEMENT NO:\t\t250\t",
+      "\t1.00\t12.25\t0.1",
+      " 2.00 \u000B 12.50 \f 0.2 ",
+      "\u00013.00 12.75",
+      "  4.00\u0001 13.00",
+      "     CHANNEL HYDROGRAPH FOR ELEMENT NO: \u000B 369 \f",
+      "5.00\t\f\u000B14.25")
+    val expectedHy = Seq(("250", 1.0, 12.25), ("250", 2.0, 12.5), ("250", 3.0, 12.75),
+      ("250", 4.0, 13.0), ("369", 5.0, 14.25))
+    assert(tok(hychanLines(0))(5) === "250" && tok(hychanLines(5))(5) === "369")
+    val (hyFile, _) = report("HYCHAN.OUT", hychanLines.mkString("\n"))
+    val hy = FloOutputParsers.parseHychanFile(spark, hyFile).collect()
+      .map(r => (r.getString(1), r.getDouble(2), r.getDouble(3))).toSeq.sorted
+    assert(hy === expectedHy)
   }
 }

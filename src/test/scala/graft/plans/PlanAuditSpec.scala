@@ -642,6 +642,36 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  // The flood-plain series over one TIMDEP file shuffles once: the densify
+  // groups each block's station readings. q_s8_timdep densifies through the
+  // same code. Later changes may lower either count, never raise it.
+  private val FloodPlainShuffles = 1
+  private val TimdepQueryExchanges = 2
+  private def shuffleExchanges(plan: String): Int =
+    plan.linesIterator.count("""^[\s:+-]*Exchange """.r.findFirstIn(_).nonEmpty)
+
+  test("the flood-plain series shuffles once and q_s8_timdep's Exchanges stay pinned") {
+    import spark.implicits._
+    val timdep = java.nio.file.Files.createTempDirectory("fpaudit").resolve("TIMDEP.OUT")
+    java.nio.file.Files.writeString(timdep, (1 to 4).map { h =>
+      s"   $h.00\n" + (1 to 30).map(c => s"    $c   0.1   0.2   0.3   0.4   $c.$h\n").mkString
+    }.mkString)
+    val plains = Seq("3", "17", "99").map(c => (c, s"st$c", "FLOOD_PLAIN"))
+      .toDF("cell_no", "label", "kind")
+    val series = graft.extract.ExtractPipeline.floodPlainSeries(spark, timdep.toString,
+      "2024-01-01 00:00:00", plains)
+    assert(series.count() === 4 * 3)
+    series.collect()
+    val plan = org.apache.spark.sql.GraftBridge.finalPlanString(series)
+    assert(shuffleExchanges(plan) <= FloodPlainShuffles,
+      s"the flood-plain series plans ${shuffleExchanges(plan)} shuffles, pinned at " +
+        s"$FloodPlainShuffles:\n" + plan.take(3000))
+    val q = executedPlan("q_s8_timdep")
+    assert(exchanges(q) <= TimdepQueryExchanges,
+      s"q_s8_timdep plans ${exchanges(q)} Exchanges, pinned at $TimdepQueryExchanges:\n" +
+        q.take(3000))
+  }
+
   test("q_mm_frames decodes in one map chain — no shuffle before the frame rows") {
     val plan = executedPlan("q_mm_frames")
     assert(!plan.contains("Exchange"),

@@ -16,7 +16,7 @@ import graft.io.{FeedMaintain, IntegrityManifest, LakeMerge, LakeTimeTravel}
   *   - `zorder`    OPTIMIZE ZORDER BY (`--dim-a/--dim-b` or
   *                 `--curve-cols a,b[,c[,d]]` for 3-4 dims, `[--bits]
   *                 [--partitions v1,v2] [--curve zorder|hilbert]`,
-  *                 [[LakeMerge.clusterPartitionsN]])
+  *                 [[LakeMerge.clusterPartitions]])
   *   - `keeper-seed`/`keeper-fold`  seed the exact-dedup keeper state
   *                 from a lake snapshot / fold the published feed into it
   *                 (E183 [[graft.dedup.Dedup.seedKeeperState]]/
@@ -97,7 +97,7 @@ object LakeAdmin {
               "--dim-b <column> (or --curve-cols a,b[,c[,d]]) is required " +
                 "for zorder")))
         }
-        val s = LakeMerge.clusterPartitionsN(spark, lake, dims,
+        val s = LakeMerge.clusterPartitions(spark, lake, dims,
           bits = args.getOrElse("bits", "16").toInt,
           targetFileBytes =
             args.getOrElse("target-file-mb", "128").toLong * 1024 * 1024,

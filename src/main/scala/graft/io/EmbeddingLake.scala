@@ -134,7 +134,7 @@ object EmbeddingLake {
     * temp directory and renames into place — the same discipline as the
     * merge manifest — so the old codebook stays readable until the swap
     * instant; the residual window is one move-aside + one rename
-    * (matching [[LakeMerge.applySwaps]]'s own per-partition window), and
+    * (matching the lake's own per-partition swap window), and
     * a crash inside it leaves the complete old copy parked at
     * `._codebook_old` for hand recovery instead of nothing. */
   def writeCodebook(spark: SparkSession, path: String,
@@ -192,50 +192,22 @@ object EmbeddingLake {
     * appends is row-identical to one rebuilt from scratch WITH THE SAME
     * codebook — probes return the same results (EmbeddingLakeSpec pins
     * recall parity) — while the work is one map pass over the batch.
-    * The price of frozen codebooks is DRIFT: see [[driftReport]]. */
+    * The price of frozen codebooks is DRIFT: see [[driftReport]].
+    *
+    * An append is add-files-only, but still a WRITER: racing a
+    * [[compactCells]] it would land its new file in a live cell
+    * directory AFTER the compact snapshotted it — the swap then trashes
+    * the directory (appended file included), silent data loss — and with
+    * a crashed compact's manifest pending it would land in a
+    * not-yet-swapped live cell dir, destroyed by the next roll-forward.
+    * So it runs under [[LakeMerge.withLease]], which rolls a pending
+    * commit forward first; the hold is one map pass. */
   def append(df: DataFrame, vecCol: String, path: String,
       cellCodebook: Array[Seq[Float]]): Unit =
-    underWriterLease(df.sparkSession, path) {
+    LakeMerge.withLease(df.sparkSession, path) { _ =>
       Similarity.withIvfCell(df, vecCol, cellCodebook)
         .write.mode(SaveMode.Append).partitionBy("ivf_cell").parquet(path)
     }
-
-  /** [[append]] for the IVFADC layout: PQ codes from the persisted
-    * per-subspace codebooks ride along, same frozen-codebook contract. */
-  def appendPq(df: DataFrame, vecCol: String, path: String,
-      cellCodebook: Array[Seq[Float]],
-      pqCodebooks: Array[Array[Seq[Float]]], dim: Int): Unit =
-    underWriterLease(df.sparkSession, path) {
-      Similarity.withIvfCell(
-          Similarity.withPqCodes(df, vecCol, dim, pqCodebooks), vecCol,
-          cellCodebook)
-        .write.mode(SaveMode.Append).partitionBy("ivf_cell").parquet(path)
-    }
-
-  /** Appends are add-files-only, but they are still WRITERS: an append
-    * racing a [[compactCells]] would land its new file in a live cell
-    * directory AFTER the compact snapshotted it — the swap then trashes
-    * the directory (appended file included) and CLEAN deletes it, silent
-    * data loss (review finding). Every mutation of the lake therefore
-    * takes the same single-writer lease; an append is one map pass, so
-    * the hold is short. */
-  private def underWriterLease[T](spark: SparkSession, path: String)
-      (body: => T): T = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val writerId = java.util.UUID.randomUUID.toString
-    LakeMerge.acquireLease(fs, path, writerId)
-    try {
-      // EVERY writer recovers first (the same discipline as merge /
-      // compact): with a crashed compact's manifest still pending, an
-      // append would land its file in a not-yet-swapped LIVE cell dir —
-      // invisible to committed-view readers, then destroyed by the next
-      // recover()'s swap+clean (second-review finding). Roll the pending
-      // commit forward before adding anything.
-      LakeMerge.recoverHeld(spark, path, writerId)
-      body
-    } finally LakeMerge.releaseLease(fs, path, writerId)
-  }
 
   /** Per-cell DRIFT report — the number that decides when a frozen
     * codebook must retrain/compact: for every cell its row count and the
@@ -289,13 +261,12 @@ object EmbeddingLake {
     * (cell-scoped [[Similarity.codebook]] — distributed aggregates, no
     * driver collect of vectors), its rows reassigned among the new
     * sub-centroids, and ONLY the touched cell partitions rewritten through
-    * the [[LakeMerge]] swap machinery (staged write → `_merge_manifest`
-    * commit → atomic per-partition swaps → clean). Untouched partitions
-    * are never read, rewritten, or moved — they stay BYTE-identical
-    * (EmbeddingLakeSpec compares file bytes) — and a crash mid-swap is
-    * recoverable exactly like a LakeMerge crash: [[read]] resolves the
-    * committed view through the manifest, the next compact (or
-    * [[LakeMerge.recover]]) rolls forward.
+    * the lake's Writer protocol ([[LakeMerge]] scaladoc; op `cells`).
+    * Untouched partitions are never read, rewritten, or moved — they stay
+    * BYTE-identical (EmbeddingLakeSpec compares file bytes) — and a crash
+    * mid-swap is recoverable exactly like a LakeMerge crash: [[read]]
+    * resolves the committed view through the manifest, the next compact
+    * (or [[LakeMerge.recover]]) rolls forward.
     *
     * Cell-id discipline keeps the rewrite minimal: the flagged id is
     * reused for the first non-empty sub-cell, extra non-empty sub-cells
@@ -331,15 +302,11 @@ object EmbeddingLake {
     val flaggedSorted = flagged.distinct.sorted
     flaggedSorted.foreach(f => require(f >= 0 && f < cellCodebook.length,
       s"flagged cell $f outside codebook [0, ${cellCodebook.length})"))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // a compact is a WRITER: it runs under the same single-writer lease
-    // as LakeMerge.merge (r15), so a compact racing a merge (or another
-    // compact) fails fast instead of interleaving staging/commit
-    val mergeId = java.util.UUID.randomUUID.toString
-    LakeMerge.acquireLease(fs, path, mergeId, leaseStaleMs)
-    try {
-    LakeMerge.recoverHeld(spark, path, mergeId) // roll forward any interrupted compact
+    // a compact is a WRITER: it runs the lake's Writer protocol
+    // (pessimistic), so a compact racing a merge (or another compact)
+    // fails fast instead of interleaving staging/commit
+    LakeMerge.write(spark, path, leaseStaleMs = leaseStaleMs) { w =>
+    val fs = w.fs
     val allParts = LakeMerge.partitionValues(spark, path, "ivf_cell")
     // fresh sub-cell ids allocate from cellCodebook.length up — a STALE
     // (shorter-than-lake) codebook would hand a new sub-cell an id an
@@ -350,7 +317,8 @@ object EmbeddingLake {
         "entry codebook — the codebook is stale (use the one the last " +
         "compact returned / the lake's _codebook)"))
     if (flaggedSorted.isEmpty)
-      return (cellCodebook, CompactStats(allParts.length, 0, 0, 0, 0L))
+      (cellCodebook, CompactStats(allParts.length, 0, 0, 0, 0L))
+    else {
 
     // per flagged cell: cell-scoped k-means, local child assignment, and
     // the local→global id mapping (first non-empty child reuses the
@@ -363,7 +331,7 @@ object EmbeddingLake {
       // Spark jobs), so a many-cell compact must keep proving liveness
       // or a concurrent writer legally takes the lease mid-write
       // (review finding: compactCells never heartbeat)
-      LakeMerge.heartbeatLease(fs, path, mergeId)
+      w.heartbeat()
       val cellDf = spark.read.parquet(s"$path/ivf_cell=$f") // one-dir read
       val local = Similarity.codebook(cellDf, idCol, vecCol,
         splitInto, kmeansIters)
@@ -388,18 +356,12 @@ object EmbeddingLake {
     val touched = (flaggedSorted ++ (cellCodebook.length until nextId))
       .map(_.toString)
 
-    // staged write → manifest commit → swaps → clean: the same four-step
-    // discipline (and the same crash windows) as LakeMerge.merge
-    val stagingName = s".merge-staging-$mergeId"
-    val staging = new org.apache.hadoop.fs.Path(path, stagingName)
+    // staged write, then the shared commit (op "cells"): the same crash
+    // windows as LakeMerge.merge
     perCell.reduce(_ unionByName _)
       .write.mode(SaveMode.Overwrite).partitionBy("ivf_cell")
-      .parquet(staging.toString)
-    LakeMerge.heartbeatLease(fs, path, mergeId) // staging written
-    touched.foreach { v =>
-      require(fs.exists(new org.apache.hadoop.fs.Path(staging, s"ivf_cell=$v")),
-        s"staged cell ivf_cell=$v missing — staging write failed")
-    }
+      .parquet(w.staging.toString)
+    w.heartbeat() // staging written
     // a lake that persists its codebook must not keep serving the STALE
     // one after the cell structure changed — post-compact drift reports
     // would NULL out on the new cells and retrainAdvice would silently
@@ -420,17 +382,13 @@ object EmbeddingLake {
     if (fs.exists(new org.apache.hadoop.fs.Path(path, "_codebook")))
       writeCodebook(spark, path, newCents.toArray)
 
-    val manifest = LakeMerge.PendingMerge(mergeId, stagingName,
-      "ivf_cell", touched)
-    LakeMerge.writeManifest(fs, path, manifest)
-    LakeMerge.applySwaps(fs, path, "ivf_cell", staging, touched,
-      crashAfterSwaps,
-      onProgress = () => LakeMerge.heartbeatLease(fs, path, mergeId))
-    LakeMerge.finishCommit(fs, path, manifest)
+    w.commit("cells", "ivf_cell", touched, None, retainHistory = false,
+      crashAfterSwaps)
 
     (newCents.toArray,
       CompactStats(allParts.length, flaggedSorted.length, flaggedSorted.length,
         nextId - cellCodebook.length, rowsReassigned))
-    } finally LakeMerge.releaseLease(fs, path, mergeId)
+    }
+    }
   }
 }

@@ -317,9 +317,8 @@ object IntegrityManifest {
     val time = if (timeCol.nonEmpty) timeCol else idCol
     val fs = new org.apache.hadoop.fs.Path(lakeDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val writerId = java.util.UUID.randomUUID.toString
-    LakeMerge.acquireLease(fs, lakeDir, writerId, leaseStaleMs)
-    try {
+    LakeMerge.withLease(spark, lakeDir, leaseStaleMs) { lease =>
+      val writerId = lease.id
       // heal a torn manifest replacement from a crashed predecessor
       // (writer-side — we hold the lease)
       LakeMerge.recoverReplacedDir(fs,
@@ -339,7 +338,7 @@ object IntegrityManifest {
       repairPendingGroups(spark, fs, lakeDir, partitionCol, idCol, textCol,
         groups, subGroups, asOf = stats.mergeId)
       stats
-    } finally LakeMerge.releaseLease(fs, lakeDir, writerId)
+    }
   }
 
   /** DELETE a purge batch from a documents lake AND maintain its
@@ -370,9 +369,8 @@ object IntegrityManifest {
     val time = if (timeCol.nonEmpty) timeCol else idCol
     val fs = new org.apache.hadoop.fs.Path(lakeDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val writerId = java.util.UUID.randomUUID.toString
-    LakeMerge.acquireLease(fs, lakeDir, writerId, leaseStaleMs)
-    try {
+    LakeMerge.withLease(spark, lakeDir, leaseStaleMs) { lease =>
+      val writerId = lease.id
       LakeMerge.recoverReplacedDir(fs,
         new org.apache.hadoop.fs.Path(lakeDir, LiveDirName))
       val marker = new org.apache.hadoop.fs.Path(
@@ -388,7 +386,7 @@ object IntegrityManifest {
       repairPendingGroups(spark, fs, lakeDir, partitionCol, idCol, textCol,
         groups, subGroups, asOf = stats.deleteId)
       stats
-    } finally LakeMerge.releaseLease(fs, lakeDir, writerId)
+    }
   }
 
   /** The union-repair tail shared by [[mergeAndMaintain]] and

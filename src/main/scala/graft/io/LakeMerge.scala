@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Copy-on-write MERGE upsert over a partitioned parquet series lake —
@@ -34,38 +34,49 @@ import org.apache.spark.sql.functions._
   *     always dimension-sized next to the lake), updates unioned in, and
   *     the result staged under a dot-prefixed directory Spark readers
   *     ignore;
-  *  3. COMMIT: once every staged partition is verified on disk, a
-  *     `_merge_manifest.json` (staged partition list + staging dir) is
-  *     written ATOMICALLY at the lake root — this write IS the commit
-  *     point, the single-file stand-in for Delta's `_delta_log` entry /
-  *     Iceberg's snapshot pointer swing;
-  *  4. SWAP: each affected partition directory is renamed into place
-  *     (old → trash inside staging, staged → live — rename is the atomic
-  *     primitive on HDFS/POSIX; on rename-less object stores the
-  *     manifest ALONE would carry the commit and readers would resolve
-  *     through it permanently, which is exactly the Delta/Iceberg
-  *     design). Untouched partitions are never read, rewritten, or
-  *     moved — the property [[graft.Scale]]'s `lake_merge_scale` section
-  *     requires as partitions-rewritten < total;
-  *  5. CLEAN: staging (with the trashed old data) is deleted, then the
-  *     manifest — completing the commit.
+  *  3. COMMIT, 4. SWAP, 5. CLEAN: the shared writer tail below.
+  *     Untouched partitions are never read, rewritten, or moved — the
+  *     property [[graft.Scale]]'s `lake_merge_scale` section requires as
+  *     partitions-rewritten < total.
   *
-  * == Whole-merge atomicity (round 14) ==
-  * Individual renames are atomic but the swap LOOP is not; the manifest
-  * closes that gap with write-ahead roll-forward semantics:
+  * == Writer protocol ==
+  * Every staging writer — [[merge]], [[delete]], [[compactPartitions]],
+  * [[clusterPartitions]] and [[EmbeddingLake.compactCells]] — is its own
+  * validation and staging step inside ONE skeleton, `write`, whose
+  * `Writer` owns everything else. Maintenance that stages nothing
+  * ([[recover]], [[vacuumChanges]], [[LakeTimeTravel.vacuum]], the
+  * integrity manifest's compound writers, embedding appends) runs under
+  * `withLease` alone: acquire, recover, body, release.
   *
-  *  - crash BEFORE the manifest write (during staging): the live lake is
-  *    untouched; the orphaned dot-staging directory is invisible to
-  *    readers and garbage-collected (rolled back) by the next
-  *    [[recover]]/[[merge]] call;
-  *  - crash AFTER the manifest write (mid-swap-loop): the merge is
-  *    logically committed. [[readLake]] sees the manifest and assembles
-  *    the COMMITTED view without mutating anything — manifest-listed
-  *    partitions read from staging where the swap hasn't happened yet,
-  *    live otherwise — so no reader ever observes a torn (half-old,
-  *    half-new) table. The next [[merge]] (or an explicit [[recover]])
-  *    ROLLS FORWARD: it completes the remaining swaps idempotently
-  *    (staged-missing ⇒ that partition already swapped) and cleans up.
+  *  - LEASE or OCC: a pessimistic writer holds the single-writer
+  *    `_merge_lease` ([[acquireLease]], fail-fast) from entry to return
+  *    and recovers first. An optimistic (`occ = true`) writer reads the
+  *    commit-log snapshot seq at entry and stages WITHOUT the lease; it
+  *    takes it (waiting) only for its commit window: recover, then refuse
+  *    with a `ConcurrentModificationException` naming every commit since
+  *    the snapshot that touched its partitions (staging deleted — the
+  *    caller re-runs against the fresh lake), else assign its feed seq
+  *    and commit. While staging it refuses to read partitions a pending
+  *    manifest is mid-swap on (compaction skips them instead).
+  *  - COMMIT POINT: every staged partition is verified on disk, then
+  *    `_merge_manifest.json` (staged partition list + staging dir) is
+  *    written ATOMICALLY at the lake root — that rename IS the commit,
+  *    the single-file stand-in for Delta's `_delta_log` entry /
+  *    Iceberg's snapshot pointer swing.
+  *  - ROLL-FORWARD: after the commit point, the swaps (old → trash or
+  *    `_history`, staged → live; rename is the atomic primitive), the
+  *    change-feed publication, the commit record and the clean are one
+  *    idempotent sequence, `rollForward`, run by the committing writer
+  *    and by every later writer's entry recovery. A crash BEFORE the
+  *    manifest leaves the live lake untouched and its dot-staging is
+  *    garbage-collected (an OCC writer's only once stale); a crash AFTER
+  *    it leaves a logically committed lake that [[readLake]] already
+  *    reads whole — manifest-listed partitions resolve to staging until
+  *    swapped — so no reader observes a torn table.
+  *  - HEARTBEATS: a pessimistic writer bumps the lease between phases
+  *    and before every swap ([[heartbeatLease]], which doubles as the
+  *    theft check); an OCC writer's staging root is kept mtime-fresh by
+  *    a daemon beat, so a concurrent recovery never collects live work.
   *
   * Idempotency contract (K2): the merge is exactly-once-by-key — re-
   * applying the same update batch, or overlapping re-extractions,
@@ -73,12 +84,12 @@ import org.apache.spark.sql.functions._
   * (LakeMergeSpec proves equality against [[JdbcUpsertSink]] on the same
   * batches). `updates` must be unique by key with no NULL key values and
   * a partition column agreeing with its derivation — all checked by ONE
-  * batch-sized aggregate over an entry `localCheckpoint` (one evaluation
-  * of the batch lineage for the whole merge, one validation pass) unless
-  * `requireUniqueKeys = false`: duplicate keys in ONE batch have no
-  * defined winner in any upsert dialect — MySQL takes statement order,
-  * which a distributed write cannot reproduce — and NULL keys never
-  * equi-join, so re-applying a batch would duplicate them forever.
+  * batch-sized aggregate over the batch, kept once for the whole merge,
+  * unless `requireUniqueKeys = false`: duplicate keys in ONE
+  * batch have no defined winner in any upsert dialect — MySQL takes
+  * statement order, which a distributed write cannot reproduce — and
+  * NULL keys never equi-join, so re-applying a batch would duplicate
+  * them forever.
   */
 object LakeMerge {
 
@@ -510,7 +521,7 @@ object LakeMerge {
     * data parked in a trash dir INSIDE staging, so CLEAN removes it).
     * `failAfter` is crash injection for LakeMergeSpec — the simulated
     * kill between renames the recovery contract is specified against. */
-  private[io] def applySwaps(fs: FileSystem, lakeDir: String,
+  private def applySwaps(fs: FileSystem, lakeDir: String,
       partitionCol: String, staging: Path, values: Seq[String],
       failAfter: Int = Int.MaxValue,
       onProgress: () => Unit = () => (),
@@ -576,20 +587,19 @@ object LakeMerge {
     * data), then the manifest. A crash between the two leaves a manifest
     * whose staged directories are all gone — recovery reads every
     * partition as already-swapped and just deletes the manifest. */
-  private[io] def finishCommit(fs: FileSystem, lakeDir: String,
+  private def finishCommit(fs: FileSystem, lakeDir: String,
       m: PendingMerge): Unit = {
     fs.delete(new Path(lakeDir, m.staging), true)
     fs.delete(manifestPath(lakeDir), false)
   }
 
   /** Publish a committed merge's staged change feed to
-    * `_changes/seq=N` — one rename, part of the manifest's roll-forward
-    * work (runs after [[applySwaps]], before [[finishCommit]], in both
-    * the merge path and [[recover]]). Idempotent across crash-and-retry:
-    * the staged feed gone + the target present means a prior attempt's
-    * rename landed; both present cannot happen (rename is atomic), so
-    * that interleave defensively drops the stale staged copy. */
-  private[io] def publishFeed(fs: FileSystem, lakeDir: String,
+    * `_changes/seq=N` — one rename, part of [[rollForward]]. Idempotent
+    * across crash-and-retry: the staged feed gone + the target present
+    * means a prior attempt's rename landed; both present cannot happen
+    * (rename is atomic), so that interleave defensively drops the stale
+    * staged copy. */
+  private def publishFeed(fs: FileSystem, lakeDir: String,
       m: PendingMerge): Unit = m.changeSeq.foreach { seq =>
     val staged = new Path(new Path(lakeDir, m.staging), ChangeFeedStagedName)
     val target = new Path(lakeDir, s"$ChangesDirName/seq=$seq")
@@ -605,78 +615,43 @@ object LakeMerge {
         s"$target — lake corrupted beyond roll-forward")
   }
 
-  /** The COMMIT tail shared by every partition-rewriting writer (merge,
-    * compact): verify staging, assign the commit-log seq, write the
-    * manifest (the commit point), swap with optional history retention,
-    * publish the feed, append the commit record, clean. ONE definition so
-    * the once-a-log-exists-every-commit-records invariant — which
-    * [[LakeTimeTravel.readLakeAsOf]]'s broken-chain refusal depends on —
-    * cannot drift between writers (review finding). Caller holds the
-    * lease as `writerId` and has staged every partition in `values`. */
-  private def commitStagedSwaps(fs: FileSystem, lakeDir: String,
-      writerId: String, op: String, partitionCol: String, staging: Path,
-      values: Seq[String], changeSeq: Option[Long], retainHistory: Boolean,
-      crashAfterSwaps: Int, dropped: Seq[String] = Seq.empty,
-      forceRecord: Boolean = false): Unit = {
-    values.filterNot(dropped.toSet).foreach { v =>
-      require(fs.exists(new Path(staging, s"$partitionCol=$v")),
-        s"staged partition $partitionCol=$v missing — staging write failed")
-    }
-    // commit-log record (E173): assigned when retention is requested OR
-    // the lake already logs commits — once a log exists EVERY commit
-    // records itself (even non-retaining ones), or readLakeAsOf's
-    // broken-chain refusal could not see the gap
-    val recordCommit = retainHistory || forceRecord ||
-      fs.exists(LakeTimeTravel.commitsDir(lakeDir))
-    val histSeqOpt =
-      if (recordCommit) Some(LakeTimeTravel.nextCommitSeq(fs, lakeDir))
-      else None
-    val created = values.filterNot(v =>
-      fs.exists(new Path(lakeDir, s"$partitionCol=$v")))
-    val manifest = PendingMerge(writerId, staging.getName, partitionCol,
-      values, changeSeq, histSeqOpt, retainHistory, created, op, dropped)
-    writeManifest(fs, lakeDir, manifest)
-    // from here on a crash is recoverable forward: the manifest survives
-    // until every swap landed, the feed (if any) published, the commit
-    // (if any) recorded, and staging is gone
-    applySwaps(fs, lakeDir, partitionCol, staging, values, crashAfterSwaps,
+  /** The roll-forward of a committed manifest `m` — the ONE sequence
+    * after the commit point: swaps (pre-images to `_history/seq=N` when
+    * the commit retains history), feed publication, commit record (when
+    * the commit is logged), clean. Every step is idempotent, so the
+    * committing writer and a later writer's recovery run the same code
+    * over the same manifest; `writerId` is whoever holds the lease now
+    * and heartbeats before every swap. `failAfter` is the spec's crash
+    * injection (see [[applySwaps]]). */
+  private def rollForward(fs: FileSystem, lakeDir: String, writerId: String,
+      m: PendingMerge, failAfter: Int = Int.MaxValue): Unit = {
+    applySwaps(fs, lakeDir, m.partitionCol, new Path(lakeDir, m.staging),
+      m.partitions, failAfter,
       onProgress = () => heartbeatLease(fs, lakeDir, writerId),
-      historyTo = histSeqOpt.filter(_ => retainHistory)
+      historyTo = m.histSeq.filter(_ => m.retainHist)
         .map(LakeTimeTravel.historyDir(lakeDir, _)),
-      dropped = dropped.toSet)
-    publishFeed(fs, lakeDir, manifest)
-    histSeqOpt.foreach(seq => LakeTimeTravel.writeCommitRecord(fs, lakeDir,
-      LakeTimeTravel.CommitRecord(seq, writerId, op, partitionCol, values,
-        created, retainHistory, dropped)))
-    finishCommit(fs, lakeDir, manifest)
+      dropped = m.dropped.toSet)
+    publishFeed(fs, lakeDir, m)
+    m.histSeq.foreach(seq => LakeTimeTravel.writeCommitRecord(fs, lakeDir,
+      LakeTimeTravel.CommitRecord(seq, m.mergeId, m.op, m.partitionCol,
+        m.partitions, m.created, m.retainHist, m.dropped)))
+    finishCommit(fs, lakeDir, m)
   }
 
-  /** Recover the lake at `lakeDir` from an interrupted merge, if any:
-    * a pending manifest is ROLLED FORWARD (remaining swaps completed,
-    * staging + manifest cleaned); orphaned pre-commit staging directories
-    * (crash before the manifest write) are ROLLED BACK (deleted — the
-    * live lake never saw them). Called automatically at the top of every
-    * [[merge]]; safe (and a no-op) on a healthy lake. Returns true iff a
-    * pending merge was completed.
-    *
-    * MUTATES the lake (roll-forward swaps, staging GC), so it runs under
-    * the single-writer lease like every other mutator: this public entry
-    * acquires/releases its own lease (review finding: a leaseless
-    * `LakeAdmin --op recover` racing a live merge could delete the
-    * in-flight writer's pre-commit staging, or double-roll-forward the
-    * same pending manifest against the committing writer's swap loop).
-    * Lease-holding writers call [[recoverHeld]] with their own id. */
+  /** Recover the lake at `lakeDir` from an interrupted writer, if any: a
+    * pending manifest is ROLLED FORWARD ([[rollForward]]); orphaned
+    * pre-commit staging directories are ROLLED BACK (deleted — the live
+    * lake never saw them). Every writer runs this at entry (see the
+    * Writer protocol); safe (and a no-op) on a healthy lake. Returns true
+    * iff a pending commit was completed. It mutates, so it runs under the
+    * lease like every other mutator: a leaseless `LakeAdmin --op recover`
+    * racing a live merge could delete its pre-commit staging, or
+    * double-roll-forward the same manifest. */
   def recover(spark: SparkSession, lakeDir: String,
       leaseStaleMs: Long = 15L * 60 * 1000,
-      occStaleMs: Long = 15L * 60 * 1000): Boolean = {
-    val fs = hadoopFs(spark, lakeDir)
-    if (!fs.exists(new Path(lakeDir))) return false
-    val recoverId = java.util.UUID.randomUUID.toString
-    acquireLease(fs, lakeDir, recoverId, leaseStaleMs)
-    try recoverHeld(spark, lakeDir, recoverId, occStaleMs)
-    finally releaseLease(fs, lakeDir, recoverId)
-  }
-
+      occStaleMs: Long = 15L * 60 * 1000): Boolean =
+    hadoopFs(spark, lakeDir).exists(new Path(lakeDir)) &&
+      withLease(spark, lakeDir, leaseStaleMs, occStaleMs)(_.recovered)
 
   /** [[acquireLease]] with a bounded WAIT — for OCC COMMIT WINDOWS only
     * (round 17): an optimistic writer holds the lease just for its short
@@ -700,31 +675,15 @@ object LakeMerge {
     }
   }
 
-  /** [[recover]] for a caller that ALREADY holds the lease as
-    * `writerId`. Heartbeats the lease per roll-forward swap (review
-    * finding: a long recovery swap loop under the default no-op
-    * onProgress could exceed staleMs and be stolen mid-loop — the same
-    * double-roll-forward race the per-swap heartbeat in
-    * commitStagedSwaps closes for the committing writer). */
-  private[io] def recoverHeld(spark: SparkSession, lakeDir: String,
+  /** [[recover]] for a caller that ALREADY holds the lease as `writerId`
+    * (its heartbeat covers the roll-forward's swaps). */
+  private def recoverHeld(spark: SparkSession, lakeDir: String,
       writerId: String, occStaleMs: Long = 15L * 60 * 1000): Boolean = {
     val root = new Path(lakeDir)
     val fs = hadoopFs(spark, lakeDir)
     if (!fs.exists(root)) return false
     val pending = readManifest(fs, lakeDir)
-    pending.foreach { m =>
-      applySwaps(fs, lakeDir, m.partitionCol,
-        new Path(lakeDir, m.staging), m.partitions,
-        onProgress = () => heartbeatLease(fs, lakeDir, writerId),
-        historyTo = m.histSeq.filter(_ => m.retainHist)
-          .map(LakeTimeTravel.historyDir(lakeDir, _)),
-        dropped = m.dropped.toSet)
-      publishFeed(fs, lakeDir, m)
-      m.histSeq.foreach(seq => LakeTimeTravel.writeCommitRecord(fs, lakeDir,
-        LakeTimeTravel.CommitRecord(seq, m.mergeId, m.op, m.partitionCol,
-          m.partitions, m.created, m.retainHist, m.dropped)))
-      finishCommit(fs, lakeDir, m)
-    }
+    pending.foreach(rollForward(fs, lakeDir, writerId, _))
     // any staging dir still present is un-manifested pre-commit debris;
     // orphan metadata TEMP files (a crash between a manifest/commit-record
     // create and its rename) are equally dead — both names are
@@ -764,7 +723,9 @@ object LakeMerge {
     * update). Creating `_commits/` BEFORE the snapshot is read puts every
     * later commit under the once-a-log-exists recording rule; an empty
     * log dir reads as zero commits everywhere, so the bootstrap is
-    * observable only as recording switching on. */
+    * observable only as recording switching on. A pending manifest counts
+    * as committed (the manifest IS the commit point), hence its histSeq
+    * joins the max. */
   private def occSnapshotSeq(spark: SparkSession, fs: FileSystem,
       lakeDir: String): Long = {
     fs.mkdirs(LakeTimeTravel.commitsDir(lakeDir))
@@ -796,6 +757,162 @@ object LakeMerge {
     t.setDaemon(true)
     t.start()
     () => { stop.set(true); t.interrupt(); t.join(2000) }
+  }
+
+  // ---- the writer skeleton (see the Writer protocol) ---------------------
+
+  /** A held lease: the holder's id, and whether the entry recovery
+    * completed a pending commit. */
+  private[io] final case class Lease(id: String, recovered: Boolean)
+
+  /** Run `body` under the lake's single-writer lease: acquire (fail-fast),
+    * recover, body, release — the whole protocol of a writer that stages
+    * nothing. */
+  private[io] def withLease[T](spark: SparkSession, lakeDir: String,
+      leaseStaleMs: Long = 15L * 60 * 1000,
+      occStaleMs: Long = 15L * 60 * 1000)(body: Lease => T): T = {
+    val fs = hadoopFs(spark, lakeDir)
+    val id = java.util.UUID.randomUUID.toString
+    acquireLease(fs, lakeDir, id, leaseStaleMs)
+    try body(Lease(id, recoverHeld(spark, lakeDir, id, occStaleMs)))
+    finally releaseLease(fs, lakeDir, id)
+  }
+
+  /** Run a staging writer's `body` inside the Writer protocol: the lease
+    * for the whole run (or, with `occ`, the snapshot and a commit-window
+    * lease), entry recovery, and a [[Writer]] whose `commit` is the one
+    * way a staged rewrite reaches the lake. `externalLease` is the hook
+    * for compound writers ([[IntegrityManifest.mergeAndMaintain]]) that
+    * hold the lease ACROSS this write plus their own follow-up work
+    * through [[withLease]] (which has recovered already) — the lease is
+    * not reentrant, so the outer holder passes its id down and this
+    * writer heartbeats and identifies as it. `beforeOccCommit` runs just
+    * before an OCC commit window (the specs' interleaving hook). */
+  private[io] def write[T](spark: SparkSession, lakeDir: String,
+      occ: Boolean = false, externalLease: Option[String] = None,
+      leaseStaleMs: Long = 15L * 60 * 1000,
+      beforeOccCommit: () => Unit = () => ())(body: Writer => T): T = {
+    require(hadoopFs(spark, lakeDir).exists(new Path(lakeDir)),
+      s"no lake at $lakeDir — initialize with LakeMerge.writeLake")
+    require(!(occ && externalLease.nonEmpty),
+      "optimistic writers manage their own commit-time lease — " +
+        "externalLease is a pessimistic-writer hook")
+    def run(id: String): T = {
+      val w = new Writer(spark, lakeDir, id, occ, leaseStaleMs, beforeOccCommit)
+      try body(w) finally w.close()
+    }
+    if (occ) run("occ-" + java.util.UUID.randomUUID.toString)
+    else externalLease.map(run)
+      .getOrElse(withLease(spark, lakeDir, leaseStaleMs)(l => run(l.id)))
+  }
+
+  /** One staging writer inside [[write]]: owns its id (the lease holder
+    * and staging suffix), the OCC snapshot, the staging directory and its
+    * heartbeats, and the commit. */
+  private[io] final class Writer private[LakeMerge] (spark: SparkSession,
+      lakeDir: String, val id: String, occ: Boolean, leaseStaleMs: Long,
+      beforeOccCommit: () => Unit) {
+    val fs: FileSystem = hadoopFs(spark, lakeDir)
+    // the newest commit visible before any input is read: at commit time
+    // every later commit touching our partitions is a conflict
+    private val snapshotSeq =
+      if (occ) occSnapshotSeq(spark, fs, lakeDir) else -1L
+    private var stagingBeat: Option[AutoCloseable] = None
+
+    /** The dot-prefixed staging directory Spark readers ignore; an OCC
+      * writer's first use starts its mtime heartbeat. */
+    lazy val staging: Path = {
+      val p = new Path(lakeDir, StagingPrefix + id)
+      if (occ) stagingBeat = Some(stagingHeartbeat(fs, p))
+      p
+    }
+
+    /** Between phases: bump (and theft-check) the lease a pessimistic
+      * writer holds; an OCC writer holds none yet. */
+    def heartbeat(): Unit = if (!occ) heartbeatLease(fs, lakeDir, id)
+
+    /** Partitions a pending manifest is mid-swap on: an OCC writer reads
+      * live directories without recovering, so these would read torn. */
+    def midSwap: Set[String] =
+      if (!occ) Set.empty
+      else readManifest(fs, lakeDir).map(_.partitions.toSet).getOrElse(Set.empty)
+
+    /** Refuse an OCC `op` whose partitions a pending manifest is mid-swap
+      * on; a DISJOINT pending commit never intersects what we read. */
+    def refuseMidSwap(op: String, values: Seq[String]): Unit =
+      if (occ) readManifest(fs, lakeDir).foreach { m =>
+        val overlap = m.partitions.toSet.intersect(values.toSet)
+        require(overlap.isEmpty,
+          s"optimistic $op: writer ${m.mergeId} is committing on " +
+            s"${overlap.toSeq.sorted.mkString(", ")} — run recover() or " +
+            "retry after its roll-forward")
+      }
+
+    /** Commit the partitions `values` staged under [[staging]] (`dropped`
+      * ones, emptied by a delete, have no staged directory) as commit-log
+      * op `op`. `feed`, when given, is staged beside them before the
+      * commit point so a crash rolls it back or publishes it with the
+      * rest; its seq is assigned under the lease. An OCC writer runs
+      * `beforeOccCommit`, then its commit window. */
+    def commit(op: String, partitionCol: String, values: Seq[String],
+        feed: Option[DataFrame], retainHistory: Boolean,
+        crashAfterSwaps: Int, dropped: Seq[String] = Seq.empty): Unit = {
+      heartbeat()
+      feed.foreach(_.write.mode("overwrite")
+        .parquet(new Path(staging, ChangeFeedStagedName).toString))
+      def swap(): Unit = commitStagedSwaps(op, partitionCol, values,
+        feed.map(_ => nextChangeSeq(fs, lakeDir)), retainHistory,
+        crashAfterSwaps, dropped)
+      if (!occ) swap()
+      else {
+        beforeOccCommit()
+        acquireLeaseWaiting(fs, lakeDir, id, leaseStaleMs)
+        try {
+          recoverHeld(spark, lakeDir, id)
+          val mine = values.toSet
+          val conflicts = LakeTimeTravel.readCommits(spark, lakeDir)
+            .filter(c => c.seq > snapshotSeq && c.partitions.exists(mine))
+          if (conflicts.nonEmpty) {
+            fs.delete(staging, true)
+            val named = conflicts.map(c => s"seq ${c.seq} (${c.op} on " +
+              s"${c.partitions.filter(mine).sorted.mkString(",")})")
+              .mkString("; ")
+            throw new java.util.ConcurrentModificationException(
+              s"optimistic $op conflicts with $named — committed since " +
+                s"snapshot seq $snapshotSeq; re-run against the fresh lake")
+          }
+          swap()
+        } finally releaseLease(fs, lakeDir, id)
+      }
+    }
+
+    /** The commit point and [[rollForward]]: verify staging, assign the
+      * commit-log seq — when retention is requested, the writer is OCC
+      * (conflict detection reads the log), or a log already exists: once
+      * it does EVERY commit records itself, or
+      * [[LakeTimeTravel.readLakeAsOf]]'s broken-chain refusal could not
+      * see the gap — write the manifest, roll forward. */
+    private def commitStagedSwaps(op: String, partitionCol: String,
+        values: Seq[String], changeSeq: Option[Long], retainHistory: Boolean,
+        crashAfterSwaps: Int, dropped: Seq[String]): Unit = {
+      values.filterNot(dropped.toSet).foreach { v =>
+        require(fs.exists(new Path(staging, s"$partitionCol=$v")),
+          s"staged partition $partitionCol=$v missing — staging write failed")
+      }
+      val histSeq =
+        if (retainHistory || occ || fs.exists(LakeTimeTravel.commitsDir(lakeDir)))
+          Some(LakeTimeTravel.nextCommitSeq(fs, lakeDir))
+        else None
+      val created = values.filterNot(v =>
+        fs.exists(new Path(lakeDir, s"$partitionCol=$v")))
+      val manifest = PendingMerge(id, staging.getName, partitionCol, values,
+        changeSeq, histSeq, retainHistory, created, op, dropped)
+      writeManifest(fs, lakeDir, manifest)
+      // from here on a crash is recoverable forward
+      rollForward(fs, lakeDir, id, manifest, crashAfterSwaps)
+    }
+
+    private[LakeMerge] def close(): Unit = stagingBeat.foreach(_.close())
   }
 
   /** Derive the lake partition column from an event-time column — one
@@ -1145,12 +1262,9 @@ object LakeMerge {
     * must re-seed; that is the same contract as Delta's CDF retention.
     * Returns the number of commits removed. */
   def vacuumChanges(spark: SparkSession, lakeDir: String, consumedSeq: Long,
-      leaseStaleMs: Long = 15L * 60 * 1000): Int = {
-    val fs = hadoopFs(spark, lakeDir)
-    val writerId = java.util.UUID.randomUUID.toString
-    acquireLease(fs, lakeDir, writerId, leaseStaleMs)
-    try {
-      recoverHeld(spark, lakeDir, writerId)
+      leaseStaleMs: Long = 15L * 60 * 1000): Int =
+    withLease(spark, lakeDir, leaseStaleMs) { _ =>
+      val fs = hadoopFs(spark, lakeDir)
       val dir = new Path(lakeDir, ChangesDirName)
       val published =
         if (!fs.exists(dir)) Seq.empty
@@ -1183,8 +1297,7 @@ object LakeMerge {
         .filter(_.getName.stripPrefix("seq=").toLong <= consumedSeq)
       victims.foreach(p => fs.delete(p, true))
       victims.length
-    } finally releaseLease(fs, lakeDir, writerId)
-  }
+    }
 
   /** Explicit pruned read of the named partitions: one read per affected
     * directory with the partition value restored as a literal — never a
@@ -1212,11 +1325,13 @@ object LakeMerge {
     * matched keys take the update row, unmatched insert. `updates` must
     * carry `partitionCol` (see [[withPartDate]]) and the lake's exact
     * column set. Returns per-merge stats; all counts ride parquet
-    * footers / the staged write, never an extra data scan. Recovers any
-    * interrupted prior merge first (see [[recover]]).
+    * footers / the staged write, never an extra data scan. Runs inside
+    * the Writer protocol (object scaladoc): op `merge`.
     * `captureChanges = true` additionally publishes this merge's
     * [[changeFeed]] at `_changes/seq=N` (read it back with
-    * [[readChanges]]) — crash-atomic with the merge itself. */
+    * [[readChanges]]) — crash-atomic with the merge itself. With
+    * `occ = true` a refused commit (`ConcurrentModificationException`)
+    * changed nothing: re-run the batch against the fresh lake. */
   def merge(spark: SparkSession, lakeDir: String, updates: DataFrame,
       keyCols: Seq[String] = Seq("tms_id", "fgt", "time"),
       partitionCol: String = "part_date", seriesCol: String = "tms_id",
@@ -1234,12 +1349,8 @@ object LakeMerge {
       occ = occ)
 
   /** [[merge]] with crash injection (`crashAfterSwaps`) for
-    * LakeMergeSpec's kill-between-renames cases, and an `externalLease`
-    * hook for compound writers ([[IntegrityManifest.mergeAndMaintain]])
-    * that must hold the lake's lease ACROSS the merge plus their own
-    * follow-up work — the lease is not reentrant, so the outer holder
-    * passes its writer id down and this merge heartbeats/identifies as
-    * it instead of acquiring. */
+    * LakeMergeSpec's kill-between-renames cases and the [[write]] hooks
+    * (`externalLease`, `beforeOccCommit`). */
   private[graft] def mergeImpl(spark: SparkSession, lakeDir: String,
       updates: DataFrame, keyCols: Seq[String], partitionCol: String,
       seriesCol: String, timeCol: String, filesPerPartition: Int,
@@ -1254,35 +1365,12 @@ object LakeMerge {
     require(updates.columns.contains(partitionCol),
       s"updates must carry the lake partition column '$partitionCol' " +
         "(derive it with LakeMerge.withPartDate)")
-    val fsEntry = hadoopFs(spark, lakeDir)
-    require(fsEntry.exists(new Path(lakeDir)),
-      s"no lake at $lakeDir — initialize with LakeMerge.writeLake")
-    // the whole merge — recovery included — runs under the single-writer
-    // lease; the merge id doubles as the lease holder id, so a stuck
-    // lease names the merge that held it
-    require(!(occ && externalLease.nonEmpty),
-      "optimistic merges manage their own commit-time lease — " +
-        "externalLease is a pessimistic-writer hook")
     require(!(occ && schemaEvolution),
       "schema evolution is a lake-wide metadata write — run it under the " +
         "pessimistic writer (occ = false)")
-    val mergeId =
-      if (occ) "occ-" + java.util.UUID.randomUUID.toString
-      else externalLease.getOrElse(java.util.UUID.randomUUID.toString)
-    if (externalLease.isEmpty && !occ)
-      acquireLease(fsEntry, lakeDir, mergeId, leaseStaleMs)
-    // OCC SNAPSHOT (round 16): the newest commit visible before any input
-    // is read. At commit time every commit above this seq that touches our
-    // partitions is a conflict; a pending manifest counts as committed
-    // (the manifest IS the commit point), hence its histSeq joins the max.
-    // The snapshot read BOOTSTRAPS the commit log (see occSnapshotSeq) so
-    // a concurrent pessimistic commit on a previously logless lake still
-    // records itself and the conflict is visible.
-    val snapshotSeq: Long =
-      if (!occ) -1L else occSnapshotSeq(spark, fsEntry, lakeDir)
-    try {
-    if (!occ) // an OCC writer holds no lease here; recovery runs at commit
-      recoverHeld(spark, lakeDir, mergeId)
+    write(spark, lakeDir, occ, externalLease, leaseStaleMs,
+        beforeOccCommit) { w =>
+    val fs = w.fs
     val allParts = partitionValues(spark, lakeDir, partitionCol)
     require(allParts.nonEmpty,
       s"no lake at $lakeDir — initialize with LakeMerge.writeLake")
@@ -1303,7 +1391,7 @@ object LakeMerge {
     val widenedSchema: Option[org.apache.spark.sql.types.StructType] =
       if (!schemaEvolution) None
       else {
-        val curSchema = lakeSchema(fsEntry, lakeDir)
+        val curSchema = lakeSchema(fs, lakeDir)
           .getOrElse(readLake(spark, lakeDir, partitionCol).schema)
         val curNames = curSchema.fieldNames.toSet
         val missing = curNames -- updates.columns.toSet
@@ -1316,7 +1404,7 @@ object LakeMerge {
           curSchema.fields ++ extra.map(_.copy(nullable = true))))
       }
     val lakeCols = widenedSchema.map(_.fieldNames.toSeq)
-      .orElse(lakeSchema(fsEntry, lakeDir).map(_.fieldNames.toSeq))
+      .orElse(lakeSchema(fs, lakeDir).map(_.fieldNames.toSeq))
       .getOrElse(readLake(spark, lakeDir, partitionCol).columns.toSeq)
       .sorted
     require(updates.columns.sorted.toSeq == lakeCols,
@@ -1325,18 +1413,17 @@ object LakeMerge {
         "true to add new columns)")
 
     // evaluate the batch ONCE: the validation pass, the anti-join, the
-    // staging write and (with capture on) the change feed all read this
-    // checkpoint — an un-cached `updates` (typically the tail of an
+    // staging write and (with capture on) the change feed all read its
+    // kept rows — an un-cached `updates` (typically the tail of an
     // extraction pipeline) would re-run its full lineage for each, and the
     // merge's cost must scale with the date span, not with the batch's
     // production cost times its readers (second-review finding).
-    // Batch-sized by contract, released before return.
-    val upd = updates.localCheckpoint(true)
-    try {
+    // Batch-sized by contract, freed before return.
+    GraftBridge.withKeptRows(updates) { upd =>
 
     // ONE validation pass: a per-key aggregate folded into a single row
     // answers every batch check, the affected-partition list and the row
-    // count — one action over the checkpoint instead of one per check
+    // count — one action over the cached batch instead of one per check
     // (FuseME's fusion of operators that read the same input). The
     // refusals below keep their messages and order:
     //  - NULL key columns break exactly-once-by-key at its root: the
@@ -1394,38 +1481,22 @@ object LakeMerge {
 
     // 1. PRUNE — the affected partitions are the updates' date span
     val affected = checks.getSeq[String](5).toSeq.sorted
-    val fs = hadoopFs(spark, lakeDir)
-    // an OCC writer reads live directories directly (no lease to recover
-    // under); a manifest mid-swap on OUR partitions would make those
-    // reads torn or stale — refuse up front. A DISJOINT pending commit
-    // never intersects what we read and proceeds.
-    if (occ) readManifest(fs, lakeDir).foreach { m =>
-      val overlap = m.partitions.toSet.intersect(affected.toSet)
-      require(overlap.isEmpty,
-        s"optimistic merge: writer ${m.mergeId} is committing on " +
-          s"${overlap.toSeq.sorted.mkString(", ")} — run recover() or " +
-          "retry after its roll-forward")
-    }
+    w.refuseMidSwap("merge", affected)
 
     // EVERY batch refusal is behind us — NOW the widening may land (see
     // the E178 ordering note above; the second review pass caught the
     // NULL-partition refusal still sitting after the first fix's write
     // point): readers from here on, including this merge's own
     // affected-partition reads, resolve through the widened schema
-    widenedSchema.foreach(writeSchemaVersion(fsEntry, lakeDir, _))
+    widenedSchema.foreach(writeSchemaVersion(fs, lakeDir, _))
 
     // an empty batch affects no partition: nothing to stage or commit (its
     // staging write would hold no file to read the row count back from)
     if (rowsUpserted == 0L)
-      return MergeStats(allParts.length, 0, 0L, 0L, 0L, 0L, 0L, mergeId)
-
-    // 2. REWRITE into staging (dot-prefixed: invisible to Spark readers)
-    if (!occ) heartbeatLease(fs, lakeDir, mergeId) // validations done
-    val staging = new Path(lakeDir, StagingPrefix + mergeId)
-    // leaseless staging stays mtime-fresh for the whole write + commit
-    // window, however long the write runs (see stagingHeartbeat)
-    val stagingHb = if (occ) Some(stagingHeartbeat(fs, staging)) else None
-    try {
+      MergeStats(allParts.length, 0, 0L, 0L, 0L, 0L, 0L, w.id)
+    else {
+    // 2. REWRITE into staging
+    w.heartbeat() // validations done
     val current = readPartitions(spark, lakeDir, partitionCol, affected)
     val rowsBefore = current.map(_.count()).getOrElse(0L) // footer-count only
     val merged = current match {
@@ -1440,83 +1511,27 @@ object LakeMerge {
     merged.repartition(filesPerPartition, col(partitionCol), col(seriesCol))
       .sortWithinPartitions(partitionCol, seriesCol, timeCol)
       .write.mode("overwrite").partitionBy(partitionCol)
-      .parquet(staging.toString)
+      .parquet(w.staging.toString)
     val rowsAfter =
-      spark.read.parquet(staging.toString).count() // footer-count only
+      spark.read.parquet(w.staging.toString).count() // footer-count only
 
-    if (!occ) heartbeatLease(fs, lakeDir, mergeId) // staging written
-
-    // CHANGE FEED (optional, round 15): captured into staging BEFORE the
-    // manifest write so the commit point covers it — a pre-commit crash
-    // rolls the feed back with the rest of staging, a post-commit crash
-    // publishes it during roll-forward ([[publishFeed]]). The preimage
-    // side re-reads the affected partitions (still live here — the swap
-    // has not run), one extra pruned scan that exists only when capture
-    // is on.
-    // rowsUpserted == 0 publishes nothing: an EMPTY commit's seq never
-    // reaches a consumer as a row, so the feed's dense-seq contract
-    // (FeedMaintain.foldInto's gap check) would read it as a hole
-    val captureFeed = captureChanges && rowsUpserted > 0
-    if (captureFeed)
-      changeFeed(current, upd, keyCols).write.mode("overwrite")
-        .parquet(new Path(staging, ChangeFeedStagedName).toString)
-    // the feed seq is assigned UNDER the lease: a pessimistic writer
-    // holds it here already; an OCC writer defers assignment to its
-    // commit window below (two leaseless writers would race the number)
-    val changeSeqOpt =
-      if (captureFeed && !occ) Some(nextChangeSeq(fs, lakeDir)) else None
-
-    // 3. COMMIT + 4. SWAP + 5. CLEAN — the shared tail: every staged
-    // partition verified on disk BEFORE the manifest is written (the
-    // manifest promises roll-forward can finish, so a missing staged
-    // directory aborts pre-commit — live lake untouched, staging
-    // garbage-collected by the next recover)
-    if (occ) {
-      // OPTIMISTIC COMMIT (round 16, Delta-style): the lease is held only
-      // for this window — roll forward any pending writer, re-read the
-      // commit log, succeed iff no commit since our snapshot touched our
-      // partitions (else refuse NAMING the conflicting seq, staging
-      // cleaned — the caller re-runs against the fresh lake)
-      beforeOccCommit()
-      acquireLeaseWaiting(fs, lakeDir, mergeId, leaseStaleMs)
-      try {
-        recoverHeld(spark, lakeDir, mergeId)
-        val mine = affected.toSet
-        val conflicts = LakeTimeTravel.readCommits(spark, lakeDir)
-          .filter(c => c.seq > snapshotSeq && c.partitions.exists(mine))
-        if (conflicts.nonEmpty) {
-          fs.delete(staging, true)
-          val named = conflicts.map(c => s"seq ${c.seq} (${c.op} on " +
-            s"${c.partitions.filter(mine).sorted.mkString(",")})")
-            .mkString("; ")
-          throw new java.util.ConcurrentModificationException(
-            s"optimistic merge conflicts with $named — committed since " +
-              s"snapshot seq $snapshotSeq; re-run against the fresh lake")
-        }
-        val occSeq = if (captureFeed) Some(nextChangeSeq(fs, lakeDir)) else None
-        commitStagedSwaps(fs, lakeDir, mergeId, "merge", partitionCol,
-          staging, affected, occSeq, retainHistory, crashAfterSwaps,
-          forceRecord = true)
-      } finally releaseLease(fs, lakeDir, mergeId)
-    } else
-      commitStagedSwaps(fs, lakeDir, mergeId, "merge", partitionCol,
-        staging, affected, changeSeqOpt, retainHistory, crashAfterSwaps)
+    // 3.-5. the commit, with the optional CHANGE FEED (round 15): its
+    // preimage side re-reads the affected partitions (still live — the
+    // swap has not run), one extra pruned scan only when capture is on
+    w.commit("merge", partitionCol, affected,
+      if (captureChanges) Some(changeFeed(current, upd, keyCols)) else None,
+      retainHistory, crashAfterSwaps)
 
     // updated = keys that existed before (rows replaced in place);
     // inserted = net new rows. Both derive from the three footer counts.
     val rowsUpdated = rowsBefore + rowsUpserted - rowsAfter
-    // mergeId rides the stats so callers can stamp derived artifacts
-    // (e.g. an incremental IntegrityManifest) with the lake state they
-    // reflect (round 15)
+    // the writer id rides the stats so callers can stamp derived
+    // artifacts (e.g. an incremental IntegrityManifest) with the lake
+    // state they reflect (round 15)
     MergeStats(allParts.length, affected.length, rowsBefore, rowsUpserted,
-      rowsUpdated, rowsUpserted - rowsUpdated, rowsAfter, mergeId)
-
-    } finally stagingHb.foreach(_.close())
-    // release the entry checkpoint — every action above has completed
-    } finally upd.unpersist()
-    } finally {
-      if (externalLease.isEmpty && !occ)
-        releaseLease(fsEntry, lakeDir, mergeId)
+      rowsUpdated, rowsUpserted - rowsUpdated, rowsAfter, w.id)
+    }
+    }
     }
   }
 
@@ -1529,11 +1544,10 @@ object LakeMerge {
   /** DELETE every lake row whose key appears in `keys` — the GDPR /
     * right-to-be-forgotten purge, takedown compliance, and
     * contaminated-document removal primitive the upsert-only K2 surface
-    * lacked (E174). Same copy-on-write discipline as [[merge]]: only the
-    * affected partitions are rewritten (surviving rows re-staged under
-    * the lake's clustering contract), the commit is the atomic manifest
-    * write, a crash anywhere heals through the same [[recover]]
-    * roll-forward, and the whole run holds the single-writer lease.
+    * lacked (E174). Same copy-on-write discipline as [[merge]] (op
+    * `delete` in the Writer protocol): only the affected partitions are
+    * rewritten, surviving rows re-staged under the lake's clustering
+    * contract.
     *
     * A partition whose every row is purged is DROPPED: no staged
     * replacement exists, the manifest's `dropped` list records the fact,
@@ -1569,7 +1583,10 @@ object LakeMerge {
     * rows until [[LakeTimeTravel.vacuum]] passes the commit — run
     * retention-free deletes, or vacuum promptly, when erasure is the
     * point). Idempotent: re-running the same purge set finds no matches
-    * and rewrites nothing. */
+    * and rewrites nothing. With `occ = true` a refused commit
+    * (`ConcurrentModificationException`) removed nothing: erasure
+    * obligations make the re-run against the fresh lake mandatory, not
+    * optional. */
   def delete(spark: SparkSession, lakeDir: String, keys: DataFrame,
       keyCols: Seq[String] = Seq("tms_id", "fgt", "time"),
       partitionCol: String = "part_date", seriesCol: String = "tms_id",
@@ -1584,9 +1601,7 @@ object LakeMerge {
 
   /** [[delete]] with crash injection (LakeDeleteSpec's kill-between-
     * renames cases, including a kill between a DROP's park and the next
-    * partition's swap) and the `externalLease` hook for compound writers
-    * ([[IntegrityManifest.deleteAndMaintain]]) — same contract as
-    * [[mergeImpl]]'s. */
+    * partition's swap) and the [[write]] hooks — as [[mergeImpl]]. */
   private[io] def deleteImpl(spark: SparkSession, lakeDir: String,
       keys: DataFrame, keyCols: Seq[String], partitionCol: String,
       seriesCol: String, timeCol: String, filesPerPartition: Int,
@@ -1598,42 +1613,29 @@ object LakeMerge {
       beforeOccCommit: () => Unit = () => ()): DeleteStats = {
     keyCols.foreach(c => require(keys.columns.contains(c),
       s"keys must carry every key column — missing '$c'"))
-    require(!(occ && externalLease.nonEmpty),
-      "optimistic deletes manage their own commit-time lease — " +
-        "externalLease is a pessimistic-writer hook")
-    val fs = hadoopFs(spark, lakeDir)
-    require(fs.exists(new Path(lakeDir)),
-      s"no lake at $lakeDir — initialize with LakeMerge.writeLake")
-    val deleteId =
-      if (occ) "occ-" + java.util.UUID.randomUUID.toString
-      else externalLease.getOrElse(java.util.UUID.randomUUID.toString)
-    if (externalLease.isEmpty && !occ)
-      acquireLease(fs, lakeDir, deleteId, leaseStaleMs)
-    // OCC snapshot (log-bootstrapping — see occSnapshotSeq): a GDPR purge
-    // must not wait behind a long compaction touching OTHER partitions
-    val snapshotSeq: Long =
-      if (!occ) -1L else occSnapshotSeq(spark, fs, lakeDir)
-    try {
-      if (!occ) recoverHeld(spark, lakeDir, deleteId)
+    write(spark, lakeDir, occ, externalLease, leaseStaleMs,
+        beforeOccCommit) { w =>
+      val fs = w.fs
       val allParts = partitionValues(spark, lakeDir, partitionCol)
       require(allParts.nonEmpty,
         s"no lake at $lakeDir — initialize with LakeMerge.writeLake")
       // evaluate the purge batch ONCE (it is typically the tail of a
-      // takedown/contamination pipeline); deduped — duplicate purge keys
-      // are harmless to an anti-join but bloat the broadcast
+      // takedown/contamination pipeline), freed before return; deduped —
+      // duplicate purge keys are harmless to an anti-join but bloat the
+      // broadcast
       val hasPart = keys.columns.contains(partitionCol)
       val kCols = keyCols ++ (if (hasPart) Seq(partitionCol) else Nil)
-      val k = keys.select(kCols.map(col): _*).distinct().localCheckpoint(true)
-      // per-partition key scoping (review finding): when partitions are
-      // asserted, the probe and the rewrite join on key+partition so a
-      // key asserted into partition A cannot delete a matching key row
-      // living in a different affected partition B. Cast the asserted
-      // partition to string to match readPartitions' restored literal.
-      val joinCols = if (hasPart) keyCols :+ partitionCol else keyCols
-      val kScoped =
-        if (hasPart) k.withColumn(partitionCol, col(partitionCol).cast("string"))
-        else k
-      try {
+      GraftBridge.withKeptRows(
+          keys.select(kCols.map(col): _*).distinct()) { k =>
+        // per-partition key scoping: when partitions are asserted, the
+        // probe and the rewrite join on key+partition so a key asserted
+        // into partition A cannot delete a matching key row living in a
+        // different affected partition B. Cast the asserted partition to
+        // string to match readPartitions' restored literal.
+        val joinCols = if (hasPart) keyCols :+ partitionCol else keyCols
+        val kScoped =
+          if (hasPart) k.withColumn(partitionCol, col(partitionCol).cast("string"))
+          else k
         // NULL keys never equi-join: such a row would silently SURVIVE
         // the purge — for a forget-me operation a silent miss is the
         // worst failure mode, so refuse loudly
@@ -1675,25 +1677,15 @@ object LakeMerge {
             matchedPartitions(readLake(spark, lakeDir, partitionCol)
               .select((keyCols :+ partitionCol).map(col): _*))
         if (affected.isEmpty)
-          return DeleteStats(allParts.length, 0, 0, 0L, 0L, 0L, deleteId)
-        // OCC: refuse a mid-swap overlap up front (torn reads) — the
-        // disjoint case proceeds; see mergeImpl
-        if (occ) readManifest(fs, lakeDir).foreach { m =>
-          val overlap = m.partitions.toSet.intersect(affected.toSet)
-          require(overlap.isEmpty,
-            s"optimistic delete: writer ${m.mergeId} is committing on " +
-              s"${overlap.toSeq.sorted.mkString(", ")} — run recover() " +
-              "or retry after its roll-forward")
-        }
-        if (!occ) heartbeatLease(fs, lakeDir, deleteId)
+          DeleteStats(allParts.length, 0, 0, 0L, 0L, 0L, w.id)
+        else {
+        w.refuseMidSwap("delete", affected)
+        w.heartbeat()
 
         // REWRITE the survivors into staging — the lake's clustering
         // contract unchanged; a partition whose every row is purged
         // writes NO staged directory (partitionBy emits nothing for an
         // empty partition), which is exactly the dropped signal
-        val staging = new Path(lakeDir, StagingPrefix + deleteId)
-        val stagingHb = if (occ) Some(stagingHeartbeat(fs, staging)) else None
-        try {
         val current = readPartitions(spark, lakeDir, partitionCol, affected)
           .getOrElse(throw new IllegalStateException(
             s"affected partitions vanished mid-delete on $lakeDir"))
@@ -1703,9 +1695,9 @@ object LakeMerge {
           .repartition(filesPerPartition, col(partitionCol), col(seriesCol))
           .sortWithinPartitions(partitionCol, seriesCol, timeCol)
           .write.mode("overwrite").partitionBy(partitionCol)
-          .parquet(staging.toString)
+          .parquet(w.staging.toString)
         val dropped = affected.filterNot(v =>
-          fs.exists(new Path(staging, s"$partitionCol=$v")))
+          fs.exists(new Path(w.staging, s"$partitionCol=$v")))
         // the degenerate full-lake drop is refused PRE-commit: live lake
         // untouched, staging GC'd by the next recover()
         require(dropped.length < allParts.length,
@@ -1714,58 +1706,19 @@ object LakeMerge {
             "instead")
         val rowsAfter =
           if (dropped.length == affected.length) 0L
-          else spark.read.parquet(staging.toString).count() // footers only
-        if (!occ) heartbeatLease(fs, lakeDir, deleteId)
+          else spark.read.parquet(w.staging.toString).count() // footers only
 
-        // CHANGE FEED (optional): the purged pre-images, staged before
-        // the manifest write so the commit point covers it — same
-        // crash-atomicity as the merge's feed; under OCC the seq is
-        // assigned inside the commit window (see mergeImpl)
-        if (captureChanges)
-          deleteFeed(current, keyOnly, joinCols).write.mode("overwrite")
-            .parquet(new Path(staging, ChangeFeedStagedName).toString)
-        val changeSeqOpt =
-          if (captureChanges && !occ) Some(nextChangeSeq(fs, lakeDir))
-          else None
-
-        // COMMIT / SWAP / CLEAN — the shared tail; dropped partitions
-        // park their pre-image and leave nothing
-        if (occ) {
-          beforeOccCommit()
-          acquireLeaseWaiting(fs, lakeDir, deleteId, leaseStaleMs)
-          try {
-            recoverHeld(spark, lakeDir, deleteId)
-            val mine = affected.toSet
-            val conflicts = LakeTimeTravel.readCommits(spark, lakeDir)
-              .filter(c => c.seq > snapshotSeq && c.partitions.exists(mine))
-            if (conflicts.nonEmpty) {
-              fs.delete(staging, true)
-              val named = conflicts.map(c => s"seq ${c.seq} (${c.op} on " +
-                s"${c.partitions.filter(mine).sorted.mkString(",")})")
-                .mkString("; ")
-              throw new java.util.ConcurrentModificationException(
-                s"optimistic delete conflicts with $named — committed " +
-                  s"since snapshot seq $snapshotSeq; re-run the purge " +
-                  "against the fresh lake (erasure obligations make the " +
-                  "retry mandatory, not optional)")
-            }
-            val occSeq =
-              if (captureChanges) Some(nextChangeSeq(fs, lakeDir)) else None
-            commitStagedSwaps(fs, lakeDir, deleteId, "delete", partitionCol,
-              staging, affected, occSeq, retainHistory, crashAfterSwaps,
-              dropped, forceRecord = true)
-          } finally releaseLease(fs, lakeDir, deleteId)
-        } else
-          commitStagedSwaps(fs, lakeDir, deleteId, "delete", partitionCol,
-            staging, affected, changeSeqOpt, retainHistory, crashAfterSwaps,
-            dropped)
+        // the commit; the optional feed carries the purged pre-images and
+        // dropped partitions park their pre-image and leave nothing
+        w.commit("delete", partitionCol, affected,
+          if (captureChanges) Some(deleteFeed(current, keyOnly, joinCols))
+          else None,
+          retainHistory, crashAfterSwaps, dropped)
 
         DeleteStats(allParts.length, affected.length, dropped.length,
-          rowsBefore, rowsBefore - rowsAfter, rowsAfter, deleteId)
-        } finally stagingHb.foreach(_.close())
-      } finally k.unpersist()
-    } finally {
-      if (externalLease.isEmpty && !occ) releaseLease(fs, lakeDir, deleteId)
+          rowsBefore, rowsBefore - rowsAfter, rowsAfter, w.id)
+        }
+      }
     }
   }
 
@@ -1789,6 +1742,43 @@ object LakeMerge {
       (v, files.length, files.map(_.getLen).sum)
     }
 
+  /** The file count `bytes` ideally packs into at `targetFileBytes`. */
+  private def idealFiles(bytes: Long, targetFileBytes: Long): Int =
+    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+
+  /** The in-place rewrite compaction and z-order share: each `selected`
+    * (value, files, bytes) partition is read through the stored schema
+    * (E178 — a pre-widening partition's files UPGRADE to the current
+    * schema, the table-format "schema migration happens on rewrite"
+    * behavior), laid out by `layout` into its ideal file count, staged,
+    * and committed as `op`. Rows ride through bit-identical. */
+  private def rewritePartitions(spark: SparkSession, w: Writer,
+      lakeDir: String, op: String, partitionCol: String, partitionsTotal: Int,
+      totalFiles: Long, selected: Seq[(String, Int, Long)],
+      targetFileBytes: Long, retainHistory: Boolean, crashAfterSwaps: Int)
+      (layout: (DataFrame, Int) => DataFrame): CompactStats =
+    if (selected.isEmpty)
+      CompactStats(partitionsTotal, 0, totalFiles, totalFiles, 0L, w.id)
+    else {
+      w.heartbeat()
+      val schema = dirSchema(lakeSchema(w.fs, lakeDir), partitionCol)
+      selected.foreach { case (v, _, bytes) =>
+        layout(readerFor(spark, schema)
+            .parquet(escapeGlob(s"$lakeDir/$partitionCol=$v")),
+            idealFiles(bytes, targetFileBytes))
+          .write.mode("overwrite")
+          .parquet(new Path(w.staging, s"$partitionCol=$v").toString)
+        w.heartbeat()
+      }
+      val values = selected.map(_._1)
+      w.commit(op, partitionCol, values, None, retainHistory, crashAfterSwaps)
+      val after = partitionFileStats(w.fs, lakeDir, partitionCol, values)
+        .map(_._2.toLong).sum
+      val untouchedFiles = totalFiles - selected.map(_._2.toLong).sum
+      CompactStats(partitionsTotal, selected.length, totalFiles,
+        untouchedFiles + after, selected.map(_._3).sum, w.id)
+    }
+
   /** COMPACT partitions that have accumulated too many small files — the
     * table-format `OPTIMIZE` / bin-packing maintenance operation. At
     * 100 TB the scan tax of a fragmented lake is file-COUNT-shaped
@@ -1806,11 +1796,14 @@ object LakeMerge {
     *
     * The rewrite is PHYSICAL only: per selected partition, one pruned
     * read → `repartition(ideal, seriesCol)` → the lake's sort contract →
-    * staging; commit/swap/clean and crash recovery ride the merge's own
-    * manifest machinery unchanged (a crashed compact heals exactly like
-    * a crashed merge), the whole run under the single-writer lease. Rows
-    * are bit-identical before/after — LakeCompactSpec proves it with
+    * staging, committed as op `compact` through the Writer protocol (a
+    * crashed compact heals exactly like a crashed merge). Rows are
+    * bit-identical before/after — LakeCompactSpec proves it with
     * [[IntegrityManifest]] roots (content identity, not just counts).
+    * With `occ = true` a long compaction no longer blocks disjoint
+    * ingest merges; it skips partitions a pending manifest is mid-swap
+    * on, and a refused commit loses nothing (the partitions stay
+    * fragmented until the re-run).
     *
     * `maxPartitions` bounds one maintenance run (worst offenders first,
     * by surplus file count) — the operational knob that keeps a backlog
@@ -1829,8 +1822,8 @@ object LakeMerge {
       timeCol, maxPartitions, leaseStaleMs, Int.MaxValue, retainHistory,
       occ = occ)
 
-  /** [[compactPartitions]] with the crash-injection hook
-    * (LakeCompactSpec's kill-between-renames case). */
+  /** [[compactPartitions]] with the crash-injection and
+    * `beforeOccCommit` hooks. */
   private[graft] def compactImpl(spark: SparkSession, lakeDir: String,
       targetFileBytes: Long, partitionCol: String, seriesCol: String,
       timeCol: String, maxPartitions: Int, leaseStaleMs: Long,
@@ -1839,103 +1832,24 @@ object LakeMerge {
       beforeOccCommit: () => Unit = () => ()): CompactStats = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive")
     require(maxPartitions >= 1, s"maxPartitions must be >= 1")
-    val fs = hadoopFs(spark, lakeDir)
-    require(fs.exists(new Path(lakeDir)),
-      s"no lake at $lakeDir — initialize with LakeMerge.writeLake")
-    val compactId = (if (occ) "occ-" else "") +
-      java.util.UUID.randomUUID.toString
-    if (!occ) acquireLease(fs, lakeDir, compactId, leaseStaleMs)
-    // OCC snapshot (log-bootstrapping — see occSnapshotSeq); compaction
-    // conflicts exactly like a merge (it rewrites partitions), so the same
-    // commit-window check applies. A long compaction no longer blocks
-    // disjoint ingest merges.
-    val snapshotSeq: Long =
-      if (!occ) -1L else occSnapshotSeq(spark, fs, lakeDir)
-    try {
-      if (!occ) recoverHeld(spark, lakeDir, compactId)
+    write(spark, lakeDir, occ, None, leaseStaleMs, beforeOccCommit) { w =>
       val all = partitionValues(spark, lakeDir, partitionCol)
-      // an OCC compaction must not read (or rewrite) a partition some
-      // pending manifest is mid-swap on — just skip it this run
-      val pendingTouched: Set[String] =
-        if (!occ) Set.empty
-        else readManifest(fs, lakeDir).map(_.partitions.toSet)
-          .getOrElse(Set.empty)
-      val stats = partitionFileStats(fs, lakeDir, partitionCol,
-        all.filterNot(pendingTouched))
-      val totalFiles = stats.map(_._2.toLong).sum
-      val candidates = stats.flatMap { case (v, files, bytes) =>
-        val ideal = math.max(1L,
-          (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        if (files > ideal) Some((v, files, bytes, ideal)) else None
-      }
-      val selected = candidates
-        .sortBy { case (v, files, _, ideal) => (-(files - ideal), v) }
+      val stats = partitionFileStats(w.fs, lakeDir, partitionCol,
+        all.filterNot(w.midSwap))
+      val selected = stats
+        .filter { case (_, files, bytes) =>
+          files > idealFiles(bytes, targetFileBytes) }
+        .sortBy { case (v, files, bytes) =>
+          (-(files - idealFiles(bytes, targetFileBytes)), v) }
         .take(maxPartitions)
         .sortBy(_._1)
-      if (selected.isEmpty)
-        return CompactStats(all.length, 0, totalFiles, totalFiles, 0L,
-          compactId)
-      if (!occ) heartbeatLease(fs, lakeDir, compactId)
-
-      // REWRITE the selected partitions into staging — same clustering
-      // contract as the merge (series-hashed files, sorted within), with
-      // each partition's own ideal file count
-      val staging = new Path(lakeDir, StagingPrefix + compactId)
-      val stagingHb = if (occ) Some(stagingHeartbeat(fs, staging)) else None
-      try {
-      // the stored schema (E178) rides the rewrite: compacting a
-      // pre-widening partition UPGRADES its files to the current schema
-      // (null-filled new columns) — the table-format "schema migration
-      // happens on rewrite" behavior
-      val schemaE178 = dirSchema(lakeSchema(fs, lakeDir), partitionCol)
-      selected.foreach { case (v, _, _, ideal) =>
-        readerFor(spark, schemaE178)
-          .parquet(escapeGlob(s"$lakeDir/$partitionCol=$v"))
-          .repartition(ideal, col(seriesCol))
+      rewritePartitions(spark, w, lakeDir, "compact", partitionCol,
+          all.length, stats.map(_._2.toLong).sum, selected, targetFileBytes,
+          retainHistory, crashAfterSwaps) { (df, ideal) =>
+        df.repartition(ideal, col(seriesCol))
           .sortWithinPartitions(seriesCol, timeCol)
-          .write.mode("overwrite")
-          .parquet(new Path(staging, s"$partitionCol=$v").toString)
-        if (!occ) heartbeatLease(fs, lakeDir, compactId)
       }
-
-      // COMMIT / SWAP / CLEAN — the merge's shared tail verbatim, so a
-      // crash anywhere here heals through the same recover() path (a
-      // compact never CREATES partitions — the tail's created computation
-      // is vacuously empty here — and records a commit under the same
-      // once-a-log-exists rule so snapshot resolution sees every rewrite)
-      if (occ) {
-        beforeOccCommit()
-        acquireLeaseWaiting(fs, lakeDir, compactId, leaseStaleMs)
-        try {
-          recoverHeld(spark, lakeDir, compactId)
-          val mine = selected.map(_._1).toSet
-          val conflicts = LakeTimeTravel.readCommits(spark, lakeDir)
-            .filter(c => c.seq > snapshotSeq && c.partitions.exists(mine))
-          if (conflicts.nonEmpty) {
-            fs.delete(staging, true)
-            val named = conflicts.map(c => s"seq ${c.seq} (${c.op} on " +
-              s"${c.partitions.filter(mine).sorted.mkString(",")})")
-              .mkString("; ")
-            throw new java.util.ConcurrentModificationException(
-              s"optimistic compaction conflicts with $named — committed " +
-                s"since snapshot seq $snapshotSeq; re-run (the skipped " +
-                "partitions stay fragmented, nothing is lost)")
-          }
-          commitStagedSwaps(fs, lakeDir, compactId, "compact", partitionCol,
-            staging, selected.map(_._1), None, retainHistory,
-            crashAfterSwaps, forceRecord = true)
-        } finally releaseLease(fs, lakeDir, compactId)
-      } else
-        commitStagedSwaps(fs, lakeDir, compactId, "compact", partitionCol,
-          staging, selected.map(_._1), None, retainHistory, crashAfterSwaps)
-
-      val after = partitionFileStats(fs, lakeDir, partitionCol,
-        selected.map(_._1)).map(_._2.toLong).sum
-      val untouchedFiles = totalFiles - selected.map(_._2.toLong).sum
-      CompactStats(all.length, selected.length, totalFiles,
-        untouchedFiles + after, selected.map(_._3).sum, compactId)
-      } finally stagingHb.foreach(_.close())
-    } finally if (!occ) releaseLease(fs, lakeDir, compactId)
+    }
   }
 
   // ---- Z-order clustering maintenance (round 15) -------------------------
@@ -1943,45 +1857,28 @@ object LakeMerge {
   /** Z-ORDER a lake's partitions in place — the `OPTIMIZE ZORDER BY`
     * half of the maintenance surface ([[compactPartitions]] is the
     * bin-packing half): each selected partition is rewritten with its
-    * rows range-partitioned and sorted by the Morton interleave of
-    * (`dimA`, `dimB`) ([[Layout.zOrderKey]]), so every output file
-    * covers a small RECTANGLE in the two query dimensions and parquet
-    * min-max skipping prunes on BOTH access paths at once — the layout
-    * a lake queried by either of two dimensions needs, which no
-    * single-column sort can provide. Dim columns must be integer-like
-    * and bucketed into [0, 2^bits) for meaningful locality (the key
-    * masks out-of-range values deterministically — see
-    * [[Layout.zOrderKey]]).
+    * rows range-partitioned and sorted along a space-filling curve over
+    * the 2–4 `dims` columns (`curve` = `zorder`, the Morton interleave of
+    * [[Layout.zOrderKey]], or `hilbert`), so every output file covers a
+    * small BOX in the query dimensions and parquet min-max skipping
+    * prunes on every access path at once — the layout a lake queried by
+    * several dimensions needs (source × lang × time-bucket is the
+    * real-layout shape), which no single-column sort can provide. Dim
+    * columns must be integer-like and bucketed into [0, 2^bits) for
+    * meaningful locality (the key masks out-of-range values
+    * deterministically — see [[Layout.zOrderKey]]).
     *
     * Unlike compaction this is a REQUESTED layout change, not a
     * converging repair: there is no selection trigger, so a re-run
     * rewrites again — scope it with `partitions` (must name existing
     * directories) and/or `maxPartitions` (worst-fragmented first, the
     * same backlog-drain knob). File counts follow `targetFileBytes`
-    * exactly as in compaction; commit/swap/clean, crash recovery,
-    * optional history retention, and the stored-schema upgrade all ride
-    * the shared writer tail, the whole run under the single-writer
-    * lease. NOTE: the rewrite replaces the lake's default
-    * (series, time) sort within the touched partitions — series-scan
-    * locality trades against two-dimensional pruning; choose per
-    * workload. */
+    * exactly as in compaction; the rewrite commits as op `zorder`
+    * through the pessimistic Writer protocol. NOTE: the rewrite replaces
+    * the lake's default (series, time) sort within the touched
+    * partitions — series-scan locality trades against multi-dimensional
+    * pruning; choose per workload. */
   def clusterPartitions(spark: SparkSession, lakeDir: String,
-      dimA: String, dimB: String, bits: Int = 16,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      partitionCol: String = "part_date",
-      partitions: Seq[String] = Seq.empty,
-      maxPartitions: Int = Int.MaxValue,
-      leaseStaleMs: Long = 15L * 60 * 1000,
-      retainHistory: Boolean = false,
-      curve: String = "zorder"): CompactStats =
-    clusterImpl(spark, lakeDir, Seq(dimA, dimB), bits, targetFileBytes,
-      partitionCol, partitions, maxPartitions, leaseStaleMs, Int.MaxValue,
-      retainHistory, curve)
-
-  /** [[clusterPartitions]] over d ∈ [2, 4] dimension columns (round 17):
-    * the real-layout shape is 3–4 access paths (source × lang ×
-    * time-bucket) — the `--curve-cols` surface. */
-  def clusterPartitionsN(spark: SparkSession, lakeDir: String,
       dims: Seq[String], bits: Int = 16,
       targetFileBytes: Long = 128L * 1024 * 1024,
       partitionCol: String = "part_date",
@@ -2004,52 +1901,23 @@ object LakeMerge {
       s"clustering takes 2-4 dimension columns, got ${dims.mkString(", ")}")
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(maxPartitions >= 1, "maxPartitions must be >= 1")
-    val fs = hadoopFs(spark, lakeDir)
-    require(fs.exists(new Path(lakeDir)),
-      s"no lake at $lakeDir — initialize with LakeMerge.writeLake")
-    val clusterId = java.util.UUID.randomUUID.toString
-    acquireLease(fs, lakeDir, clusterId, leaseStaleMs)
-    try {
-      recoverHeld(spark, lakeDir, clusterId)
+    write(spark, lakeDir, leaseStaleMs = leaseStaleMs) { w =>
       val all = partitionValues(spark, lakeDir, partitionCol)
       val unknown = partitions.filterNot(all.contains)
       require(unknown.isEmpty,
         s"no such partitions to z-order: ${unknown.mkString(", ")}")
       val scope = if (partitions.nonEmpty) partitions.sorted else all
-      val stats = partitionFileStats(fs, lakeDir, partitionCol, scope)
-      val totalFiles = partitionFileStats(fs, lakeDir, partitionCol, all)
-        .map(_._2.toLong).sum
-      val selected = stats
+      val selected = partitionFileStats(w.fs, lakeDir, partitionCol, scope)
         .sortBy { case (v, files, _) => (-files, v) }
         .take(maxPartitions)
         .sortBy(_._1)
-      if (selected.isEmpty)
-        return CompactStats(all.length, 0, totalFiles, totalFiles, 0L,
-          clusterId)
-      heartbeatLease(fs, lakeDir, clusterId)
-
-      val staging = new Path(lakeDir, StagingPrefix + clusterId)
-      val schema = dirSchema(lakeSchema(fs, lakeDir), partitionCol)
-      selected.foreach { case (v, _, bytes) =>
-        val ideal = math.max(1L,
-          (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        Layout.writeClusteredN(
-            readerFor(spark, schema)
-              .parquet(escapeGlob(s"$lakeDir/$partitionCol=$v")),
-            dims.map(col), bits, ideal, curve)
-          .write.mode("overwrite")
-          .parquet(new Path(staging, s"$partitionCol=$v").toString)
-        heartbeatLease(fs, lakeDir, clusterId)
+      val totalFiles = partitionFileStats(w.fs, lakeDir, partitionCol, all)
+        .map(_._2.toLong).sum
+      rewritePartitions(spark, w, lakeDir, "zorder", partitionCol,
+          all.length, totalFiles, selected, targetFileBytes, retainHistory,
+          crashAfterSwaps) { (df, ideal) =>
+        Layout.writeClusteredN(df, dims.map(col), bits, ideal, curve)
       }
-
-      commitStagedSwaps(fs, lakeDir, clusterId, "zorder", partitionCol,
-        staging, selected.map(_._1), None, retainHistory, crashAfterSwaps)
-
-      val after = partitionFileStats(fs, lakeDir, partitionCol,
-        selected.map(_._1)).map(_._2.toLong).sum
-      val untouchedFiles = totalFiles - selected.map(_._2.toLong).sum
-      CompactStats(all.length, selected.length, totalFiles,
-        untouchedFiles + after, selected.map(_._3).sum, clusterId)
-    } finally releaseLease(fs, lakeDir, clusterId)
+    }
   }
 }

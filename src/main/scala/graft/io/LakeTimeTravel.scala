@@ -266,15 +266,13 @@ object LakeTimeTravel {
     * to stay loud. Runs under the writer lease — retention is a write.
     * Returns the number of history directories removed. */
   def vacuum(spark: SparkSession, lakeDir: String, oldestAsOf: Long,
-      leaseStaleMs: Long = 15L * 60 * 1000): Int = {
-    val fs = LakeMerge.hadoopFs(spark, lakeDir)
-    val writerId = java.util.UUID.randomUUID.toString
-    LakeMerge.acquireLease(fs, lakeDir, writerId, leaseStaleMs)
-    try {
-      // heal any crashed writer first: deleting a PENDING commit's
-      // half-written history dir would leave its recovery with nowhere
-      // to park the remaining pre-images' deterministic names
-      LakeMerge.recoverHeld(spark, lakeDir, writerId)
+      leaseStaleMs: Long = 15L * 60 * 1000): Int =
+    // the lease's entry recovery heals any crashed writer first: deleting
+    // a PENDING commit's half-written history dir would leave its
+    // recovery with nowhere to park the remaining pre-images'
+    // deterministic names
+    LakeMerge.withLease(spark, lakeDir, leaseStaleMs) { _ =>
+      val fs = LakeMerge.hadoopFs(spark, lakeDir)
       // range-check BEFORE the irreversible delete (review finding): the
       // lake surfaces two counters named 'seq' (change feed, commit log);
       // a change-feed seq — or a stray timestamp — passed here would
@@ -296,6 +294,5 @@ object LakeTimeTravel {
         victims.foreach(p => fs.delete(p, true))
         victims.length
       }
-    } finally LakeMerge.releaseLease(fs, lakeDir, writerId)
-  }
+    }
 }

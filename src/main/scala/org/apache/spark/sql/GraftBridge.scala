@@ -31,6 +31,24 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Run `body` over `df` with its rows kept (memory, spilling to disk)
+    * as the first action computes them, and free them when `body`
+    * returns: one evaluation of `df`'s lineage for every reader in
+    * `body`. The rows ride the plan as an RDD scan carrying `df`'s
+    * statistics, as a checkpoint's do, so adaptive execution runs no
+    * separate job to fill them (it does for a `Dataset.persist` cache).
+    * Unlike `localCheckpoint` the lineage stays: a lost block is
+    * recomputed instead of failing the job, and the release frees the
+    * blocks at once rather than at the next GC. */
+  def withKeptRows[T](df: DataFrame)(body: DataFrame => T): T = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rows = ds.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rows, ds, isStreaming = false)))
+    finally rows.unpersist()
+  }
+
   /** A private session sharing the SparkContext, catalog and extensions
     * but with an ISOLATED SQL conf — lets a caller pin per-query confs
     * (streaming shuffle partitions, no-data micro-batches) for one

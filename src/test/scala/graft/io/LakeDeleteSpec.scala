@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Alone, SparkSpec}
 
 /** Keyed DELETE over the copy-on-write lake (E174) — the GDPR /
   * takedown / contamination purge the upsert-only K2 surface lacked:
@@ -239,5 +239,22 @@ class LakeDeleteSpec extends SparkSpec {
     val ok = LakeMerge.delete(spark, dir,
       Seq(("wl_a", fgt, day1.head)).toDF("tms_id", "fgt", "time"), keys)
     assert(ok.rowsDeleted === 1L)
+  }
+
+  test("a delete releases its cached purge keys: no persisted RDD or cache entry left behind", Alone) {
+    val dir = freshLake("lakedel-release")
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val cachedBefore = org.apache.spark.sql.CacheProbe.entries(spark)
+    val stats = LakeMerge.delete(spark, dir,
+      Seq(("wl_b", fgt, day2.head)).toDF("tms_id", "fgt", "time"), keys)
+    assert(stats.rowsDeleted === 1L, s"$stats")
+    // no GC wait: released keys leave nothing for a collector to find
+    val leaked = sc.getPersistentRDDs.keySet -- rddsBefore
+    assertIsolated(leaked.isEmpty,
+      s"persisted RDDs left behind: ${leaked.map(id => sc.getPersistentRDDs(id))}")
+    val cachedAfter = org.apache.spark.sql.CacheProbe.entries(spark)
+    assertIsolated(cachedAfter == cachedBefore,
+      s"the session cache went from $cachedBefore to $cachedAfter entries")
   }
 }

@@ -5,7 +5,7 @@ import java.sql.DriverManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Alone, SparkSpec}
 
 /** File-lake MERGE upsert (K2's file-sink half, SURVEY §1.5): copy-on-
   * write merge over a date-partitioned parquet lake converges to the SAME
@@ -485,5 +485,24 @@ class LakeMergeSpec extends SparkSpec {
       rowsUpserted = 0L, rowsUpdated = 0L, rowsInserted = 0L,
       rowsAfterAffected = 0L))
     assert(readLakeSorted(dir) === before)
+  }
+
+  test("a merge releases its cached batch: no persisted RDD or cache entry left behind", Alone) {
+    val dir = java.nio.file.Files.createTempDirectory("lakemerge8").toString + "/lake"
+    LakeMerge.writeLake(
+      batch(Seq("wl_a"), "2024-01-02 06:00:00", day1 ++ day2, (_, _) => 1.0), dir)
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val cachedBefore = org.apache.spark.sql.CacheProbe.entries(spark)
+    val stats = LakeMerge.merge(spark, dir,
+      batch(Seq("wl_a", "wl_b"), "2024-01-03 06:00:00", day2, (_, _) => 2.0))
+    assert(stats.rowsInserted === 4L, s"$stats")
+    // no GC wait: a released batch leaves nothing for a collector to find
+    val leaked = sc.getPersistentRDDs.keySet -- rddsBefore
+    assertIsolated(leaked.isEmpty,
+      s"persisted RDDs left behind: ${leaked.map(id => sc.getPersistentRDDs(id))}")
+    val cachedAfter = org.apache.spark.sql.CacheProbe.entries(spark)
+    assertIsolated(cachedAfter == cachedBefore,
+      s"the session cache went from $cachedBefore to $cachedAfter entries")
   }
 }

@@ -91,6 +91,39 @@ class LakeOccSpec extends SparkSpec {
       .count(f => f.isFile && !f.getPath.getName.startsWith("_")) === 1)
   }
 
+  test("an OCC compaction that loses its commit window refuses, naming the merge's seq and partition") {
+    val dir = freshLake("occ-compact-conflict")
+    // fragment day 1 so the compaction selects exactly it
+    val frag = LakeMerge.readLake(spark, dir)
+      .filter(col("part_date") === "2024-01-01").drop("part_date")
+      .localCheckpoint(true)
+    frag.repartition(8).write.mode("overwrite")
+      .parquet(s"$dir/part_date=2024-01-01")
+    val upd = batch(Seq("wl_c"), "2024-01-03 06:00:00", day1, (_, _) => 9.0)
+    var afterMerge = Seq.empty[String]
+    val e = intercept[java.util.ConcurrentModificationException] {
+      LakeMerge.compactImpl(spark, dir,
+        targetFileBytes = Long.MaxValue / 2, partitionCol = "part_date",
+        seriesCol = "tms_id", timeCol = "time", maxPartitions = 1,
+        leaseStaleMs = 15L * 60 * 1000, crashAfterSwaps = Int.MaxValue,
+        occ = true, beforeOccCommit = () => {
+          // the compaction has STAGED day 1; a merge into day 1 commits
+          LakeMerge.merge(spark, dir, upd, keys)
+          afterMerge = rows(dir)
+        })
+    }
+    assert(e.getMessage.contains("seq 0") && e.getMessage.contains("2024-01-01"),
+      e.getMessage)
+    val fs = LakeMerge.hadoopFs(spark, dir)
+    assert(!fs.listStatus(new Path(dir)).exists(
+      _.getPath.getName.startsWith(".merge-staging-")),
+      "the refused compaction's staging must be cleaned")
+    assert(afterMerge.exists(_.startsWith("wl_c|")) && rows(dir) === afterMerge,
+      "the lake must read back as the merge left it")
+    assert(LakeTimeTravel.readCommits(spark, dir).map(c => (c.seq, c.op)) ===
+      Seq((0L, "merge")))
+  }
+
   test("LOGLESS lake: a pessimistic commit during OCC staging is still a detected conflict (r16 ADVICE)") {
     // pre-fix lost update: on a lake with NO commit log, a pessimistic
     // merge records nothing, so an OCC writer staging concurrently saw no

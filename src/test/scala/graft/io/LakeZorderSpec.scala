@@ -52,7 +52,7 @@ class LakeZorderSpec extends SparkSpec {
     val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(dir, "part=p0"))
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
       .map(_.getLen).sum
-    val s = LakeMerge.clusterPartitions(spark, dir, "id", "ts", bits = 5,
+    val s = LakeMerge.clusterPartitions(spark, dir, Seq("id", "ts"), bits = 5,
       targetFileBytes = math.max(1L, bytes / 16), partitionCol = "part")
     assert(s.partitionsCompacted === 2 && s.partitionsTotal === 2, s"$s")
 
@@ -76,7 +76,7 @@ class LakeZorderSpec extends SparkSpec {
       val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(dir, "part=p0"))
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
         .map(_.getLen).sum
-      val s = LakeMerge.clusterPartitions(spark, dir, "id", "ts", bits = 5,
+      val s = LakeMerge.clusterPartitions(spark, dir, Seq("id", "ts"), bits = 5,
         targetFileBytes = math.max(1L, bytes / 16), partitionCol = "part",
         curve = curve)
       assert(s.partitionsCompacted === 2, s"$s")
@@ -114,7 +114,7 @@ class LakeZorderSpec extends SparkSpec {
     val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(dir, "part=p0"))
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
       .map(_.getLen).sum
-    val s = LakeMerge.clusterPartitionsN(spark, dir,
+    val s = LakeMerge.clusterPartitions(spark, dir,
       Seq("id", "ts", "band"), bits = 3,
       targetFileBytes = math.max(1L, bytes / 8), partitionCol = "part",
       curve = "hilbert")
@@ -135,12 +135,12 @@ class LakeZorderSpec extends SparkSpec {
   test("scope knobs, unknown-partition refusal, crash recovery") {
     val dir = freshLake("lakez2", parts = 3)
     // named-partition scope: only p1 is rewritten
-    val s = LakeMerge.clusterPartitions(spark, dir, "id", "ts", bits = 5,
+    val s = LakeMerge.clusterPartitions(spark, dir, Seq("id", "ts"), bits = 5,
       targetFileBytes = 4L * 1024, partitionCol = "part",
       partitions = Seq("p1"))
     assert(s.partitionsCompacted === 1 && s.partitionsTotal === 3, s"$s")
     val e = intercept[IllegalArgumentException] {
-      LakeMerge.clusterPartitions(spark, dir, "id", "ts",
+      LakeMerge.clusterPartitions(spark, dir, Seq("id", "ts"),
         partitionCol = "part", partitions = Seq("nope"))
     }
     assert(e.getMessage.contains("no such partitions"), e.getMessage)

@@ -215,8 +215,9 @@ object Scale {
     },
 
     // ---- a 4-day TIMDEP report (96 blocks × 39,526 cells, 3.79 M lines),
-    // parsed by the window path and by the carry path: same rows; and by
-    // the carry path keeping 20 stations, densified like the full parse.
+    // parsed alone and as both files of a directory holding it twice: each
+    // file of the directory parses to the same rows as the file alone; and
+    // parsed keeping 20 stations, densified like the full parse.
     section("timdep_parse_scale") { c => import c._
       val cells = 39526
       val blocks = 96 * mult
@@ -228,23 +229,27 @@ object Scale {
             pmod(col("id"), lit(cells + 1)).cast("int"),
             pmod(col("id"), lit(97)).cast("int"))).as("value"))
         .coalesce(4).write.mode("overwrite").text(d + "/parts")
-      // the carry path parses one file: concatenate the parts in order
+      // one report file: the parts concatenated in order
       val single = d + "/TIMDEP.OUT"
       Using.resource(new java.io.FileOutputStream(single)) { os =>
         new java.io.File(d + "/parts").listFiles().filter(_.getName.startsWith("part-"))
           .sortBy(_.getName).foreach(p => Files.copy(p.toPath, os))
       }
-      // row count and an order-free checksum of every row
-      def digest(df: DataFrame): Row = df.agg(count(lit(1)),
+      val twice = new java.io.File(d, "twice")
+      twice.mkdirs()
+      Seq("TIMDEP_A.OUT", "TIMDEP_B.OUT").foreach(n => Files.copy(Paths.get(single),
+        twice.toPath.resolve(n), java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+      // row count and an order-free checksum of every row, per file
+      def digest(df: DataFrame): Seq[Row] = df.groupBy("file").agg(count(lit(1)),
         sum(xxhash64(col("element"), col("step_hours"), col("value")).cast("decimal(38,0)")))
-        .head()
+        .drop("file").collect().toSeq
       val parsers = graft.extract.FloOutputParsers
-      val (window, ww) = measure(spark)(digest(
-        parsers.parseTimdep(parsers.readLines(spark, single))))
-      val (carry, cw) = measure(spark)(digest(parsers.parseTimdepFile(spark, single)))
-      require(window == carry, s"window and carry parses differ: $window vs $carry")
-      require(carry.getLong(0) == blocks.toLong * cells,
-        s"expected ${blocks.toLong * cells} rows, got ${carry.getLong(0)}")
+      val (both, bw) = measure(spark)(digest(parsers.parseTimdepFile(spark, twice.getPath)))
+      val (alone, aw) = measure(spark)(digest(parsers.parseTimdepFile(spark, single)))
+      require(alone.size == 1 && both == alone ++ alone,
+        s"each file of the directory must parse as the file alone: $both vs $alone")
+      val rows = alone.head.getLong(0)
+      require(rows == blocks.toLong * cells, s"expected ${blocks.toLong * cells} rows, got $rows")
       // the extraction's parse: 20 flood-plain stations spread over the
       // grid, kept in pass 1, then densified — the same rows as densifying
       // the full parse
@@ -255,13 +260,13 @@ object Scale {
       val unfiltered = digest(parsers.fillMissing(parsers.parseTimdepFile(spark, single), wanted))
       require(filtered == unfiltered,
         s"station-filtered and full parses densify differently: $filtered vs $unfiltered")
-      require(filtered.getLong(0) == blocks.toLong * stations.size,
-        s"expected ${blocks.toLong * stations.size} densified rows, got ${filtered.getLong(0)}")
-      Seq("blocks" -> blocks, "rows" -> carry.getLong(0),
-        "window_seconds" -> ww.seconds, "carry_seconds" -> cw.seconds,
-        "window_rows_per_sec" -> (carry.getLong(0) / ww.seconds).toLong,
-        "carry_rows_per_sec" -> (carry.getLong(0) / cw.seconds).toLong,
-        "stations" -> stations.size, "station_rows" -> filtered.getLong(0),
+      require(filtered.head.getLong(0) == blocks.toLong * stations.size,
+        s"expected ${blocks.toLong * stations.size} densified rows, got ${filtered.head.getLong(0)}")
+      Seq("blocks" -> blocks, "rows" -> rows, "directory_rows" -> 2 * rows,
+        "file_seconds" -> aw.seconds, "directory_seconds" -> bw.seconds,
+        "file_rows_per_sec" -> (rows / aw.seconds).toLong,
+        "directory_rows_per_sec" -> (2 * rows / bw.seconds).toLong,
+        "stations" -> stations.size, "station_rows" -> filtered.head.getLong(0),
         "station_parse_seconds" -> fw.seconds)
     },
 

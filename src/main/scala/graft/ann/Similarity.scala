@@ -152,10 +152,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Attach an LSH bucket id (hyperplane signature) to each vector. */
-  def withSignature(df: DataFrame, vecCol: String, dim: Int, nBits: Int, seed: Long = 42L): DataFrame =
-    df.withColumn("lsh_sig", VectorFunctions.hyperplaneSignature(col(vecCol), dim, nBits, seed))
-
   /** Attach one signature column per hash table (`lsh_sig_0` …
     * `lsh_sig_{nTables-1}`, the [[tableSeed]] family) — the precompute
     * step for [[lshTopK]]'s `sigCols` path: sign once at ingest, persist,

@@ -171,15 +171,6 @@ object InflowConfig {
     headLines.getOrElse(model,
       throw new IllegalArgumentException(
         s"unknown FLO-2D model '$model' (known: ${headLines.keys.mkString(", ")})"))
-
-  /** Load `{"head_lines": [...]}` from a JSON config, falling back to the
-    * built-in table when the file has no such key. */
-  def headLinesFromJson(spark: SparkSession, path: String, model: String): Seq[String] = {
-    val df = spark.read.option("multiLine", "true").json(path)
-    if (df.columns.contains("head_lines"))
-      df.select("head_lines").head().getSeq[String](0)
-    else headLinesFor(model)
-  }
 }
 
 /** INFLOW.DAT — discharge hydrograph `H` rows

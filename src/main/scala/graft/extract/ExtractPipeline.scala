@@ -39,12 +39,8 @@ object ExtractPipeline {
       cellMap: DataFrame, valueIndex: Int = 1,
       cutoff: Option[String] = None, utcOffset: String = ""): DataFrame = {
     val cells = cellsOf(cellMap)
-    val parsed =
-      if (isSingleFile(spark, hychanPath))
-        FloOutputParsers.parseHychanFile(spark, hychanPath, valueIndex, Some(cells.keySet))
-      else FloOutputParsers.parseHychan(
-        FloOutputParsers.readLines(spark, hychanPath), valueIndex)
-    enrich(parsed, baseTime, cells, cutoff, utcOffset)
+    enrich(FloOutputParsers.parseHychanFile(spark, hychanPath, valueIndex, Some(cells.keySet)),
+      baseTime, cells, cutoff, utcOffset)
   }
 
   /** Flood-plain series from TIMDEP.OUT, densified with −999 for stations
@@ -53,11 +49,8 @@ object ExtractPipeline {
       cellMap: DataFrame, cutoff: Option[String] = None,
       utcOffset: String = ""): DataFrame = {
     val cells = cellsOf(cellMap)
-    val parsed =
-      if (isSingleFile(spark, timdepPath))
-        FloOutputParsers.parseTimdepFile(spark, timdepPath, stations = Some(cells.keySet))
-      else FloOutputParsers.parseTimdep(
-        FloOutputParsers.readLines(spark, timdepPath))
+    val parsed = FloOutputParsers.parseTimdepFile(spark, timdepPath,
+      stations = Some(cells.keySet))
     enrich(FloOutputParsers.densify(parsed, cells.keys.toSeq), baseTime, cells,
       cutoff, utcOffset)
   }
@@ -70,26 +63,14 @@ object ExtractPipeline {
         col("kind").cast("string"))
       .collect().map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
 
-  /** The Hadoop status of `path` — a plain path or a `file:`, `hdfs:` or
-    * `s3a:` URI — or None when nothing is there. */
-  private def status(spark: SparkSession, path: String): Option[org.apache.hadoop.fs.FileStatus] =
-    try Some(graft.io.LakeMerge.hadoopFs(spark, path)
-      .getFileStatus(new org.apache.hadoop.fs.Path(path)))
-    catch { case _: java.io.FileNotFoundException => None }
-
-  /** Whether `path` is exactly one regular file on its Hadoop file system.
-    * One file takes the carry-based parallel parse; a directory, a glob or
-    * a missing path takes the window path, which parallelizes across
-    * files. */
-  private[extract] def isSingleFile(spark: SparkSession, path: String): Boolean =
-    status(spark, path).exists(_.isFile)
-
-  /** When `path` was last modified (epoch ms) on its Hadoop file system:
-    * an extraction's default forecast time. Fails naming the path when
-    * nothing is there. */
+  /** When `path` — a plain path or a `file:`, `hdfs:` or `s3a:` URI — was
+    * last modified (epoch ms) on its Hadoop file system: an extraction's
+    * default forecast time. Fails naming the path when nothing is there. */
   def modifiedAt(spark: SparkSession, path: String): Long =
-    status(spark, path).map(_.getModificationTime).getOrElse(
-      throw new IllegalArgumentException(s"[extract] no such file: $path"))
+    try graft.io.LakeMerge.hadoopFs(spark, path)
+      .getFileStatus(new org.apache.hadoop.fs.Path(path)).getModificationTime
+    catch { case _: java.io.FileNotFoundException =>
+      throw new IllegalArgumentException(s"[extract] no such file: $path") }
 
   /** `utcOffset` is the reference's `[+-]HH:MM` config string (empty = no
     * shift, like getUTCOffset's default=True path): every series point moves

@@ -1,115 +1,76 @@
 package graft.extract
 
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileSplit, TextInputFormat}
+import org.apache.spark.rdd.{HadoopRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** FLO-2D simulation-output parsers — SURVEY.md §2 S7/S8.
   *
   * The reference walks HYCHAN.OUT / TIMDEP.OUT with a single-threaded
   * state machine (reference: output/extract_water_level.py:454-523 and
-  * :540-572). Here the same block semantics are declarative: number the
-  * lines, tag marker lines, propagate the last marker down to its block's
-  * rows with `last(..., ignoreNulls)` over an ordered window, then filter
-  * and project the data rows. Every step after line numbering is Catalyst
-  * built-ins (whole-stage codegen, no UDFs).
-  *
-  * Scale posture: the window partitions by file, so a directory of N
-  * output files parses with N-way parallelism. One file takes the carry
-  * parse below instead: it reads the file once, split across every core,
-  * and with a station set it keeps only station rows past that read (a
-  * TIMDEP report lists the whole grid; an extraction stores a few dozen
-  * of its cells).
+  * :540-572) and tokenizes each line with Python's `line.split()`. Here
+  * one parse does both, whatever the lines come from: a file, a
+  * directory or a glob of files (read as Hadoop text splits, at least one
+  * per core), or an ordered `(file, line_no, line)` frame. It reads
+  * ordered `(file, line)` partitions, and its one invariant is that only a
+  * partition's first file may continue from the previous partition: each
+  * partition resolves rows against the markers it reads, every change of
+  * file restarts the block state, and a prefix scan of the partitions'
+  * ends hands a partition the previous partition's open block only when
+  * both are in the same file. So one file splits across every core, a directory of N
+  * files parses in at least N tasks, and each file's blocks are its own.
+  * With a station set, only station rows are kept past the read (a TIMDEP
+  * report lists the whole grid; an extraction stores a few dozen of its
+  * cells).
   */
 object FloOutputParsers {
 
-  val LinesSchema: StructType = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("line_no", LongType, nullable = false),
-    StructField("line", StringType, nullable = true)))
-
-  /** Read text file(s) into ordered `(file, line_no, line)` rows.
-    * `zipWithIndex` preserves Hadoop split order, which for text inputs is
-    * file order — the standard distributed line-numbering technique. */
-  def readLines(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.textFile(path)
-      .select(input_file_name().as("file"), col("value").as("line"))
-    val rdd = raw.rdd.zipWithIndex.map { case (r, i) =>
-      Row(r.getString(0), i, r.getString(1))
-    }
-    spark.createDataFrame(rdd, LinesSchema)
-  }
-
-  /** Wrap already-ordered in-memory lines (tests, round-trip queries). */
-  def fromOrderedLines(df: DataFrame): DataFrame = df.select("file", "line_no", "line")
-
   /** Header marker: `line.startswith('CHANNEL HYDROGRAPH FOR ELEMENT NO:', 5)`
-    * (reference: output/extract_water_level.py:464). 1-based substring pos 6. */
+    * (reference: output/extract_water_level.py:464). */
   private val HychanHeader = "CHANNEL HYDROGRAPH FOR ELEMENT NO:"
-  private def isHychanHeader = substring(col("line"), 6, HychanHeader.length) === lit(HychanHeader)
 
-  private def tokens = split(trim(col("line")), "\\s+")
-
-  /** Parse HYCHAN.OUT blocks into `(file, element, step_hours, value)`.
+  /** Parse HYCHAN.OUT blocks from a file, a directory or a glob into
+    * `(file, element, step_hours, value)`.
     *
     * `valueIndex` selects the report column: 1 = water-level elevation
     * (reference: output/extract_water_level.py:492-494), 4 = discharge
     * (reference: output/extract_discharge.py:479-480). Non-numeric values
     * are skipped, mirroring the reference's isfloat/NaN guard
-    * (reference: output/extract_water_level.py:496-500).
+    * (reference: output/extract_water_level.py:496-500). With `stations`,
+    * only the blocks of those elements are kept.
     *
-    * Reserved token: truncated headers are invalidated by carrying the
-    * in-band sentinel `"__INVALID__"` (and TIMDEP uses a NaN block time the
+    * Reserved token: a truncated header invalidates its block by carrying
+    * the in-band sentinel `"__INVALID__"` (TIMDEP uses a NaN block time the
     * same way). A data file whose element token is literally `__INVALID__`
     * would be conflated with a truncated header — acceptable for this fixed
     * FLO-2D format (element tokens are numeric grid ids); switch to an
     * out-of-band validity struct before generalizing this parser.
     */
-  def parseHychan(lines: DataFrame, valueIndex: Int = 1): DataFrame = {
-    val w = Window.partitionBy("file").orderBy("line_no")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lines
-      // a TRUNCATED header (no element token) must invalidate its block,
-      // not let rows fall through to the previous element: carry a sentinel
-      // forward and drop the block's rows below
-      .withColumn("__hdr_elem", when(isHychanHeader,
-        coalesce(get(tokens, lit(5)), lit("__INVALID__"))))
-      .withColumn("element", last(col("__hdr_elem"), ignoreNulls = true).over(w))
-      .filter(col("element").isNotNull && col("element") =!= "__INVALID__" &&
-        !isHychanHeader)
-      .withColumn("__tok", tokens)
-      // get(), not getItem(): a truncated/garbage line with fewer tokens
-      // than valueIndex must skip (NULL), not abort the job under ANSI
-      .withColumn("step_hours", get(col("__tok"), lit(0)).try_cast("double"))
-      .withColumn("value", get(col("__tok"), lit(valueIndex)).try_cast("double"))
-      // data row: first token numeric (reference :489); value numeric (F4)
-      .filter(col("step_hours").isNotNull && col("value").isNotNull && !isnan(col("value")))
-      .select("file", "element", "step_hours", "value")
-  }
+  def parseHychanFile(spark: SparkSession, path: String, valueIndex: Int = 1,
+      stations: Option[Set[String]] = None): DataFrame =
+    hychan(spark, pathLines(spark, path), valueIndex, stations)
 
-  /** Parse TIMDEP.OUT into `(file, element, step_hours, value)`: a line with
-    * exactly one token opens a block and is the block's model time in hours;
-    * following `grid … value@col5` rows belong to it (reference:
-    * output/extract_water_level.py:540-572, column pick :109-128). */
-  def parseTimdep(lines: DataFrame, valueIndex: Int = 5): DataFrame = {
-    val w = Window.partitionBy("file").orderBy("line_no")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nTok = when(trim(col("line")) === "", 0).otherwise(size(tokens))
-    lines
-      // same invalidation rule: a single-token line that does NOT parse as
-      // a time closes the running block (NaN sentinel) instead of letting
-      // following rows attach to the previous time
-      .withColumn("__blk_ts", when(nTok === 1,
-        coalesce(get(tokens, lit(0)).try_cast("double"), lit(Double.NaN))))
-      .withColumn("step_hours", last(col("__blk_ts"), ignoreNulls = true).over(w))
-      .filter(col("step_hours").isNotNull && !isnan(col("step_hours")) && nTok > 1)
-      .withColumn("__tok", tokens)
-      .withColumn("element", get(col("__tok"), lit(0)))
-      .withColumn("value", get(col("__tok"), lit(valueIndex)).try_cast("double"))
-      .filter(col("value").isNotNull && !isnan(col("value")))
-      .select("file", "element", "step_hours", "value")
-  }
+  /** [[parseHychanFile]] over an ordered `(file, line_no, line)` frame. */
+  def parseHychan(lines: DataFrame, valueIndex: Int = 1): DataFrame =
+    hychan(lines.sparkSession, frameLines(lines), valueIndex, None)
+
+  /** Parse TIMDEP.OUT from a file, a directory or a glob into
+    * `(file, element, step_hours, value)`: a line with exactly one token
+    * opens a block and is the block's model time in hours; following
+    * `grid … value@col5` rows belong to it (reference:
+    * output/extract_water_level.py:540-572, column pick :109-128). With
+    * `stations`, only those elements' rows are kept, plus one row of every
+    * block that has any data row. */
+  def parseTimdepFile(spark: SparkSession, path: String, valueIndex: Int = 5,
+      stations: Option[Set[String]] = None): DataFrame =
+    timdep(spark, pathLines(spark, path), valueIndex, stations)
+
+  /** [[parseTimdepFile]] over an ordered `(file, line_no, line)` frame. */
+  def parseTimdep(lines: DataFrame, valueIndex: Int = 5): DataFrame =
+    timdep(lines.sparkSession, frameLines(lines), valueIndex, None)
 
   /** Densify a parsed TIMDEP frame: every (block, wanted element) pair gets a
     * row, absent readings filled with `missing` = −999 (reference:
@@ -141,37 +102,58 @@ object FloOutputParsers {
   }
 
   // --------------------------------------------------------------------
-  // Fast single-file path: carry-based marker propagation.
-  //
-  // The window form above shuffles every line into one sort per file. For
-  // ONE large report that serializes the whole parse. This path reads the
-  // file once instead:
+  // The carry parse: marker propagation over ordered (file, line)
+  // partitions.
   //   pass 1 (parallel, one job): each partition resolves rows against
-  //     markers seen locally, keeps the data rows before its first marker
-  //     unresolved, and ends with its last marker; the items are
+  //     markers seen locally, keeps the data rows of its first file before
+  //     that file's first marker unresolved, drops a later file's rows
+  //     before its first marker (no block holds them), and ends with its
+  //     first and last file and the block open at its end; the items are
   //     checkpointed as they are computed;
-  //   driver: prefix-scan of the per-partition last markers (bytes, not
-  //     data) → carry for each partition;
+  //   collect: prefix scan of the per-partition ends (bytes, not data) →
+  //     carry for each partition, the open block of the previous non-empty
+  //     partition when that partition ended in this one's first file;
   //   pass 2 (over the checkpoint, lazy): only unresolved head rows get
   //     their carry applied.
   // Given a station set, pass 1 keeps station rows only and drops any
   // other line after reading its first token; TIMDEP also keeps one row of
   // each block that has a data row, so `fillMissing` sees the same blocks.
-  // Lines never span HDFS-style splits (the line reader re-anchors), so a
+  // Lines never span Hadoop splits (the line reader re-anchors), so a
   // marker is always wholly inside one partition.
   // --------------------------------------------------------------------
 
-  /** Parse one HYCHAN.OUT with partition-parallel carry propagation;
-    * semantics identical to `parseHychan(readLines(...))`. With `stations`,
-    * only the blocks of those elements are kept. */
-  def parseHychanFile(spark: SparkSession, path: String, valueIndex: Int = 1,
-      stations: Option[Set[String]] = None): DataFrame =
-    parseWithCarry[String](spark, path, stations, blockRows = false,
+  /** The lines of a file, a directory or a glob, each with its file: Hadoop
+    * text splits, each file's in offset order, `defaultParallelism` at
+    * least, so one file still splits across every core. */
+  private def pathLines(spark: SparkSession, path: String): RDD[(String, String)] = {
+    val sc = spark.sparkContext
+    sc.hadoopFile(path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
+        sc.defaultParallelism)
+      .asInstanceOf[HadoopRDD[LongWritable, Text]]
+      .mapPartitionsWithInputSplit { (split, it) =>
+        val file = split.asInstanceOf[FileSplit].getPath.toString
+        it.map { case (_, line) => (file, line.toString) }
+      }
+  }
+
+  /** An ordered `(file, line_no, line)` frame in file order: one exchange
+    * keyed by file, so each file's lines sit sorted in one partition. */
+  private[graft] def byFile(lines: DataFrame): DataFrame =
+    lines.select("file", "line_no", "line")
+      .repartition(col("file")).sortWithinPartitions("file", "line_no")
+
+  /** [[byFile]] as `(file, line)` partitions; a null line reads as blank. */
+  private def frameLines(lines: DataFrame): RDD[(String, String)] =
+    byFile(lines).rdd.map(r => (r.getString(0), if (r.isNullAt(2)) "" else r.getString(2)))
+
+  private def hychan(spark: SparkSession, lines: RDD[(String, String)], valueIndex: Int,
+      stations: Option[Set[String]]): DataFrame =
+    parseWithCarry[String](spark, lines, stations, blockRows = false,
       marker = l =>
         if (l.length > 5 && l.startsWith(HychanHeader, 5)) {
           val t = tokenize(l)
-          // truncated header: block INVALIDATED (matches the window path's
-          // sentinel), never attributed to the previous element
+          // truncated header: block INVALIDATED, never attributed to the
+          // previous element
           if (t.length > 5) Some(t(5)) else Some("__INVALID__")
         } else None,
       data = l => {
@@ -187,16 +169,12 @@ object FloOutputParsers {
       resolve = (r, elem) => if (elem == "__INVALID__") None else Some((elem, r._2, r._3)),
       element = (_, block) => block)
 
-  /** Parse one TIMDEP.OUT with partition-parallel carry propagation;
-    * semantics identical to `parseTimdep(readLines(...))`. With `stations`,
-    * only those elements' rows are kept, plus one row of every block that
-    * has any data row. */
-  def parseTimdepFile(spark: SparkSession, path: String, valueIndex: Int = 5,
-      stations: Option[Set[String]] = None): DataFrame =
-    parseWithCarry[Double](spark, path, stations, blockRows = true,
+  private def timdep(spark: SparkSession, lines: RDD[(String, String)], valueIndex: Int,
+      stations: Option[Set[String]]): DataFrame =
+    parseWithCarry[Double](spark, lines, stations, blockRows = true,
       // unparseable single-token line CLOSES the running block (NaN
-      // sentinel, matching the window path) instead of letting following
-      // rows attach to the previous time
+      // sentinel) instead of letting following rows attach to the
+      // previous time
       marker = l => singleToken(l).map { t =>
         val d = toDoubleOrNull(t)
         if (d == null) Double.NaN else d.asInstanceOf[Double]
@@ -213,44 +191,58 @@ object FloOutputParsers {
       resolve = (r, blk) => if (blk.isNaN) None else Some((r._1, blk, r._3)),
       element = (l, _) => Some(firstToken(l)))
 
-  /** One pass-1 item: a row resolved in its partition, a data row read
-    * before the partition's first marker (`blockRow`: kept only to stand
-    * for its block), or the partition's last marker. */
+  /** One pass-1 item: a row of `file` resolved in its partition, a data
+    * row of the partition's first file read before that file's first
+    * marker (`blockRow`: kept only to stand for its block), or the
+    * partition's end: its first and last file and the block open there. */
   private sealed trait Carried
-  private final case class Resolved(row: (String, Double, Double)) extends Carried
+  private final case class Resolved(file: String, row: (String, Double, Double))
+    extends Carried
   private final case class Head(row: (String, Double, Double), blockRow: Boolean)
     extends Carried
-  private final case class LastMarker(marker: Option[Any]) extends Carried
+  private final case class End(first: String, last: String, open: Option[Any])
+    extends Carried
 
-  /** Shared carry machinery. `marker` reads a block marker from a line;
-    * `data` reads a data line on its own into a partial
-    * (element, step_hours, value); `resolve` completes it under its block's
-    * marker (None: the block is invalid); `element` names the element a
-    * line in a block would be stored under, from as little of the line as
-    * possible (None: known only once its block is). With `stations`, a line
-    * whose element is not a station is dropped unread, except that
-    * `blockRows` keeps each block's first data row in each partition. */
-  private def parseWithCarry[M](spark: SparkSession, path: String,
+  /** The carry parse. `marker` reads a block marker from a line; `data`
+    * reads a data line on its own into a partial (element, step_hours,
+    * value); `resolve` completes it under its block's marker (None: the
+    * block is invalid); `element` names the element a line in a block would
+    * be stored under, from as little of the line as possible (None: known
+    * only once its block is). With `stations`, a line whose element is not
+    * a station is dropped unread, except that `blockRows` keeps each
+    * block's first data row in each partition.
+    *
+    * The local checkpoint is the pass-1 cache: it holds the kept rows
+    * only, and the ContextCleaner releases it with the returned frame — no
+    * persisted RDD or broadcast outlives the parse that used it. Its trade,
+    * one read of the input for holding the kept rows until the frame is
+    * released, is the same for a directory, a glob or a frame as for one
+    * file. */
+  private def parseWithCarry[M](spark: SparkSession, lines: RDD[(String, String)],
       stations: Option[Set[String]], blockRows: Boolean,
       marker: String => Option[M],
       data: String => Option[(String, Double, Double)],
       resolve: ((String, Double, Double), M) => Option[(String, Double, Double)],
       element: (String, Option[M]) => Option[String]): DataFrame = {
-    val sc = spark.sparkContext
     val filtered = stations.isDefined
-    val tagged = sc.textFile(path, sc.defaultParallelism).mapPartitions { it =>
+    val tagged = lines.mapPartitions { it =>
+      var first: String = null
+      var file: String = null
       var current: Option[M] = None
       // whether this partition still owes the current block a row
       var owed = filtered && blockRows
-      val items = it.flatMap { l =>
+      val items = it.flatMap { case (f, l) =>
+        if (file == null) { first = f; file = f }
+        else if (f != file) { file = f; current = None }
         marker(l) match {
           case m @ Some(_) => current = m; owed = filtered && blockRows; None
+          case None if current.isEmpty && file != first => None
           case None =>
             val wanted = stations.forall(s => element(l, current).forall(s.contains))
             if (!wanted && !owed) None
             else {
               val item: Option[Carried] = current match {
-                case Some(m) => data(l).flatMap(resolve(_, m)).map(Resolved)
+                case Some(m) => data(l).flatMap(resolve(_, m)).map(Resolved(file, _))
                 case None => data(l).map(Head(_, blockRow = !wanted))
               }
               if (item.nonEmpty) owed = false
@@ -258,36 +250,42 @@ object FloOutputParsers {
             }
         }
       }
-      items ++ Iterator.single(LastMarker(current))
+      items ++ (if (file == null) Iterator.empty else Iterator.single(End(first, file, current)))
     }.localCheckpoint()
 
-    val lastMarkers: Array[Option[M]] = tagged.mapPartitionsWithIndex { (pid, it) =>
-      it.collect { case LastMarker(m) => pid -> m.asInstanceOf[Option[M]] }
-    }.collect().sortBy(_._1).map(_._2)
-    // carry(p) = last marker emitted by any earlier partition
-    val carries: Array[Option[M]] = lastMarkers.scanLeft(Option.empty[M]) {
-      case (acc, cur) => cur.orElse(acc)
-    }.dropRight(1)
+    val ends: Map[Int, End] = tagged.mapPartitionsWithIndex { (pid, it) =>
+      it.collect { case e: End => pid -> e }
+    }.collect().toMap
+    // carries(p): the block open where the last non-empty partition before
+    // p ended, when it ended in p's first file
+    val carries = new Array[Option[M]](tagged.getNumPartitions)
+    var before = Option.empty[End]
+    for (p <- carries.indices) {
+      carries(p) = before.filter(e => ends.get(p).exists(_.first == e.last))
+        .flatMap(_.open.asInstanceOf[Option[M]])
+      ends.get(p).foreach { e =>
+        before = Some(if (e.open.isEmpty && e.first == e.last) e.copy(open = carries(p)) else e)
+      }
+    }
 
     val rows = tagged.mapPartitionsWithIndex { (pid, it) =>
       val carry = carries(pid)
+      val first = ends.get(pid).map(_.first).orNull
       it.flatMap {
-        case Resolved(r) => Some(r)
+        case Resolved(f, (e, s, v)) => Some(Row(f, e, s, v))
         case Head(r, blockRow) =>
           carry.flatMap(resolve(r, _))
             .filter(full => blockRow || stations.forall(_.contains(full._1)))
+            .map { case (e, s, v) => Row(first, e, s, v) }
         case _ => None
       }
-    }.map { case (e, s, v) => Row(path, e, s, v) }
+    }
 
     val schema = StructType(Seq(
       StructField("file", StringType, nullable = false),
       StructField("element", StringType, nullable = true),
-      StructField("step_hours", org.apache.spark.sql.types.DoubleType, nullable = true),
-      StructField("value", org.apache.spark.sql.types.DoubleType, nullable = true)))
-    // the local checkpoint is the pass-1 cache: it holds the kept rows
-    // only, and the ContextCleaner releases it with the returned frame —
-    // no persisted RDD or broadcast outlives the extraction that used it
+      StructField("step_hours", DoubleType, nullable = true),
+      StructField("value", DoubleType, nullable = true)))
     spark.createDataFrame(rows, schema)
   }
 

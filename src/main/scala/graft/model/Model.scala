@@ -2,24 +2,14 @@ package graft.model
 
 import java.sql.Timestamp
 
-/** Core data model of the engine — SURVEY.md §1.
-  *
-  * Everything in the reference (CUrW-SL/curw_flo2d_data_manager) is a keyed
-  * time-series: ordered `(time, value)` rows identified by a 64-hex sha256
-  * hash id of the series metadata (reference:
-  * input/inflow/gen_150_inflow.py:97-110, input/inflow/config_150.json:2).
-  */
-final case class TsPoint(id: String, time: Timestamp, value: Double)
-
-/** Forecast-store point: versioned by forecast-generated-time `fgt`, upserted
-  * on key `(tmsId, fgt, time)` (reference:
-  * output/extract_water_level.py:206-217).
-  */
-final case class FcstPoint(tmsId: String, fgt: Timestamp, time: Timestamp, value: Double)
-
-/** Grid-cell coordinate row — CSV `Grid_ID,X(lon),Y(lat)`, 1-indexed
-  * (reference: res/grids/flo2d_150_v2m.csv:1-4, init/init.py:90-91). */
-final case class GridCell(gridId: Int, lon: Double, lat: Double)
+// Core data model of the engine — SURVEY.md §1.
+//
+// Everything in the reference (CUrW-SL/curw_flo2d_data_manager) is a keyed
+// time-series: ordered `(time, value)` rows identified by a 64-hex sha256
+// hash id of the series metadata (reference:
+// input/inflow/gen_150_inflow.py:97-110, input/inflow/config_150.json:2).
+// The engine carries them as DataFrames; this file holds the station
+// dimension, the sentinels and the time helpers.
 
 /** Station dimension (reference: init/init.py:88-100). */
 final case class Station(
@@ -29,16 +19,6 @@ final case class Station(
     longitude: Double,
     stationType: String,
     description: String)
-
-/** Station-cell map entry; `kind` is CHANNEL or FLOOD_PLAIN (reference:
-  * res/flo2d_extract_stations/flo2d_150_v2.json,
-  * output/extract_water_level.py:400-402). */
-final case class CellStation(cellNo: String, label: String, kind: String)
-
-/** Parsed FLO-2D output row: one value for one element at one model time
-  * (reference: output/extract_water_level.py:454-523 HYCHAN,
-  * :540-572 TIMDEP). */
-final case class ElementPoint(element: String, time: Timestamp, value: Double)
 
 object Sentinels {
   /** Invalid tide point, skipped (reference: input/outflow/gen_outflow.py:109). */
@@ -65,9 +45,6 @@ object SlTime {
 
   def utcToSl(t: Timestamp): Timestamp =
     new Timestamp(t.getTime + OffsetMinutes * 60000L)
-
-  def slToUtc(t: Timestamp): Timestamp =
-    new Timestamp(t.getTime - OffsetMinutes * 60000L)
 
   /** Grid-alignment validation (F8): seconds == 0 and minutes a multiple of
     * `stepMinutes` (reference: input/raincell/gen_raincell.py:53-71). */

@@ -33,13 +33,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Typed metadata carried alongside the opaque payload. */
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("bytes", BinaryType, nullable = false),
-    StructField("meta", MapType(StringType, StringType), nullable = true)))
-
   /** Build a media table from any (id, text) source — the text bytes stand
     * in for encoded media so the pipeline is runnable and deterministic. */
   def syntheticMedia(df: DataFrame, idCol: String, textCol: String): DataFrame =

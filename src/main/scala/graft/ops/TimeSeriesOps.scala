@@ -274,16 +274,6 @@ object TimeSeriesOps {
   def horizonFilter(df: DataFrame, cutoff: Column, timeCol: String = "time"): DataFrame =
     df.filter(col(timeCol) >= cutoff)
 
-  /** Sentinel filter (F3): drop `-99999` invalid tide points
-    * (reference: input/outflow/gen_outflow.py:107-112). */
-  def dropSentinels(df: DataFrame, valueCol: String = "value",
-      sentinel: Double = graft.model.Sentinels.InvalidTide): DataFrame =
-    df.filter(col(valueCol) =!= lit(sentinel))
-
-  /** Non-numeric / NaN skip (F4, reference: output/extract_water_level.py:496-500). */
-  def dropNonNumeric(df: DataFrame, valueCol: String = "value"): DataFrame =
-    df.filter(col(valueCol).isNotNull && !isnan(col(valueCol)))
-
   /** Negative → null → dropped (F5, reference:
     * input/rain/gen_rain.py:113-116,153,165). */
   def dropNegatives(df: DataFrame, valueCol: String = "value"): DataFrame =

@@ -42,7 +42,7 @@ object ParityQueries {
         val lines = headers.unionByName(data)
           .select(lit("mem").as("file"),
             (col("user_id").cast("long") * 1000000L + col("rn")).as("line_no"), col("line"))
-        FloOutputParsers.parseHychan(FloOutputParsers.fromOrderedLines(lines))
+        FloOutputParsers.parseHychan(lines)
           .select(col("element"), col("step_hours"), col("value"))
       },
       Some("""SELECT CAST(user_id AS VARCHAR) AS element, rn * 1.0 AS step_hours, value
@@ -64,7 +64,7 @@ object ParityQueries {
         val lines = headers.unionByName(data)
           .select(lit("mem").as("file"),
             (col("user_id").cast("long") * 1000000L + col("rn")).as("line_no"), col("line"))
-        FloOutputParsers.parseHychan(FloOutputParsers.fromOrderedLines(lines), valueIndex = 4)
+        FloOutputParsers.parseHychan(lines, valueIndex = 4)
           .groupBy("element")
           .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_discharge"))
       },
@@ -92,7 +92,7 @@ object ParityQueries {
         val lines = headers.unionByName(data)
           .select(lit("mem").as("file"),
             (col("blk").cast("long") * 100L + col("sub") + 1L).as("line_no"), col("line"))
-        val parsed = FloOutputParsers.parseTimdep(FloOutputParsers.fromOrderedLines(lines))
+        val parsed = FloOutputParsers.parseTimdep(lines)
         val elements = ev.select(col("user_id").cast("string").as("element")).distinct()
         FloOutputParsers.fillMissing(parsed, elements)
           .select(col("element"), col("step_hours"), col("value"))

@@ -95,7 +95,7 @@ class BenchGateSpec extends SparkSpec {
     ("\"" + key + "\":([0-9.]+)").r.findFirstMatchIn(core)
       .getOrElse(fail(s"$key missing from $core")).group(1).toDouble
 
-  test("normalization: floors from a 2x-faster host read raw ~2x, normalized ~1x") {
+  test("normalization: floors from a 2x-faster host read raw ~2x, normalized ~1x", Alone) {
     withTimingLock {
     // the r15 failure mode, synthesized deterministically: floors (and
     // the floors' probe) as a host exactly 2× faster than this one would

@@ -15,10 +15,9 @@ class FloOutputParsersSpec extends SparkSpec {
   import spark.implicits._
 
   private def linesDf(text: String) =
-    FloOutputParsers.fromOrderedLines(
-      text.split("\n", -1).zipWithIndex
-        .map { case (l, i) => ("f", i.toLong, l) }
-        .toSeq.toDF("file", "line_no", "line"))
+    text.split("\n", -1).zipWithIndex
+      .map { case (l, i) => ("f", i.toLong, l) }
+      .toSeq.toDF("file", "line_no", "line")
 
   private val hychan =
     """THE MODEL PREAMBLE
@@ -183,7 +182,7 @@ class FloOutputParsersSpec extends SparkSpec {
 
   test("blocks spanning partition boundaries parse identically (8-way repartition)") {
     val base = linesDf(hychan)
-    val scattered = FloOutputParsers.fromOrderedLines(base.repartition(8))
+    val scattered = base.repartition(8)
     val a = FloOutputParsers.parseHychan(base).orderBy("element", "step_hours")
       .collect().map(_.toSeq)
     val b = FloOutputParsers.parseHychan(scattered).orderBy("element", "step_hours")
@@ -198,7 +197,7 @@ class FloOutputParsersSpec extends SparkSpec {
     val td = new java.io.File(dir, "TIMDEP.OUT")
     Files.writeString(td.toPath, timdep)
 
-    val hyWindow = FloOutputParsers.parseHychan(FloOutputParsers.readLines(spark, hy.getPath))
+    val hyWindow = FloOutputParsers.parseHychan(linesDf(hychan))
       .select("element", "step_hours", "value").orderBy("element", "step_hours")
       .collect().map(_.toSeq).toSeq
     val hyFast = FloOutputParsers.parseHychanFile(spark, hy.getPath)
@@ -206,7 +205,7 @@ class FloOutputParsersSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(hyFast === hyWindow)
 
-    val tdWindow = FloOutputParsers.parseTimdep(FloOutputParsers.readLines(spark, td.getPath))
+    val tdWindow = FloOutputParsers.parseTimdep(linesDf(timdep))
       .select("element", "step_hours", "value").orderBy("step_hours", "element")
       .collect().map(_.toSeq).toSeq
     val tdFast = FloOutputParsers.parseTimdepFile(spark, td.getPath)
@@ -219,7 +218,7 @@ class FloOutputParsersSpec extends SparkSpec {
     val dir = Files.createTempDirectory("hychan").toFile
     val f = new java.io.File(dir, "HYCHAN.OUT")
     Files.writeString(f.toPath, hychan)
-    val out = FloOutputParsers.parseHychan(FloOutputParsers.readLines(spark, f.getPath))
+    val out = FloOutputParsers.parseHychanFile(spark, dir.getPath)
       .orderBy("element", "step_hours")
       .collect().map(r => (r.getString(1), r.getDouble(2)))
     assert(out === Array(("250", 0.25), ("250", 0.50), ("369", 0.25), ("369", 0.50)))
@@ -251,13 +250,12 @@ class FloOutputParsersSpec extends SparkSpec {
       val viaPath = series(file.getPath)
       assert(rows(viaPath).nonEmpty && rows(viaUri) === rows(viaPath))
     }
-    // a directory is not one file: it keeps the window path
+    // a directory takes the same parse: it plans no Window either
     assert(windows(ExtractPipeline.floodPlainSeries(spark, dir.toURI.toString, base,
-      plains)).nonEmpty)
+      plains)).isEmpty)
   }
-  // ---- parse contracts of the single-file extraction path. Each holds for
-  // the carry parse with and without a station set, and for the window
-  // path, which a directory takes.
+  // ---- parse contracts of the extraction path. Each holds for one file
+  // with and without a station set, and for a directory.
 
   private val plainMap = Seq(("101", "a", "FLOOD_PLAIN"), ("102", "b", "FLOOD_PLAIN"))
     .toDF("cell_no", "label", "kind")
@@ -410,5 +408,90 @@ class FloOutputParsersSpec extends SparkSpec {
     val hy = FloOutputParsers.parseHychanFile(spark, hyFile).collect()
       .map(r => (r.getString(1), r.getDouble(2), r.getDouble(3))).toSeq.sorted
     assert(hy === expectedHy)
+  }
+
+  // ---- one parse, however the lines arrive. Every data row and time line
+  // below is led or ended by a tab, VT, FF or CR, which Python's split()
+  // (the reference's tokenizer) treats as a separator, and a null frame
+  // line reads as a blank one. Each file opens with a row before its first
+  // marker: it belongs to no block, never to the previous file's last one.
+  private val controlTimdep = Seq(
+    Seq("    201   1   2   3   4   9.5",
+      "\t0.50\t",
+      "\t101\t1.0\t2.0\t3.0\t4.0\t21.50",
+      "\u000B102 1.0 2.0 3.0 4.0 22.75\u000B",
+      null,
+      "\f1.00\f",
+      "\r103 1 2 3 4 5.5\r",
+      "104 1 2 3 4 6.5\t"),
+    Seq("\t105 1 2 3 4 7.5",
+      "\r1.50\r",
+      "\f105 1 2 3 4 8.5\f",
+      "\u000B2.00",
+      "106 1 2 3 4 9.25\u000B"))
+
+  private val controlHychan = Seq(
+    Seq("\t0.50\t9.99",
+      "     CHANNEL HYDROGRAPH FOR ELEMENT NO:\t\t250\t",
+      "\t1.00\t12.25\t0.1",
+      "\u000B2.00 12.50\u000B",
+      null,
+      "\f3.00 12.75\f",
+      "\r4.00 13.00\r"),
+    Seq("\f5.00 14.00",
+      "     CHANNEL HYDROGRAPH FOR ELEMENT NO:    369\r",
+      "\t6.00\t14.25\t",
+      "7.00\u000B14.50\f"))
+
+  test("one parse: a file, a directory, a glob and an ordered frame give the same rows") {
+    // a frame whose files all share one partition
+    val onePartition = spark.newSession()
+    onePartition.conf.set("spark.sql.shuffle.partitions", "1")
+    def rows(df: DataFrame) = df.select("element", "step_hours", "value").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq.sorted
+    def ways(files: Seq[Seq[String]], parsePath: String => DataFrame,
+        parseFrame: DataFrame => DataFrame) = {
+      val dir = Files.createTempDirectory("oneparse").toFile
+      val paths = files.zipWithIndex.map { case (lines, i) =>
+        val f = new java.io.File(dir, s"report_$i.OUT")
+        Files.writeString(f.toPath, lines.map(l => if (l == null) "" else l).mkString("\n"))
+        f.getPath
+      }
+      def frame(s: org.apache.spark.sql.SparkSession) = s.createDataFrame(
+        for ((lines, i) <- files.zipWithIndex; (l, n) <- lines.zipWithIndex)
+          yield (s"report_$i", n.toLong, l)).toDF("file", "line_no", "line")
+      Seq("file" -> paths.flatMap(p => rows(parsePath(p))).sorted,
+        "directory" -> rows(parsePath(dir.getPath)),
+        "glob" -> rows(parsePath(dir.getPath + "/*.OUT")),
+        "frame" -> rows(parseFrame(frame(spark))),
+        "one-partition frame" -> rows(parseFrame(frame(onePartition))))
+    }
+    val timdepRows = Seq(("101", 0.5, 21.5), ("102", 0.5, 22.75), ("103", 1.0, 5.5),
+      ("104", 1.0, 6.5), ("105", 1.5, 8.5), ("106", 2.0, 9.25))
+    val timdep = ways(controlTimdep, FloOutputParsers.parseTimdepFile(spark, _),
+      FloOutputParsers.parseTimdep(_))
+    val hychanRows = Seq(("250", 1.0, 12.25), ("250", 2.0, 12.5), ("250", 3.0, 12.75),
+      ("250", 4.0, 13.0), ("369", 6.0, 14.25), ("369", 7.0, 14.5))
+    val hychan = ways(controlHychan, FloOutputParsers.parseHychanFile(spark, _),
+      FloOutputParsers.parseHychan(_))
+    val wrong = timdep.filter(_._2 != timdepRows).map("TIMDEP " + _) ++
+      hychan.filter(_._2 != hychanRows).map("HYCHAN " + _)
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("a directory of N files parses in at least N tasks, each file its own blocks") {
+    val dir = Files.createTempDirectory("nfiles").toFile
+    val n = 6
+    (0 until n).foreach { i =>
+      Files.writeString(new java.io.File(dir, s"TIMDEP_$i.OUT").toPath,
+        s"    9   1   2   3   4   0.5\n   $i.00\n    ${100 + i}   1   2   3   4   $i.5\n")
+    }
+    val (rows, work) = graft.obs.SparkWork.measure(spark)(
+      FloOutputParsers.parseTimdepFile(spark, dir.getPath).collect()
+        .map(r => (r.getString(1), r.getDouble(2), r.getDouble(3))).toSeq.sorted)
+    assert(rows === (0 until n).map(i => ((100 + i).toString, i.toDouble, i + 0.5)))
+    // pass 1 is the first job: one task per split, at least one per file
+    val pass1 = work.stages.minBy(_.stageId)
+    assert(pass1.numTasks >= n, work.report)
   }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Alone, SparkSpec}
 import graft.ops.TimeSeriesOps
 
 /** Scale posture of the native as-of operator (round-16 task): the
@@ -62,7 +62,7 @@ class AsOfJoinScaleSpec extends SparkSpec {
     assert(salted === plain, "salting must be result-invariant")
   }
 
-  test("10x fixture scale: native merge <= window form (strictly less movement)") {
+  test("10x fixture scale: native merge <= window form (strictly less movement)", Alone) {
     withTimingLock {
     val n = 400000L
     val trades = side(n, 16, 0.0, "v", 0)

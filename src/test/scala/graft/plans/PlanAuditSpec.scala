@@ -74,16 +74,21 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_s7_hychan windows partition by a key - no single-partition sort") {
-    val plan = executedPlan("q_s7_hychan")
-    // Window prints `Window [exprs], [partCols], [orderCols]` when
-    // partitioned (two `], [` separators) but `Window [exprs], [orderCols]`
-    // when global (one separator) - every window here must be partitioned
-    val windowLines = plan.split("\n").filter(_.contains("Window ["))
-    assert(windowLines.nonEmpty, "expected Window operators in the parser plan")
-    windowLines.foreach { l =>
-      assert("\\], \\[".r.findAllIn(l).length >= 2,
-        s"unpartitioned (single-partition) window in parser plan: ${l.trim.take(200)}")
-    }
+    assert(executedPlan("q_s7_hychan").nonEmpty)
+    // the frame parse of q_s7_hychan, q_s7_discharge and q_s8_timdep orders
+    // its lines with one exchange keyed by file, then sorts within it
+    import org.apache.spark.sql.functions.{col, lit}
+    val lines = spark.range(1000).select((col("id") % 3).cast("string").as("file"),
+      col("id").as("line_no"), lit("   1.0   2.0").as("line"))
+    val ordered = graft.extract.FloOutputParsers.byFile(lines)
+    ordered.collect()
+    val plan = org.apache.spark.sql.GraftBridge.finalPlanString(ordered)
+    val keyed = plan.linesIterator.filter(ExchangeLine.findFirstIn(_).nonEmpty).toSeq
+    assert(keyed.size == 1 && keyed.head.contains("hashpartitioning(file"),
+      "the frame parse must shuffle once, keyed by file:\n" + plan.take(1500))
+    assert(!plan.contains("SinglePartition") && !plan.contains("rangepartitioning"),
+      "the frame parse must not funnel into one partition or range-sample:\n" +
+        plan.take(1500))
   }
 
   test("q_deck_raincell computes seq arithmetically - no window at all") {

@@ -936,7 +936,7 @@ object Scale {
     // ---- CorpusPrep at 1 M docs, stage by stage with parquet hand-offs
     // (exact per-stage shuffle records; parquet I/O is not shuffle, so
     // their sum is the pipeline's shuffle floor), then composed as the CLI
-    // runs it, without and with --stage-cache. Every doc passes the gate,
+    // runs it, with its stage cuts. Every doc passes the gate,
     // redaction is a no-op, no pair verifies at 0.8 (sub/sup Jaccard is
     // 0.75), and containment drops exactly the planted prefixes.
     section("corpus_prep_e2e_1m") { c => import c._
@@ -1007,18 +1007,10 @@ object Scale {
       require(cw.shuffleWriteRecords < 2L * stageSum,
         s"composed run shuffled ${cw.shuffleWriteRecords} records vs stage sum $stageSum: " +
           "a stage re-executes its upstream per action")
-      // persisting the frame entering the multi-action containment stage
-      // must erase most of that re-execution
-      val (cached, kw) = composed("cli_cached", Map("stage-cache" -> "true"))
-      require(cached("docs_out") == survivors, s"cached run population drifted: $cached")
-      require(kw.shuffleWriteRecords < cw.shuffleWriteRecords,
-        s"--stage-cache must cut the composed shuffle: ${kw.shuffleWriteRecords} vs " +
-          s"${cw.shuffleWriteRecords}")
       Seq("docs" -> nDeep, "docs_out" -> stats("docs_out"), "chunks" -> stats("chunks")) ++
         stageRecords.map { case (s, r) => s"${s}_records" -> r } ++
         Seq("stage_sum_records" -> stageSum, "composed_records" -> cw.shuffleWriteRecords,
-          "composed_seconds" -> cw.seconds, "cached_records" -> kw.shuffleWriteRecords,
-          "cached_seconds" -> kw.seconds)
+          "composed_seconds" -> cw.seconds)
     },
 
     // ---- SftExport at 250 k conversations paired from the 1 M corpus. The

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -83,6 +83,22 @@ import graft.trainprep.TrainPrep
   * `runMain graft.cli.CorpusPrep --in <docs.parquet> --out <dir> [flags]`
   * writes `<out>/chunks` (doc→chunk assignments) and prints a one-line
   * JSON stats report.
+  *
+  * Stage cuts. The stages compose one lazy plan, and the multi-action
+  * stages read it many times: dedup's banding and closure, containment's
+  * shingle sets and pair joins, the pack's prefix scan. Left whole, every
+  * such read re-derives the gates, the rewrites and the keeper join-back
+  * (the pack's input plan held 168 scans of the corpus). So the frame is
+  * cut twice, each time only when that stage runs and the frame is more
+  * than the bare input scan: entering doc-level dedup, after every gate
+  * and rewrite, and entering containment dedup. A cut keeps the rows
+  * (`GraftBridge.keepRows`: memory, spilling to disk) and materializes
+  * them in one tracked action, which also completes the oversize audit
+  * when its node lies below the cut. The lineage stays, so a lost block
+  * is recomputed rather than failing the job. The first cut is released
+  * once the second holds its rows, so at most one corpus-sized frame is
+  * kept at a time; whatever is still kept when the run ends, or fails,
+  * is released then.
   */
 object CorpusPrep {
 
@@ -95,9 +111,43 @@ object CorpusPrep {
     * re-admitted afterwards; nesting-safe). A defensive fallback below
     * covers callers that race the conf from another thread. */
   def run(spark: SparkSession, args: Map[String, String]): Map[String, Long] =
-    Dedup.withReliableOversizeAudit(spark)(runInner(spark, args))
+    Dedup.withReliableOversizeAudit(spark) {
+      val kept = new Kept
+      try runInner(spark, args, kept) finally kept.releaseAll()
+    }
 
-  private def runInner(spark: SparkSession, args: Map[String, String]): Map[String, Long] = {
+  /** Every frame a run keeps: the persisted score, selection and
+    * contamination frames, and the current stage cut. */
+  private final class Kept {
+    private val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private var stageCut: Option[GraftBridge.KeptRows] = None
+
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist()
+      persisted += p
+      p
+    }
+
+    /** `df` cut at the named stage's boundary: its rows are computed now,
+      * once, and later stages read them. The previous cut is released
+      * after this one holds its rows. */
+    def cut(df: DataFrame, stage: String): DataFrame = {
+      val k = GraftBridge.keepRows(df, Some(s"corpus_prep $stage cut"))
+      stageCut.foreach(_.release())
+      stageCut = Some(k)
+      k.df
+    }
+
+    def releaseAll(): Unit = {
+      stageCut.foreach(_.release())
+      stageCut = None
+      persisted.foreach(_.unpersist())
+      persisted.clear()
+    }
+  }
+
+  private def runInner(spark: SparkSession, args: Map[String, String],
+      kept: Kept): Map[String, Long] = {
     val in = args("in")
     val out = args("out")
     val docs0 = spark.read.parquet(in)
@@ -166,12 +216,10 @@ object CorpusPrep {
     // actually measured as unlike the corpus; nothing vanishes silently.
     // Runs before sampling so the rate applies to the cleaned population.
     var nLmDropped = 0L
-    var lmScoreCache: Option[DataFrame] = None
     args.get("lm-percentile").foreach { p =>
       val pct = p.toDouble
       require(pct > 0.0 && pct < 1.0, s"--lm-percentile must be in (0,1), got $p")
-      val scored = TrainPrep.charTrigramNll(docs, idCol, textCol).persist()
-      lmScoreCache = Some(scored)
+      val scored = kept.persist(TrainPrep.charTrigramNll(docs, idCol, textCol))
       val thrRow = scored.agg(
         percentile_approx(col("avg_nll"), lit(pct), lit(10000))).head()
       if (!thrRow.isNullAt(0)) { // null = nothing scored (all-short corpus)
@@ -191,7 +239,6 @@ object CorpusPrep {
     // domain fit at the word level. Docs with < 2 tokens are unscored
     // and KEPT (same contract as the char-trigram stage).
     var nWordLmDropped = 0L
-    var wordLmCache: Option[DataFrame] = None
     args.get("word-lm-ref").foreach { refPath =>
       val pct = args.getOrElse("word-lm-percentile", "0.7").toDouble
       require(pct > 0.0 && pct < 1.0,
@@ -202,9 +249,8 @@ object CorpusPrep {
       val total = CliArgs.longOr0(uni.agg(sum(col("c"))).head(), 0)
       require(total > 0,
         s"--word-lm-ref corpus at $refPath has no tokens to train on")
-      val scored = graft.trainprep.NgramLm.stupidBackoffNll(
-        docs, idCol, textCol, uni, bi, total).persist()
-      wordLmCache = Some(scored)
+      val scored = kept.persist(graft.trainprep.NgramLm.stupidBackoffNll(
+        docs, idCol, textCol, uni, bi, total))
       val thrRow = scored.agg(
         percentile_approx(col("avg_nll"), lit(pct), lit(10000))).head()
       if (!thrRow.isNullAt(0)) {
@@ -219,7 +265,6 @@ object CorpusPrep {
     // target-vs-raw trigram importance ratio — domain selection BEFORE the
     // expensive dedup stages so they run on the docs that can survive.
     var nDsirDropped = 0L
-    var dsirCache: Option[DataFrame] = None
     args.get("dsir-target").foreach { tgtPath =>
       val k = args.getOrElse("dsir-keep", "100000").toInt
       val target = spark.read.parquet(tgtPath)
@@ -239,10 +284,9 @@ object CorpusPrep {
       // stages, the chunks write, the stats counts) re-evaluates the
       // semi-join's right side, and WITHOUT the cache each re-run would
       // repeat dsirSelect's two corpus-wide trigram aggregations — the
-      // same contract as lmScoreCache above
-      val selected = score(docs, target, idCol, textCol, k)
-        .select(col(idCol)).persist()
-      dsirCache = Some(selected)
+      // same contract as the LM score frame above
+      val selected = kept.persist(score(docs, target, idCol, textCol, k)
+        .select(col(idCol)))
       docs = docs.join(selected, Seq(idCol), "left_semi")
       nDsirDropped = before - docs.count()
     }
@@ -363,6 +407,7 @@ object CorpusPrep {
       if (maxBucket == Int.MaxValue) None
       else Some(org.apache.spark.sql.Observation("graft_oversize_audit"))
     var obsAttached = false
+    if (args.contains("dedup") && (docs ne docs0)) docs = kept.cut(docs, "dedup")
     val docsAtDedup = docs // pre-dedup population, for the pruned-audit fallback
     args.get("dedup").foreach {
       case "exact" =>
@@ -402,25 +447,10 @@ object CorpusPrep {
     // longer surviving doc (a quoted article, a template prefix) —
     // resemblance-Jaccard scores such pairs low. Drops the contained side;
     // near-equal twins keep the lower id. Prefix-filter join: candidates
-    // track true pairs, never corpus².
-    //
-    // `--stage-cache true`: persist the pipeline frame entering this
-    // stage. containmentDrop is internally multi-action (its verified-pair
-    // frame persists and is consumed by a second plan), so WITHOUT the
-    // cache everything upstream (gates, rewrites, near-dedup) re-executes
-    // once more — `corpus_prep_e2e_1m` ([[graft.Scale]]) measured the composed CLI at
-    // 1.6× the stage-sum shuffle records from exactly this. The cache
-    // trades executor storage (the corpus at this point, text included)
-    // for that repeat; at 100 TB that is the standard
-    // checkpoint-before-multi-action-stage call, deliberately opt-in.
-    var stageCacheRef: Option[DataFrame] = None
+    // track true pairs, never corpus². Its input is cut (see the object
+    // scaladoc): containmentDrop and the pack after it read it many times.
     args.get("containment-dedup").foreach { t =>
-      if (args.get("stage-cache").contains("true")) {
-        val cached = docs.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        stageCacheRef = Some(cached)
-        docs = cached
-      }
+      if (docs ne docs0) docs = kept.cut(docs, "containment")
       docs = Dedup.containmentDrop(docs, idCol, textCol, t.toDouble)
     }
 
@@ -429,16 +459,13 @@ object CorpusPrep {
     // frame is persisted before counting so the broadcast contamination
     // join over the (large) post-dedup corpus runs once — the count
     // materializes the cache and the left_anti join reads it back.
-    var contaminatedCache: Option[DataFrame] = None
     val nContaminated: Long = args.get("decontaminate") match {
       case Some(benchPath) =>
         val n = args.getOrElse("ngram", "13").toInt
         val bench = spark.read.parquet(benchPath)
-        val contaminated = TrainPrep.contaminationPairs(
+        val contaminated = kept.persist(TrainPrep.contaminationPairs(
             docs, idCol, textCol, bench, idCol, textCol, n)
-          .select(col("train_id").as(idCol)).distinct()
-          .persist()
-        contaminatedCache = Some(contaminated)
+          .select(col("train_id").as(idCol)).distinct())
         val c = contaminated.count()
         docs = docs.join(contaminated, Seq(idCol), "left_anti")
         c
@@ -560,11 +587,6 @@ object CorpusPrep {
         sys.error(s"--chunk-mode must be 'pack', 'sliding' or 'sentence', got '$other'")
     }
     chunked.write.mode("overwrite").parquet(s"$out/chunks")
-    stageCacheRef.foreach(_.unpersist())
-    contaminatedCache.foreach(_.unpersist())
-    lmScoreCache.foreach(_.unpersist())
-    wordLmCache.foreach(_.unpersist())
-    dsirCache.foreach(_.unpersist())
 
     // The observation fired during the pipeline's own actions (CC rounds /
     // the chunks write just above), so `get` returns immediately; it is

@@ -244,21 +244,12 @@ object Layout {
     acc
   }
 
-  /** Range-partition and sort a frame by its Z-order key: each output
-    * partition (→ file) covers one contiguous Z-range, i.e. a small square
-    * in (a, b) space — tight min-max on both columns. `nFiles` bounds the
-    * file count; at 100 TB pick it from target file size (~1 GB). */
-  def writeZOrdered(df: DataFrame, a: Column, b: Column, bits: Int,
-      nFiles: Int): DataFrame = writeClustered(df, a, b, bits, nFiles)
-
-  /** [[writeZOrdered]] generalized over the space-filling curve. */
-  def writeClustered(df: DataFrame, a: Column, b: Column, bits: Int,
-      nFiles: Int, curve: String = "zorder"): DataFrame =
-    writeClusteredN(df, Seq(a, b), bits, nFiles, curve)
-
-  /** [[writeClustered]] generalized to d ∈ [2, 4] dimensions (round 17):
-    * each output file covers one contiguous curve range — a small BOX in
-    * d-space, so min-max skipping prunes every clustered access path. */
+  /** Range-partition and sort a frame by its space-filling-curve key
+    * (Z-order by default) over d ∈ [2, 4] columns: each output partition
+    * (→ file) covers one contiguous curve range — a small BOX in d-space,
+    * so min-max skipping prunes every clustered access path. `nFiles`
+    * bounds the file count; at 100 TB pick it from target file size
+    * (~1 GB). */
   def writeClusteredN(df: DataFrame, cols: Seq[Column], bits: Int,
       nFiles: Int, curve: String = "zorder"): DataFrame = {
     val keyed = df.withColumn("__z", curveKeyN(curve, cols, bits))

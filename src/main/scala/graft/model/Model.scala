@@ -8,17 +8,8 @@ import java.sql.Timestamp
 // time-series: ordered `(time, value)` rows identified by a 64-hex sha256
 // hash id of the series metadata (reference:
 // input/inflow/gen_150_inflow.py:97-110, input/inflow/config_150.json:2).
-// The engine carries them as DataFrames; this file holds the station
-// dimension, the sentinels and the time helpers.
-
-/** Station dimension (reference: init/init.py:88-100). */
-final case class Station(
-    id: Int,
-    name: String,
-    latitude: Double,
-    longitude: Double,
-    stationType: String,
-    description: String)
+// The engine carries them as DataFrames; this file holds the sentinels
+// and the time helpers.
 
 object Sentinels {
   /** Invalid tide point, skipped (reference: input/outflow/gen_outflow.py:109). */

@@ -550,9 +550,10 @@ object TrainPrep {
     * keeps a doc's trigrams in one partition, so it is exactly one row per
     * doc. Trigram arrays come from the one-pass codegen'd
     * [[graft.expressions.CharNgrams]] expression. The count-frame cache is
-    * charset³-bounded and lingers until the session drops it
-    * (`spark.catalog.clearCache()` in long-lived sessions) — same
-    * documented contract as [[tfIdf]]'s persisted intermediate. */
+    * charset³-bounded and released after the caller's first completed
+    * action; a caller that reads the result twice persists it (as
+    * [[perplexityBuckets]] and `CorpusPrep` do) or pays the count pass
+    * again. */
   def charTrigramNll(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // one-pass codegen'd trigram array — the relational
     // `transform(sequence(...), i -> substr(text, i, 3))` re-scans the
@@ -566,6 +567,7 @@ object TrainPrep {
           org.apache.spark.sql.GraftBridge.expression(col(textCol)), 3))).as("tri"))
     val cnt = tri.groupBy("tri").agg(count(lit(1)).as("c3"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.multimodal.Multimodal.unpersistAfterFirstUse(cnt)
     val pre = cnt.groupBy(substring(col("tri"), 1, 2).as("big")).agg(sum("c3").as("c2"))
     val v = cnt.agg(count(lit(1)).as("__vsz"))
     val logProb = cnt.join(pre, substring(cnt("tri"), 1, 2) === pre("big"))

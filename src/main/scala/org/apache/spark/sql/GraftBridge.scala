@@ -31,22 +31,52 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Run `body` over `df` with its rows kept (memory, spilling to disk)
-    * as the first action computes them, and free them when `body`
-    * returns: one evaluation of `df`'s lineage for every reader in
-    * `body`. The rows ride the plan as an RDD scan carrying `df`'s
-    * statistics, as a checkpoint's do, so adaptive execution runs no
-    * separate job to fill them (it does for a `Dataset.persist` cache).
-    * Unlike `localCheckpoint` the lineage stays: a lost block is
-    * recomputed instead of failing the job, and the release frees the
-    * blocks at once rather than at the next GC. */
-  def withKeptRows[T](df: DataFrame)(body: DataFrame => T): T = {
+  /** `df`'s rows kept (memory, spilling to disk) under a plan that reads
+    * them: one evaluation of `df`'s lineage for every later reader. The
+    * rows ride the plan as an RDD scan carrying `df`'s statistics, as a
+    * checkpoint's do, so adaptive execution runs no separate job to fill
+    * them (it does for a `Dataset.persist` cache). Unlike
+    * `localCheckpoint` the lineage stays: a lost block is recomputed
+    * instead of failing the job, and [[KeptRows.release]] frees the
+    * blocks at once rather than at the next GC. The trade is storage:
+    * `df`'s rows occupy executor memory or disk until released.
+    *
+    * With `materializeAs` the rows are computed here, by one eager count
+    * run as a tracked SQL action of that name; without it the first
+    * action that reads them fills them. Only a tracked action completes
+    * an `Observation` whose node sits in `df`'s plan: the readers' plans
+    * no longer hold that node, and a raw RDD job posts no query-execution
+    * event, so an `Observation.get` over a lazily kept plan would wait
+    * forever. */
+  def keepRows(df: DataFrame, materializeAs: Option[String] = None): KeptRows = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val rows = ds.queryExecution.toRdd.map(_.copy())
+    val qe = ds.queryExecution
+    def keep() = qe.toRdd.map(_.copy())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try body(classic.Dataset.ofRows(ds.sparkSession,
-      execution.LogicalRDD.fromDataset(rows, ds, isStreaming = false)))
-    finally rows.unpersist()
+    val rows = materializeAs match {
+      case None => keep()
+      case Some(name) => execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
+        val r = keep()
+        try { r.count(); r } catch { case e: Throwable => r.unpersist(); throw e }
+      }
+    }
+    new KeptRows(classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rows, ds, isStreaming = false)), rows)
+  }
+
+  /** Rows kept by [[keepRows]], read through `df` until released. */
+  final class KeptRows private[GraftBridge] (val df: DataFrame,
+      rows: org.apache.spark.rdd.RDD[_]) {
+    /** Frees the kept blocks now; a read after this recomputes them from
+      * the lineage. */
+    def release(): Unit = rows.unpersist()
+  }
+
+  /** Run `body` over `df`'s [[keepRows kept rows]], filled by the first
+    * action in `body`, and free them when `body` returns. */
+  def withKeptRows[T](df: DataFrame)(body: DataFrame => T): T = {
+    val kept = keepRows(df)
+    try body(kept.df) finally kept.release()
   }
 
   /** A private session sharing the SparkContext, catalog and extensions

@@ -2,7 +2,7 @@ package graft.cli
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{Alone, SparkSpec}
 
 /** End-to-end corpus-prep CLI over the driver's real documents table:
   * filter → sample → redact → near-dedup → pack, then the stats contract. */
@@ -644,5 +644,121 @@ class CorpusPrepSpec extends SparkSpec {
         "out" -> Files.createTempDirectory("corpus_export2").toString,
         "export-jsonl" -> "zip"))
     }
+  }
+
+  // the capped spam corpus of the in-pass audit test above: 30 distinct
+  // texts over one token set, one oversize bucket per band at cap 10
+  private def spamCorpus(): String = {
+    import spark.implicits._
+    val toks = (0 until 8).map(j => s"spamtok$j")
+    val spam = (0 until 30).map { i =>
+      (5000L + i, toks.zipWithIndex
+        .flatMap { case (t, j) => Seq.fill(((i >> j) & 1) + 1)(t) }
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+    val in = Files.createTempDirectory("corpus_spam").toString + "/docs.parquet"
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text").unionByName(spam).write.parquet(in)
+    in
+  }
+
+  test("capped near dedup before containment completes its audit at the stage cut") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // the audit node lies below the containment cut; a cut that is not a
+    // tracked SQL action never completes the observation, and the stats
+    // would wait on it forever
+    val in = spamCorpus()
+    val out = Files.createTempDirectory("corpus_spam_cut").toString
+    val stats = Await.result(Future(CorpusPrep.run(spark, Map(
+      "in" -> in, "out" -> out, "dedup" -> "near", "max-bucket" -> "10",
+      "containment-dedup" -> "0.9"))), 5.minutes)
+    assert(stats("oversize_buckets_dropped") >= 4L, s"$stats")
+    assert(stats("docs_out") > 0L && stats("docs_out") < stats("docs_in"), s"$stats")
+  }
+
+  test("the composed run shuffles within 1.1x of its stages run one by one") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.dedup.Dedup
+    import graft.functions.TextFunctions
+    import graft.obs.SparkWork
+    import graft.trainprep.TrainPrep
+    // 120 docs of 40 random tokens, a 30-token prefix of every fourth
+    // (dropped by containment), and 3 clusters of 20 one-token variants
+    // (each closes to one keeper under transitive dedup)
+    val rnd = new scala.util.Random(13)
+    def doc() = Seq.fill(40)(s"w${rnd.nextInt(5000)}")
+    val sups = Seq.fill(120)(doc())
+    val bases = Seq.fill(3)(doc())
+    val texts = sups.map(_.mkString(" ")) ++
+      sups.indices.filter(_ % 4 == 0).map(i => sups(i).take(30).mkString(" ")) ++
+      bases.zipWithIndex.flatMap { case (b, c) =>
+        (0 until 20).map(v => b.updated(v % 40, s"v${c}_$v").mkString(" ")) }
+    val dir = Files.createTempDirectory("corpus_composed").toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .repartition(4).write.parquet(s"$dir/s0")
+
+    // stage by stage with parquet hand-offs, as `corpus_prep_e2e_1m` does:
+    // the sum is the pipeline's shuffle floor
+    def stage(n: Int)(f: DataFrame => DataFrame): Long =
+      SparkWork.measure(spark) {
+        f(spark.read.parquet(s"$dir/s${n - 1}")).write.parquet(s"$dir/s$n")
+        spark.read.parquet(s"$dir/s$n").count()
+      }._2.shuffleWriteRecords
+    val stageSum = Seq(
+      stage(1)(d => d.join(TextFunctions.repetitionGate(d, "doc_id", "text")
+        .filter(col("pass")).select(col("doc_id")), Seq("doc_id"), "left_semi")),
+      stage(2)(_.withColumn("text", TrainPrep.redactPii(col("text")))),
+      stage(3)(d => d.join(Dedup.nearDupKeepersTransitiveRowwise(d, "doc_id", "text",
+          numHashes = 16, rowsPerBand = 4, threshold = 0.8,
+          maxBucketSize = Dedup.DefaultMaxBucketSize,
+          oversizeObs = Some(org.apache.spark.sql.Observation("stage_audit")))
+        .filter(col("doc_id") === col("keeper_id")).select(col("doc_id")), "doc_id")),
+      stage(4)(Dedup.containmentDrop(_, "doc_id", "text", 0.9)),
+      stage(5)(TrainPrep.packChunks(_, "doc_id", "text", 4096L))).sum
+    assert(spark.read.parquet(s"$dir/s5").count() == 123L)
+
+    val (stats, composed) = SparkWork.measure(spark)(CorpusPrep.run(spark, Map(
+      "in" -> s"$dir/s0", "out" -> s"$dir/cli",
+      "repetition-gate" -> "true", "redact" -> "true", "dedup" -> "transitive",
+      "dedup-hashes" -> "16", "dedup-rows-per-band" -> "4",
+      "containment-dedup" -> "0.9", "chunk-mode" -> "pack", "budget" -> "4096")))
+    assert(stats("docs_out") == 123L, s"$stats")
+    assert(composed.shuffleWriteRecords <= 1.1 * stageSum,
+      s"the composed run shuffled ${composed.shuffleWriteRecords} records against " +
+        s"a stage sum of $stageSum: a stage re-derives its upstream per read")
+  }
+
+  test("a run that fails after dedup leaves no kept frame behind", Alone) {
+    import org.apache.spark.sql.functions._
+    val docs = "/root/testdata/sf0.001/documents.parquet"
+    val dir = Files.createTempDirectory("corpus_fail").toString
+    val base = spark.read.parquet(docs)
+    base.filter(col("doc_id") < 5).write.parquet(s"$dir/bench")
+    base.filter(col("doc_id") < 40).write.parquet(s"$dir/target")
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val cachedBefore = org.apache.spark.sql.CacheProbe.entries(spark)
+    // every kept frame is live when the chunking fails: the LM, word-LM,
+    // DSIR and contamination frames and the containment cut
+    val e = intercept[RuntimeException](CorpusPrep.run(spark, Map(
+      "in" -> docs, "out" -> s"$dir/out", "redact" -> "true",
+      "lm-percentile" -> "0.9", "word-lm-ref" -> docs,
+      "dsir-target" -> s"$dir/target", "dsir-keep" -> "200",
+      "dedup" -> "near", "containment-dedup" -> "0.9",
+      "decontaminate" -> s"$dir/bench", "ngram" -> "8",
+      "chunk-mode" -> "bogus")))
+    assert(e.getMessage.contains("--chunk-mode"), e.getMessage)
+    // frames released after their first use go on the listener bus
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    val leaked = sc.getPersistentRDDs.keySet -- rddsBefore
+    assertIsolated(leaked.isEmpty,
+      s"persisted RDDs left behind: ${leaked.map(id => sc.getPersistentRDDs(id))}")
+    val cachedAfter = org.apache.spark.sql.CacheProbe.entries(spark)
+    assertIsolated(cachedAfter == cachedBefore,
+      s"the session cache went from $cachedBefore to $cachedAfter entries")
   }
 }
